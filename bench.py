@@ -524,15 +524,15 @@ def main() -> None:
         calibrations.append(_calibrate(spark))
 
     # Exact vs t-digest order statistics, measured (not asserted): the
-    # same per-returnflag median through the range-shuffle exact path
-    # and through the one-scan mergeable sketch, plus the sketch's
-    # observed relative error. At 100 TB the exact path's extra range
-    # shuffle is the cost of oracle-exactness; this row quantifies the
-    # trade on this machine at this SF. Goes into BENCH_SWEEP.json.
+    # same per-returnflag median through the histogram-refinement exact
+    # path and through the one-scan mergeable sketch, plus the sketch's
+    # observed relative error. The exact path's extra passes are the
+    # cost of oracle-exactness; this row quantifies the trade on this
+    # machine at this SF. Goes into BENCH_SWEEP.json.
     tdigest_vs_exact = None
     if "--headline-only" not in sys.argv:
         from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-            exact_group_percentiles,
+            hist_group_percentiles,
         )
         from etl_pipeline_project_auraverse_spark.operators.tdigest import (
             tdigest_quantiles,
@@ -543,9 +543,9 @@ def main() -> None:
         def _exact():
             return {
                 r["l_returnflag"]: r["p50"]
-                for r in exact_group_percentiles(
+                for r in hist_group_percentiles(
                     li, "l_returnflag", "l_extendedprice", [0.5],
-                    names=["p50"], n_groups_hint=3,
+                    names=["p50"],
                 ).collect()
             }
 
@@ -579,27 +579,6 @@ def main() -> None:
             "tdigest_sec": sketch_sec,
             "tdigest_max_rel_err": round(rel_err, 6),
         }
-
-        # Same medians through the shuffle-free histogram-refinement
-        # operator (r9): exact values with NO data shuffle — must be
-        # bit-identical to the range-shuffle path and is the third
-        # point of the exactness/plan-shape trade this block measures.
-        from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-            hist_group_percentiles,
-        )
-
-        def _hist():
-            return {
-                r["l_returnflag"]: r["p50"]
-                for r in hist_group_percentiles(
-                    li, "l_returnflag", "l_extendedprice", [0.5],
-                    names=["p50"],
-                ).collect()
-            }
-
-        hist_meds, hist_sec = _min3(_hist)
-        tdigest_vs_exact["hist_refine_sec"] = hist_sec
-        tdigest_vs_exact["hist_matches_exact"] = hist_meds == exact_meds
 
     # Cold-vs-warm index visibility (r14 verdict ask #7): within one
     # bench process the memo_table system re-reads its parquet snapshot

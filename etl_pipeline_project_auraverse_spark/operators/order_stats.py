@@ -1,618 +1,63 @@
-"""Distributed exact order statistics (interpolated percentiles).
+"""Exact order statistics per group by iterative histogram refinement.
 
-``F.percentile`` is exact but buffers EVERY value of a group inside one
-ObjectHashAggregate buffer — with few groups (e.g. 3 return flags) the
-final merge task holds the whole column in memory, which cannot survive
-a 100 TB scan. This module computes the same interpolated percentiles
-(Spark ``percentile`` == DuckDB ``quantile_cont`` semantics) with the
-classic distributed order-statistics plan:
+``F.percentile`` is exact but buffers every value of a group in one
+aggregation buffer: with few groups (e.g. 3 return flags) one task
+holds the whole column. This module selects the same values with
+bounded per-task state and no shuffle of the row stream. Every entry
+point runs one private core, :func:`_select`, which returns per group,
+for each target rank, the smallest value whose cumulative weight
+reaches that rank (weight 1 for percentiles):
 
-1. ``repartitionByRange(group, value)`` — a TeraSort-style range
-   shuffle; every partition is a bounded slice, no group ever
-   concentrates on one task.
-2. Per ``(partition, group)`` cell counts (tiny: partitions × groups
-   rows) → prefix-sum offsets per group.
-3. ``row_number`` windowed by ``(partition, group)`` + the cell offset
-   = each row's exact global rank within its group, computed with
-   bounded per-task state.
-4. The 2·|percentiles| target ranks per group are broadcast-joined and
-   interpolated: position = p·(n−1) (0-indexed), v = v_lo + frac·(v_hi
-   − v_lo) — bit-compatible with ``quantile_cont``.
+1. First pass: one ``groupBy(group)`` aggregate (rows, weight, min,
+   max). Given approximate global ``bounds`` it is instead one
+   ``groupBy(group, bucket)`` histogram, which also narrows every rank.
+2. Up to 8 refinement passes. Each broadcasts a probe table (one row
+   per open (group, interval)) and runs one map-side-combinable
+   ``groupBy(probe, bucket)`` aggregate over ``HIST_BUCKETS``
+   equal-width buckets; the driver walks the collected buckets and
+   keeps, per rank, the one bucket that crosses it. A single-valued
+   interval resolves at once, so ties cannot stall the loop.
+3. One filtered fetch of the remaining intervals (each at most
+   ``HIST_FETCH_CAP`` rows) and an exact walk on the driver. An
+   interval still holding more rows after the last pass raises
+   ``ValueError`` naming the group; it is never collected unbounded.
 
-Total cost: one range shuffle of (group, value) pairs + one hash
-shuffle of the same, plus negligible small-table work — each stage has
-bounded per-task memory at any scale.
+Exactness: the bucket index is monotone in the value, because the
+offset ``v - lo`` is taken in the value column's own type (integers
+widened to ``decimal(20,0)``) before it becomes a double. Bucket value
+ranges are therefore disjoint and ordered, and the next pass's
+predicate ``v BETWEEN bucket_min AND bucket_max`` selects exactly the
+rows counted in that bucket. Integers above 2^53 and decimals stay
+exact; for ``decimal(38, s)`` Spark takes the offset at scale s-1, so
+two values 10^-s apart share a bucket and only the fetch (or the raise)
+separates them.
+
+Precondition: LOW-CARDINALITY groups. The probe table is broadcast and
+the driver keeps per-group state, so thousands of groups are fine and
+millions are not.
+
+Null contract, shared by every entry point: rows whose value or weight
+is null are ignored; a null group key is a group of its own, as in
+``groupBy``; a group left with no rows produces no output row.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import math
+from collections.abc import Callable, Iterable, Sequence
+from decimal import localcontext
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    IntegralType,
+    LongType,
+    StructField,
+    StructType,
+)
 
-from etl_pipeline_project_auraverse_spark.cache import persist_tracked
-
-# above this many distinct groups the partitions×groups side tables stop
-# being "tiny" and broadcasting them risks driver OOM — shuffle-join instead
-_BROADCAST_GROUP_LIMIT = 100_000
-
-# below this many groups the cells table (partitions × groups rows) is
-# small enough to COLLECT, which lets the whole offsets/specs/interp
-# choreography run driver-side in two Spark jobs total (see
-# _fused_small_group_path) instead of ~6
-_DRIVER_FUSE_GROUP_LIMIT = 1_000
-
-
-def exact_group_percentiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    percentiles: Sequence[float],
-    names: Sequence[str] | None = None,
-    count_name: str = "n_rows",
-    n_groups_hint: int | None = None,
-) -> DataFrame:
-    """Exact interpolated percentiles per group, distribution-safe.
-
-    Returns one row per group: ``group_col``, ``count_name`` (non-null
-    value count), and one double column per requested percentile.
-    Matches ``F.percentile(value, p)`` / DuckDB ``quantile_cont`` bit
-    for bit on the same data (same rank arithmetic, same interpolation).
-    Null values are ignored, as both engines do.
-
-    ``count_name`` is the count of NON-NULL values (what the rank
-    arithmetic is defined over), not ``count(*)``; groups whose values
-    are all null produce no output row. On non-null columns this equals
-    ``count(*)``; callers needing ``count(*)`` parity on nullable input
-    should join counts back from a separate aggregate.
-
-    Assumes LOW-CARDINALITY groups: ``offsets``/``counts``/``specs``
-    are broadcast and sized O(partitions × groups), so a
-    high-cardinality ``group_col`` (millions of groups) would make the
-    broadcast itself the bottleneck. Above ``_BROADCAST_GROUP_LIMIT``
-    distinct groups the small sides fall back to shuffle joins.
-    """
-    if names is None:
-        names = [f"p{int(p * 100)}" for p in percentiles]
-    spark = df.sparkSession
-    g, v = group_col, value_col
-
-    rows = df.select(g, v).where(F.col(v).isNotNull())
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    # cached because spark_partition_id() must stay stable across the
-    # cell-count pass and the rank pass — recomputing the range shuffle
-    # could re-sample different bounds
-    ranged = persist_tracked(
-        rows.repartitionByRange(n_part, F.col(g), F.col(v)).withColumn(
-            "__pid", F.spark_partition_id()
-        )
-    )
-
-    # tiny: at most (partitions × groups) rows
-    cells = ranged.groupBy("__pid", g).agg(F.count("*").alias("__c"))
-
-    if n_groups_hint is not None and n_groups_hint <= _DRIVER_FUSE_GROUP_LIMIT:
-        return _fused_small_group_path(
-            df, ranged, cells, g, v, percentiles, names, count_name
-        )
-    # one cheap agg over the (about-to-be-)cached ranged table decides
-    # whether the side tables are broadcast-safe (see docstring);
-    # callers that KNOW their group cardinality (3 return flags, one
-    # global group) pass n_groups_hint and skip this extra job
-    n_groups = (
-        n_groups_hint
-        if n_groups_hint is not None
-        else cells.select(g).distinct().count()
-    )
-    bc = F.broadcast if n_groups <= _BROADCAST_GROUP_LIMIT else (lambda d: d)
-    w_off = (
-        Window.partitionBy(g)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = cells.select(
-        "__pid", g, F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off")
-    )
-    counts = cells.groupBy(g).agg(F.sum("__c").alias("__n"))
-
-    # target ranks (1-based) per group × percentile: pos = p·(n−1)
-    specs: DataFrame | None = None
-    for p, name in zip(percentiles, names):
-        pos: Column = F.lit(float(p)) * (F.col("__n") - 1).cast("double")
-        s = counts.select(
-            g,
-            F.lit(name).alias("__name"),
-            (F.floor(pos) + 1).cast("long").alias("__lo"),
-            (F.ceil(pos) + 1).cast("long").alias("__hi"),
-            (pos - F.floor(pos)).alias("__frac"),
-        )
-        specs = s if specs is None else specs.unionByName(s)
-    assert specs is not None, "percentiles must be non-empty"
-
-    fetch = (
-        specs.select(g, F.explode(F.array("__lo", "__hi")).alias("__rank"))
-        .distinct()
-    )
-
-    # global rank = per-cell row_number + cell offset; the window is
-    # keyed by (partition, group) so per-task state stays bounded
-    w_rn = Window.partitionBy("__pid", g).orderBy(v)
-    ranked = ranged.join(bc(offsets), ["__pid", g]).withColumn(
-        "__rank", F.row_number().over(w_rn) + F.col("__off")
-    )
-    # vals is tiny (≤ 2·|percentiles|·|groups| rows) but derives from the
-    # heavy range-shuffle + rank-window subtree; persist AND materialize it
-    # so the two broadcast exchanges below read the cache instead of each
-    # re-executing the window pass (they run as separate broadcast jobs,
-    # so lazy persist alone would not prevent a concurrent double compute)
-    vals = persist_tracked(
-        ranked.join(bc(fetch), [g, "__rank"]).select(
-            g, "__rank", F.col(v).alias("__v")
-        )
-    )
-    vals.count()
-
-    lo_vals = vals.select(g, F.col("__rank").alias("__lo"), F.col("__v").alias("__vlo"))
-    hi_vals = vals.select(g, F.col("__rank").alias("__hi"), F.col("__v").alias("__vhi"))
-    interp = (
-        specs.join(bc(lo_vals), [g, "__lo"])
-        .join(bc(hi_vals), [g, "__hi"])
-        .withColumn(
-            "__val",
-            F.col("__vlo") + F.col("__frac") * (F.col("__vhi") - F.col("__vlo")),
-        )
-    )
-    out = interp.groupBy(g).agg(
-        *[
-            F.max(F.when(F.col("__name") == name, F.col("__val"))).alias(name)
-            for name in names
-        ]
-    )
-    return out.join(bc(counts.withColumnRenamed("__n", count_name)), g).select(
-        g, count_name, *names
-    )
-
-
-def _fused_small_group_path(
-    df: DataFrame,
-    ranged: DataFrame,
-    cells: DataFrame,
-    g: str,
-    v: str,
-    percentiles: Sequence[float],
-    names: Sequence[str],
-    count_name: str,
-) -> DataFrame:
-    """Two-job plan for low-cardinality groups (the common case: 1–5
-    groups). The cells table is at most partitions × groups rows, so it
-    is COLLECTED; offsets, counts, and the per-group target ranks are
-    then plain Python, the two tiny join sides are built from local
-    data (no Spark job to compute a broadcast input), and the final
-    interpolation happens on the ≤ 2·|percentiles|·|groups| fetched
-    boundary values driver-side. Exactly the same rank arithmetic and
-    IEEE-double interpolation as the distributed path (pos = p·(n−1),
-    v = v_lo + frac·(v_hi − v_lo)), so results are bit-identical; only
-    the job choreography differs: one cells aggregate (which also
-    materializes the cached range shuffle) + one rank-filter pass.
-    """
-    import math
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    spark = df.sparkSession
-    cell_rows = cells.collect()  # job 1 — also materializes `ranged`
-
-    counts: dict = {}
-    for r in sorted(cell_rows, key=lambda r: r["__pid"]):
-        counts[r[g]] = counts.get(r[g], 0) + r["__c"]
-    offsets: list[tuple] = []
-    seen: dict = {}
-    for r in sorted(cell_rows, key=lambda r: r["__pid"]):
-        offsets.append((r["__pid"], r[g], seen.get(r[g], 0)))
-        seen[r[g]] = seen.get(r[g], 0) + r["__c"]
-
-    # target ranks per group: pos = p·(n−1), 0-indexed → 1-based lo/hi
-    specs: dict = {}  # gval -> list[(name, lo, hi, frac)]
-    fetch: set = set()  # (gval, rank)
-    for gval, n in counts.items():
-        for p, name in zip(percentiles, names):
-            pos = float(p) * float(n - 1)
-            lo, hi = int(math.floor(pos)) + 1, int(math.ceil(pos)) + 1
-            specs.setdefault(gval, []).append((name, lo, hi, pos - math.floor(pos)))
-            fetch.add((gval, lo))
-            fetch.add((gval, hi))
-
-    g_type = df.schema[g].dataType
-    out_schema = StructType(
-        [StructField(g, g_type), StructField(count_name, LongType(), False)]
-        + [StructField(name, DoubleType()) for name in names]
-    )
-    if not counts:
-        return spark.createDataFrame([], out_schema)
-
-    off_df = spark.createDataFrame(
-        offsets, StructType(
-            [StructField("__pid", LongType(), False), StructField(g, g_type),
-             StructField("__off", LongType(), False)]
-        )
-    )
-    fetch_df = spark.createDataFrame(
-        sorted(fetch), StructType(
-            [StructField(g, g_type), StructField("__rank", LongType(), False)]
-        )
-    )
-    w_rn = Window.partitionBy("__pid", g).orderBy(v)
-    vals = (  # job 2: the single heavy pass — rank + boundary fetch
-        ranged.join(F.broadcast(off_df), ["__pid", g])
-        .withColumn("__rank", F.row_number().over(w_rn) + F.col("__off"))
-        .join(F.broadcast(fetch_df), [g, "__rank"])
-        .select(g, "__rank", F.col(v).alias("__v"))
-        .collect()
-    )
-    vmap = {(r[g], r["__rank"]): float(r["__v"]) for r in vals}
-
-    out_rows = []
-    for gval, n in counts.items():
-        row: list = [gval, n]
-        for name, lo, hi, frac in specs[gval]:
-            vlo, vhi = vmap[(gval, lo)], vmap[(gval, hi)]
-            row.append(vlo + frac * (vhi - vlo))
-        out_rows.append(tuple(row))
-    return spark.createDataFrame(out_rows, out_schema)
-
-
-def value_counts_percentiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    percentiles: Sequence[float],
-    names: Sequence[str] | None = None,
-    count_name: str = "n_rows",
-) -> DataFrame:
-    """Exact interpolated percentiles for BOUNDED-DOMAIN values in ONE
-    map-side-combinable aggregate (guide §2.3 "aggregate before you
-    shuffle" taken to its limit: the shuffle carries |groups| ×
-    |distinct values| partial counts, never rows).
-
-    Use ONLY when the value domain is bounded by something other than
-    the data volume — day-granularity datediffs (domain = the calendar
-    span), small-integer codes, enum-like measures. The whole
-    ``groupBy(group, value).count()`` result is collected, so a domain
-    that grows with the corpus (prices, revenues, float measures)
-    belongs in :func:`exact_group_percentiles` /
-    :func:`hist_group_percentiles` instead.
-
-    Bit-identical to those operators (and to Spark ``percentile`` /
-    DuckDB ``quantile_cont``): same ``pos = p·(n−1)`` rank arithmetic,
-    same ``v_lo + frac·(v_hi − v_lo)`` IEEE interpolation on the
-    float()-converted rank-neighbor values, nulls ignored, all-null
-    groups omitted. Replaces the fused small-group plan's TWO jobs
-    (range-shuffle cell count + rank/fetch pass over the persisted
-    shuffle) with ONE unpersisted aggregate."""
-    import math
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    if names is None:
-        names = [f"p{int(p * 100)}" for p in percentiles]
-    spark = df.sparkSession
-    g, v = group_col, value_col
-
-    hist = (
-        df.select(g, v)
-        .where(F.col(v).isNotNull())
-        .groupBy(g, v)
-        .agg(F.count("*").alias("__c"))
-        .collect()
-    )
-    by_g: dict = {}
-    for r in hist:
-        by_g.setdefault(r[g], []).append((r[v], r["__c"]))
-
-    g_type = df.schema[g].dataType
-    out_schema = StructType(
-        [StructField(g, g_type), StructField(count_name, LongType(), False)]
-        + [StructField(name, DoubleType()) for name in names]
-    )
-    if not by_g:
-        return spark.createDataFrame([], out_schema)
-
-    out_rows = []
-    for gval in sorted(by_g, key=str):
-        vcs = sorted(by_g[gval])
-        n = sum(c for _, c in vcs)
-        # cumulative counts once; each rank resolves by bisect
-        cums = []
-        cum = 0
-        for _, c in vcs:
-            cum += c
-            cums.append(cum)
-
-        def val_at(rank: int) -> float:
-            from bisect import bisect_left
-
-            return float(vcs[bisect_left(cums, rank)][0])
-
-        row: list = [gval, n]
-        for p in percentiles:
-            pos = float(p) * float(n - 1)
-            lo, hi = int(math.floor(pos)) + 1, int(math.ceil(pos)) + 1
-            frac = pos - math.floor(pos)
-            vlo, vhi = val_at(lo), val_at(hi)
-            row.append(vlo + frac * (vhi - vlo))
-        out_rows.append(tuple(row))
-    return spark.createDataFrame(out_rows, out_schema)
-
-
-def weighted_median(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    weight_col: str,
-    count_name: str = "total_weight",
-    out_name: str = "weighted_median",
-) -> DataFrame:
-    """Exact lower weighted median per group: the smallest value v
-    whose cumulative integer weight (ordered by value) reaches half
-    the group's total — ``2*cum(v) >= total`` semantics, matching the
-    SQL twin ``MIN(v) WHERE 2*cum >= total``.
-
-    Same two-job driver-fused plan as the small-group percentile path:
-    a range shuffle on the value bounds every task to a contiguous
-    slice; per-(partition, group) weight cells are collected (bounded:
-    partitions x groups rows); the driver locates each group's
-    crossing partition; one filtered pass computes in-slice cumulative
-    weights and fetches the crossing value. Weights must be integral
-    (cast to BIGINT) so the crossing test is exact in both engines.
-
-    Weight contract: weights are assumed **strictly positive** after
-    the BIGINT cast. A group whose total weight is zero or negative
-    has no crossing partition and is omitted from the result (it has
-    no well-defined weighted median), matching the SQL twin where the
-    ``2*cum >= total`` filter never fires for such groups.
-    """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = df.sparkSession
-    g, v = group_col, value_col
-    ranged = persist_tracked(
-        df.select(g, v, F.col(weight_col).cast("long").alias("__w"))
-        .repartitionByRange(F.col(v))
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    cells = (
-        ranged.groupBy("__pid", g).agg(F.sum("__w").alias("__c")).collect()
-    )
-
-    totals: dict = {}
-    for r in cells:
-        totals[r[g]] = totals.get(r[g], 0) + r["__c"]
-    # crossing partition per group: first pid where cum weight >= T
-    target = {gv: (tot + 1) // 2 for gv, tot in totals.items()}
-    seen: dict = {}
-    crossing = []  # (pid, gval, offset_before_pid, T)
-    for r in sorted(cells, key=lambda r: r["__pid"]):
-        off = seen.get(r[g], 0)
-        t = target[r[g]]
-        if off < t <= off + r["__c"]:
-            crossing.append((r["__pid"], r[g], off, t))
-        seen[r[g]] = off + r["__c"]
-
-    g_type = df.schema[g].dataType
-    out_schema = StructType(
-        [
-            StructField(g, g_type),
-            StructField(count_name, LongType(), False),
-            StructField(out_name, df.schema[v].dataType),
-        ]
-    )
-    if not crossing:
-        return spark.createDataFrame([], out_schema)
-    cross_df = spark.createDataFrame(
-        crossing,
-        StructType(
-            [
-                StructField("__pid", LongType(), False),
-                StructField(g, g_type),
-                StructField("__off", LongType(), False),
-                StructField("__t", LongType(), False),
-            ]
-        ),
-    )
-    w_cum = (
-        Window.partitionBy("__pid", g)
-        .orderBy(v)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    hits = (  # the one heavy pass: only crossing (pid, group) slices survive
-        ranged.join(F.broadcast(cross_df), ["__pid", g])
-        .withColumn("__cum", F.sum("__w").over(w_cum) + F.col("__off"))
-        .filter(
-            (F.col("__cum") >= F.col("__t"))
-            & (F.col("__cum") - F.col("__w") < F.col("__t"))
-        )
-        .select(g, v)
-        .collect()
-    )
-    med = {r[g]: r[v] for r in hits}
-    # zero/negative-total groups never cross (see the weight contract
-    # in the docstring) — skip them rather than KeyError on med[gv]
-    return spark.createDataFrame(
-        [
-            (gv, totals[gv], med[gv])
-            for gv in sorted(totals, key=str)
-            if gv in med
-        ],
-        out_schema,
-    )
-
-
-def weighted_median_hist(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    weight_col: str,
-    count_name: str = "total_weight",
-    out_name: str = "weighted_median",
-) -> DataFrame:
-    """Exact lower weighted median per group WITHOUT any data shuffle —
-    :func:`weighted_median`'s crossing semantics (smallest value v with
-    ``2*cum(v) >= total`` over BIGINT-cast weights) through
-    :func:`hist_group_percentiles`'s iterative histogram refinement.
-
-    Each pass is one map-side-combinable ``groupBy(group, bucket)``
-    aggregate of (weight sum, row count, actual min/max value) over the
-    column-pruned scan; the driver narrows each group's crossing point
-    to one bucket per pass and a final filtered fetch resolves the
-    exact value from ≤ HIST_FETCH_CAP rows. The range shuffle of the
-    full (group, value, weight) stream — plus its sampling pass and
-    the persisted shuffle output — disappears (guide §2.4).
-
-    Same output shape and contract as :func:`weighted_median`: one row
-    per group with a positive total, ``out_name`` in the value column's
-    own dtype; zero/negative-total groups are omitted.
-    """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = df.sparkSession
-    g, v = group_col, value_col
-    rows = df.select(
-        g, v, F.col(weight_col).cast("long").alias("__w")
-    ).where(F.col(v).isNotNull())
-
-    stat_rows = rows.groupBy(g).agg(
-        F.sum("__w").alias("__tot"),
-        F.count("*").alias("__n"),
-        F.min(v).alias("__lo"),
-        F.max(v).alias("__hi"),
-    ).collect()
-    g_type = df.schema[g].dataType
-    out_schema = StructType(
-        [
-            StructField(g, g_type),
-            StructField(count_name, LongType(), False),
-            StructField(out_name, df.schema[v].dataType),
-        ]
-    )
-    totals = {r[g]: r["__tot"] for r in stat_rows if (r["__tot"] or 0) > 0}
-    if not totals:
-        return spark.createDataFrame([], out_schema)
-
-    # state per group: [lo_val, hi_val, weight_below_interval,
-    # rows_in_interval]; target = first cum weight >= (tot+1)//2
-    target = {gv: (tot + 1) // 2 for gv, tot in totals.items()}
-    state = {
-        r[g]: [r["__lo"], r["__hi"], 0, r["__n"]]
-        for r in stat_rows
-        if r[g] in totals
-    }
-    resolved: dict = {}
-
-    def _probe_df(pending: dict) -> DataFrame:
-        from pyspark.sql.types import DoubleType
-
-        rows_ = [
-            (
-                i,
-                gv,
-                float(st[0]),
-                float(st[1]),
-                (float(st[1]) - float(st[0])) / HIST_BUCKETS,
-            )
-            for i, (gv, st) in enumerate(pending.items())
-        ]
-        return spark.createDataFrame(
-            rows_,
-            StructType(
-                [
-                    StructField("__probe", LongType(), False),
-                    StructField(g, g_type),
-                    StructField("__plo", DoubleType(), False),
-                    StructField("__phi", DoubleType(), False),
-                    StructField("__bw", DoubleType(), False),
-                ]
-            ),
-        )
-
-    for _ in range(8):
-        pending: dict = {}
-        for gv, st in state.items():
-            if gv in resolved:
-                continue
-            if st[0] == st[1]:  # single-valued interval: done
-                resolved[gv] = st[0]
-                continue
-            if st[3] <= HIST_FETCH_CAP:
-                continue  # small enough for the exact fetch pass
-            pending[gv] = st
-        if not pending:
-            break
-        probes = _probe_df(pending)
-        bucket = F.least(
-            F.floor((F.col(v) - F.col("__plo")) / F.col("__bw")),
-            F.lit(HIST_BUCKETS - 1),
-        ).cast("long")
-        hist = (
-            rows.join(F.broadcast(probes), g)
-            .filter(F.col(v).between(F.col("__plo"), F.col("__phi")))
-            .groupBy("__probe", bucket.alias("__b"))
-            .agg(
-                F.sum("__w").alias("__wc"),
-                F.count("*").alias("__c"),
-                F.min(v).alias("__bmin"),
-                F.max(v).alias("__bmax"),
-            )
-            .collect()
-        )
-        by_probe: dict = {}
-        for r in hist:
-            by_probe.setdefault(r["__probe"], []).append(r)
-        for i, gv in enumerate(pending):
-            st = state[gv]
-            cum = st[2]
-            for b in sorted(by_probe.get(i, []), key=lambda r: r["__b"]):
-                if cum + b["__wc"] >= target[gv]:
-                    state[gv] = [b["__bmin"], b["__bmax"], cum, b["__c"]]
-                    break
-                cum += b["__wc"]
-
-    fetch_pending = {
-        gv: st for gv, st in state.items() if gv not in resolved
-    }
-    if fetch_pending:
-        probes = _probe_df(fetch_pending)
-        got = (
-            rows.join(F.broadcast(probes), g)
-            .filter(F.col(v).between(F.col("__plo"), F.col("__phi")))
-            .select("__probe", v, "__w")
-            .collect()
-        )
-        vals_by_probe: dict = {}
-        for r in got:
-            vals_by_probe.setdefault(r["__probe"], []).append((r[v], r["__w"]))
-        for i, gv in enumerate(fetch_pending):
-            cum = state[gv][2]
-            for val, w in sorted(vals_by_probe.get(i, [])):
-                cum += w
-                if cum >= target[gv]:
-                    resolved[gv] = val
-                    break
-
-    return spark.createDataFrame(
-        [
-            (gv, totals[gv], resolved[gv])
-            for gv in sorted(totals, key=str)
-            if gv in resolved
-        ],
-        out_schema,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Shuffle-free exact percentiles: iterative histogram refinement.
-# ---------------------------------------------------------------------------
 HIST_BUCKETS = 8192  # histogram resolution per refinement pass
 HIST_FETCH_CAP = 65_536  # interval size below which rows are fetched exactly
 
@@ -624,261 +69,351 @@ def hist_group_percentiles(
     percentiles: Sequence[float],
     names: Sequence[str] | None = None,
     count_name: str = "n_rows",
-    stats: dict | None = None,
-    persist: bool = True,
     bounds: tuple[float, float] | None = None,
 ) -> DataFrame:
-    """Exact interpolated percentiles per group WITHOUT any data
-    shuffle: the distributed-selection classic. Each pass is one
-    map-side-combinable aggregate — ``groupBy(probe, bucket)`` over a
-    fixed per-probe bucketing — whose result (≤ probes × HIST_BUCKETS
-    tiny rows) is collected; the driver narrows each target rank to
-    one bucket and repeats until the candidate interval holds ≤
-    HIST_FETCH_CAP rows, then one filtered pass fetches those rows for
-    an exact driver-side pick. Convergence is a factor of
-    HIST_BUCKETS per pass (a 10^12-row group resolves in 2 passes
-    with the default cap), and a single-valued bucket resolves
-    immediately, so value skew cannot stall it.
+    """Exact interpolated percentiles per group.
 
-    Boundary exactness: each pass records the actual MIN and MAX value
-    inside every bucket. Bucket index is monotone in the value, so
-    bucket value-ranges are disjoint and ordered, which makes the next
-    pass's membership predicate (``v BETWEEN bucket_min AND
-    bucket_max``) EXACTLY the set of rows counted in that bucket — no
-    float-edge ambiguity ever affects a rank offset.
+    Returns one driver-assembled row per group: ``group_col``,
+    ``count_name`` (the non-null value count) and one double column per
+    percentile. Same values as Spark ``percentile`` / DuckDB
+    ``quantile_cont``: the value is cast to double, ``pos = p·(n−1)``
+    and ``v_lo + frac·(v_hi − v_lo)``. Null values are ignored (the
+    module's null contract).
 
-    Returns the same shape and bit-identical values as
-    :func:`exact_group_percentiles` (same ``pos = p·(n−1)`` rank
-    arithmetic and IEEE interpolation; matches DuckDB
-    ``quantile_cont``): one driver-assembled row per group with a
-    non-null value count and one double column per percentile.
-    Designed for low-cardinality groups (the probe table is
-    broadcast); prefer the range-shuffle operator above when groups
-    number in the thousands.
-
-    ``stats`` lets a caller who already knows each group's non-null
-    count and VALID (possibly loose) value bounds skip the initial
-    stats job: ``{gval: (n, lo_bound, hi_bound)}``. Bounds only need
-    to CONTAIN the data (the first histogram narrows to actual bucket
-    min/max anyway); the count must be exact. ``persist=False`` skips
-    the internal cache when the caller passes an already-persisted
-    projection.
-
-    ``bounds=(lo, hi)`` — APPROXIMATE global value bounds (e.g. from a
-    parquet footer; out-of-range values clamp into the edge buckets,
-    so bad bounds cost balance, not correctness) — removes the stats
-    job entirely:
-    pass 1 becomes a probe-free ``groupBy(group, bucket)`` histogram
-    over the shared bucketing, and the group list, exact counts, AND
-    each rank's first narrowing all fall out of that one collect.
+    ``bounds=(lo, hi)`` are approximate global value bounds (e.g. from a
+    parquet footer). They replace the first aggregate with a histogram
+    that also narrows every rank. Values outside them clamp into the
+    edge buckets, so wrong bounds cost balance, not correctness.
     """
-    import math
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    if names is None:
-        names = [f"p{int(p * 100)}" for p in percentiles]
-    spark = df.sparkSession
     g, v = group_col, value_col
-
-    rows = df.select(g, F.col(v).cast("double").alias(v)).where(
-        F.col(v).isNotNull()
+    counts, picked = _select(
+        df.select(g, F.col(v).cast("double").alias(v)),
+        g,
+        v,
+        None,
+        lambda n: _target_ranks(n, percentiles),
+        bounds,
     )
-    if persist:
-        rows = persist_tracked(rows)
-    first_hist: dict | None = None  # gval -> sorted bucket rows
-    if stats is None and bounds is not None and bounds[1] > bounds[0]:
-        w0 = (bounds[1] - bounds[0]) / HIST_BUCKETS
-        # Clamp instead of filter: values outside the advertised bounds
-        # land in the edge buckets (whose tracked __bmin/__bmax are the
-        # ACTUAL extremes), so stale/mis-resolved bounds skew bucket
-        # balance but can never silently drop rows or corrupt counts.
-        b0 = F.greatest(
-            F.lit(0),
-            F.least(
-                F.floor((F.col(v) - F.lit(bounds[0])) / F.lit(w0)),
-                F.lit(HIST_BUCKETS - 1),
-            ),
-        ).cast("long")
-        h0 = (
-            rows.groupBy(g, b0.alias("__b"))
+    return _percentile_frame(df, g, count_name, percentiles, names, counts, picked)
+
+
+def exact_group_percentiles(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    percentiles: Sequence[float],
+    names: Sequence[str] | None = None,
+    count_name: str = "n_rows",
+    bounds: tuple[float, float] | None = None,
+) -> DataFrame:
+    """Old name of :func:`hist_group_percentiles`. Nothing in the
+    package calls it; it stays while ``perfbench/tracing.py`` still
+    lists it among the entry points it wraps."""
+    return hist_group_percentiles(
+        df, group_col, value_col, percentiles, names, count_name, bounds
+    )
+
+
+def value_counts_percentiles(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    percentiles: Sequence[float],
+    names: Sequence[str] | None = None,
+    count_name: str = "n_rows",
+) -> DataFrame:
+    """Exact interpolated percentiles for BOUNDED-DOMAIN values in ONE
+    map-side-combinable ``groupBy(group, value)`` aggregate: the shuffle
+    carries |groups| × |distinct values| partial counts, never rows.
+
+    Use it only when the value domain is bounded by something other
+    than the data volume (day-granularity datediffs, small-integer
+    codes): the whole aggregate is collected. Values that grow with the
+    data (prices, revenues, float measures) belong in
+    :func:`hist_group_percentiles`. Output, values and null contract are
+    those of :func:`hist_group_percentiles`.
+    """
+    g, v = group_col, value_col
+    hist = (
+        df.select(g, v)
+        .where(F.col(v).isNotNull())
+        .groupBy(g, v)
+        .agg(F.count("*").alias("__c"))
+        .collect()
+    )
+    by_g: dict = {}
+    for r in hist:
+        by_g.setdefault(r[g], []).append((r[v], r["__c"]))
+    counts: dict = {}
+    picked: dict = {}
+    for gv, pairs in by_g.items():
+        pairs.sort()
+        counts[gv] = n = sum(c for _, c in pairs)
+        for rank, (val, _) in _walk(pairs, 0, _target_ranks(n, percentiles)).items():
+            picked[gv, rank] = val
+    return _percentile_frame(df, g, count_name, percentiles, names, counts, picked)
+
+
+def weighted_median_hist(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    weight_col: str,
+    count_name: str = "total_weight",
+    out_name: str = "weighted_median",
+) -> DataFrame:
+    """Exact lower weighted median per group: the smallest value whose
+    cumulative BIGINT-cast weight, in value order, reaches half the
+    group's total (``2*cum >= total``, the SQL twin ``MIN(v) WHERE
+    2*cum >= total``), i.e. rank ``(total+1)//2`` of the core.
+
+    Returns one row per group with a positive total: ``count_name``
+    (the total weight) and ``out_name`` in the value column's own type.
+    Weights must be non-negative; a group whose total is zero has no
+    weighted median and produces no row. Rows with a null value or a
+    null weight are ignored (the module's null contract).
+    """
+    g, v = group_col, value_col
+    totals, picked = _select(
+        df.select(g, v, F.col(weight_col).cast("long").alias("__w")),
+        g,
+        v,
+        "__w",
+        lambda tot: [(tot + 1) // 2] if tot > 0 else [],
+    )
+    return _frame(
+        df,
+        g,
+        [
+            StructField(count_name, LongType(), False),
+            StructField(out_name, df.schema[v].dataType),
+        ],
+        [
+            (gv, totals[gv], picked[gv, (totals[gv] + 1) // 2])
+            for gv in sorted(totals, key=str)
+            if totals[gv] > 0
+        ],
+    )
+
+
+# ---------------------------------------------------------------------------
+# The selection core and its helpers.
+# ---------------------------------------------------------------------------
+def _select(
+    rows: DataFrame,
+    g: str,
+    v: str,
+    w: str | None,
+    ranks_of: Callable[[int], Iterable[int]],
+    bounds: tuple[float, float] | None = None,
+) -> tuple[dict, dict]:
+    """Per group of ``rows`` (columns ``g``, ``v`` and, when ``w`` names
+    it, an integral weight column; otherwise every row weighs 1):
+    returns ``({group: total weight}, {(group, rank): value})``, where
+    each rank in ``ranks_of(total)`` maps to the smallest value whose
+    cumulative weight reaches it. See the module docstring for the
+    passes; ``HIST_BUCKETS`` and ``HIST_FETCH_CAP`` are read per call.
+    """
+    spark = rows.sparkSession
+    live = F.col(v).isNotNull()
+    if w is not None:
+        live = live & F.col(w).isNotNull()
+    rows = rows.where(live)
+    v_type = rows.schema[v].dataType
+    g_type = rows.schema[g].dataType
+
+    def histogram(frame: DataFrame, key: str, bucket: Column) -> dict:
+        """key value -> that key's bucket rows, in bucket order."""
+        out: dict = {}
+        for r in (
+            frame.groupBy(key, bucket.alias("__b"))
             .agg(
                 F.count("*").alias("__c"),
+                (F.count("*") if w is None else F.sum(w)).alias("__wc"),
                 F.min(v).alias("__bmin"),
                 F.max(v).alias("__bmax"),
             )
             .collect()
-        )
-        first_hist = {}
-        for r in h0:
-            first_hist.setdefault(r[g], []).append(r)
-        stats = {}
-        for gv, bl in first_hist.items():
-            bl.sort(key=lambda r: r["__b"])
-            stats[gv] = (
-                sum(r["__c"] for r in bl),
-                bl[0]["__bmin"],
-                bl[-1]["__bmax"],
-            )
-    if stats is None:
-        stat_rows = rows.groupBy(g).agg(
-            F.count("*").alias("__n"),
-            F.min(v).alias("__lo"),
-            F.max(v).alias("__hi"),
-        ).collect()
-        stats = {
-            r[g]: (r["__n"], r["__lo"], r["__hi"]) for r in stat_rows
-        }
+        ):
+            out.setdefault(r[key], []).append(r)
+        for buckets in out.values():
+            buckets.sort(key=lambda r: r["__b"])
+        return out
 
-    # per-group target ranks (1-based): pos = p·(n−1)
-    counts: dict = {}
-    targets: dict = {}  # gval -> {rank, ...}
-    specs: dict = {}  # gval -> [(name, lo_rank, hi_rank, frac)]
-    init: dict = {}  # gval -> (lo_val, hi_val)
-    for gv, (n, vlo, vhi) in stats.items():
-        counts[gv] = n
-        init[gv] = (vlo, vhi)
-        for p, name in zip(percentiles, names):
-            pos = float(p) * float(n - 1)
-            lo, hi = int(math.floor(pos)) + 1, int(math.ceil(pos)) + 1
-            specs.setdefault(gv, []).append((name, lo, hi, pos - math.floor(pos)))
-            targets.setdefault(gv, set()).update((lo, hi))
+    # state per (group, rank): [lo, hi, weight below lo, rows in [lo, hi]]
+    state: dict = {}
 
-    g_type = df.schema[g].dataType
-    out_schema = StructType(
-        [StructField(g, g_type), StructField(count_name, LongType(), False)]
-        + [StructField(name, DoubleType()) for name in names]
-    )
-    if not counts:
-        return spark.createDataFrame([], out_schema)
+    def narrow(gv, buckets: list, below: int, ranks: Iterable[int]) -> None:
+        crossed = _walk(((b, b["__wc"]) for b in buckets), below, ranks)
+        for rank, (b, cum) in crossed.items():
+            state[gv, rank] = [b["__bmin"], b["__bmax"], cum, b["__c"]]
 
-    # probe state: (gval, rank) -> [lo_val, hi_val, off, n_in_interval]
-    state = {
-        (gv, rk): [init[gv][0], init[gv][1], 0, counts[gv]]
-        for gv in targets
-        for rk in targets[gv]
-    }
-    resolved: dict = {}  # (gval, rank) -> value
-    if first_hist is not None:
-        # the bounds-mode pass already histogrammed every group — apply
-        # its narrowing before the loop so no interval re-scans whole
-        for key in state:
-            gv, rank = key
-            cum = 0
-            for b in first_hist[gv]:
-                if cum + b["__c"] >= rank:
-                    state[key] = [b["__bmin"], b["__bmax"], cum, b["__c"]]
-                    break
-                cum += b["__c"]
+    if bounds is not None and bounds[1] > bounds[0]:
+        first = _bucket(v, v_type, F.lit(bounds[0]), F.lit(_width(*bounds)))
+    else:
+        first = F.lit(0)
+    totals: dict = {}
+    for gv, buckets in histogram(rows, g, first).items():
+        totals[gv] = sum(b["__wc"] for b in buckets)
+        narrow(gv, buckets, 0, ranks_of(totals[gv]))
 
-    def _probe_df(pending: dict) -> DataFrame:
-        # dedupe identical (gval, interval, off) probes: same interval
-        # resolves every rank that maps into it from one histogram
-        # pending is keyed by the (gval, lo, hi, off) probe tuple; the
-        # group value for the join column is its first element
-        rows_ = [
-            (i, pk[0], st[0], st[1], (st[1] - st[0]) / HIST_BUCKETS)
-            for i, (pk, st) in enumerate(pending.items())
-        ]
-        return spark.createDataFrame(
-            rows_,
+    picked: dict = {}
+
+    def open_probes() -> dict:
+        """(group, lo, hi, weight below, rows) -> ranks in that interval;
+        single-valued intervals resolve here instead."""
+        probes: dict = {}
+        for (gv, rank), (lo, hi, below, n) in state.items():
+            if (gv, rank) in picked:
+                continue
+            if lo == hi:
+                picked[gv, rank] = lo
+            else:
+                probes.setdefault((gv, lo, hi, below, n), []).append(rank)
+        return probes
+
+    def probe_rows(probes: dict) -> DataFrame:
+        table = spark.createDataFrame(
+            [
+                (i, gv, lo, hi, _width(lo, hi))
+                for i, (gv, lo, hi, _, _) in enumerate(probes)
+            ],
             StructType(
                 [
                     StructField("__probe", LongType(), False),
-                    StructField(g, g_type),
-                    StructField("__plo", DoubleType(), False),
-                    StructField("__phi", DoubleType(), False),
-                    StructField("__w", DoubleType(), False),
+                    StructField("__pg", g_type),
+                    StructField("__plo", v_type, False),
+                    StructField("__phi", v_type, False),
+                    StructField("__pw", DoubleType(), False),
                 ]
             ),
         )
+        return rows.join(
+            F.broadcast(table), F.col(g).eqNullSafe(F.col("__pg"))
+        ).where(F.col(v).between(F.col("__plo"), F.col("__phi")))
 
-    for _ in range(8):  # ≥ 2 passes handles 10^12 rows; 8 is paranoia
-        # group pending probes by (gval, interval) so equal intervals
-        # share one histogram
-        pending: dict = {}
-        key_of: dict = {}
-        for key, st in state.items():
-            if key in resolved:
-                continue
-            if st[0] == st[1]:  # single-valued interval: done
-                resolved[key] = st[0]
-                continue
-            if st[3] <= HIST_FETCH_CAP:
-                continue  # small enough for the exact fetch pass
-            pk = (key[0], st[0], st[1], st[2])
-            pending.setdefault(pk, st)
-            key_of.setdefault(pk, []).append(key)
-        if not pending:
+    for _ in range(8):  # 2 passes already resolve 10^12 rows per group
+        probes = {
+            pk: ranks for pk, ranks in open_probes().items()
+            if pk[4] > HIST_FETCH_CAP
+        }
+        if not probes:
             break
-        probes = _probe_df(pending)
-        bucket = F.least(
-            F.floor((F.col(v) - F.col("__plo")) / F.col("__w")),
-            F.lit(HIST_BUCKETS - 1),
-        ).cast("long")
-        hist = (
-            rows.join(F.broadcast(probes), g)
-            .filter(F.col(v).between(F.col("__plo"), F.col("__phi")))
-            .groupBy("__probe", bucket.alias("__b"))
-            .agg(
-                F.count("*").alias("__c"),
-                F.min(v).alias("__bmin"),
-                F.max(v).alias("__bmax"),
+        by_probe = histogram(
+            probe_rows(probes),
+            "__probe",
+            _bucket(v, v_type, F.col("__plo"), F.col("__pw")),
+        )
+        for i, ((gv, _, _, below, _), ranks) in enumerate(probes.items()):
+            narrow(gv, by_probe.get(i, []), below, ranks)
+
+    probes = open_probes()
+    for gv, lo, hi, _, n in probes:
+        if n > HIST_FETCH_CAP:
+            raise ValueError(
+                f"order statistics: group {gv!r} still holds {n} rows in "
+                f"[{lo!r}, {hi!r}] after 8 refinement passes, above "
+                f"HIST_FETCH_CAP={HIST_FETCH_CAP}; its values are spread "
+                "too widely to refine"
             )
-            .collect()
-        )
-        by_probe: dict = {}
-        for r in hist:
-            by_probe.setdefault(r["__probe"], []).append(r)
-        for i, (pk, keys) in enumerate(zip(pending, [key_of[pk] for pk in pending])):
-            buckets = sorted(by_probe.get(i, []), key=lambda r: r["__b"])
-            for key in keys:
-                rank, st = key[1], state[key]
-                cum = st[2]
-                for b in buckets:
-                    if cum + b["__c"] >= rank:
-                        state[key] = [b["__bmin"], b["__bmax"], cum, b["__c"]]
-                        break
-                    cum += b["__c"]
+    if probes:
+        weight = F.lit(1) if w is None else F.col(w)
+        fetched: dict = {}
+        for r in probe_rows(probes).select("__probe", v, weight).collect():
+            fetched.setdefault(r[0], []).append((r[1], r[2]))
+        for i, ((gv, _, _, below, _), ranks) in enumerate(probes.items()):
+            for rank, (val, _) in _walk(
+                sorted(fetched.get(i, [])), below, ranks
+            ).items():
+                picked[gv, rank] = val
+    return totals, picked
 
-    # exact fetch for every unresolved probe (each ≤ HIST_FETCH_CAP rows)
-    fetch_pending = {
-        (key[0], st[0], st[1], st[2]): st
-        for key, st in state.items()
-        if key not in resolved
-    }
-    if fetch_pending:
-        key_of = {}
-        for key, st in state.items():
-            if key in resolved:
-                continue
-            key_of.setdefault((key[0], st[0], st[1], st[2]), []).append(key)
-        probes = _probe_df(fetch_pending)
-        got = (
-            rows.join(F.broadcast(probes), g)
-            .filter(F.col(v).between(F.col("__plo"), F.col("__phi")))
-            .select("__probe", v)
-            .collect()
-        )
-        vals_by_probe: dict = {}
-        for r in got:
-            vals_by_probe.setdefault(r["__probe"], []).append(r[v])
-        for i, pk in enumerate(fetch_pending):
-            vs = sorted(vals_by_probe.get(i, []))
-            for key in key_of[pk]:
-                rank, st = key[1], state[key]
-                resolved[key] = vs[rank - st[2] - 1]
 
-    out_rows = []
+def _bucket(v: str, v_type: DataType, lo: Column, width: Column) -> Column:
+    """Bucket index in [0, HIST_BUCKETS), monotone in ``v``. The offset
+    ``v - lo`` is exact in the value's own type (integers widened so it
+    cannot overflow) and only then becomes a double, so an interval
+    narrower than one double ulp of its magnitude still spreads."""
+    if isinstance(v_type, IntegralType):
+        off = F.col(v).cast("decimal(20,0)") - lo.cast("decimal(20,0)")
+    else:
+        off = F.col(v) - lo
+    idx = F.floor(off.cast("double") / width * HIST_BUCKETS)
+    return F.least(F.greatest(idx, F.lit(0)), F.lit(HIST_BUCKETS - 1)).cast(
+        "long"
+    )
+
+
+def _width(lo, hi) -> float:
+    """``hi - lo`` as a double, subtracted exactly first (decimals too),
+    so it is positive whenever ``lo < hi``."""
+    with localcontext() as ctx:
+        ctx.prec = 80
+        return float(hi - lo)
+
+
+def _walk(items: Iterable, below: int, ranks: Iterable[int]) -> dict:
+    """The one rank walk. ``items`` are ``(payload, weight)`` pairs in
+    value order and ``below`` is the weight before them. Returns, for
+    each rank, ``(payload, weight before it)`` of the first item whose
+    cumulative weight reaches the rank."""
+    todo = sorted(ranks, reverse=True)
+    out: dict = {}
+    for payload, wt in items:
+        if not todo:
+            break
+        reach = below + wt
+        while todo and todo[-1] <= reach:
+            out[todo.pop()] = (payload, below)
+        below = reach
+    return out
+
+
+def _rank_specs(n: int, percentiles: Sequence[float]) -> list[tuple]:
+    """``(lo_rank, hi_rank, frac)`` per percentile over ``n`` values:
+    ``pos = p·(n−1)`` (0-indexed), ranks 1-based."""
+    specs = []
+    for p in percentiles:
+        pos = float(p) * float(n - 1)
+        base = math.floor(pos)
+        specs.append((int(base) + 1, int(math.ceil(pos)) + 1, pos - base))
+    return specs
+
+
+def _target_ranks(n: int, percentiles: Sequence[float]) -> set[int]:
+    return {r for lo, hi, _ in _rank_specs(n, percentiles) for r in (lo, hi)}
+
+
+def _percentile_frame(
+    df: DataFrame,
+    g: str,
+    count_name: str,
+    percentiles: Sequence[float],
+    names: Sequence[str] | None,
+    counts: dict,
+    picked: dict,
+) -> DataFrame:
+    """One row per group: count, then ``v_lo + frac·(v_hi − v_lo)`` on
+    the double values of each percentile's rank neighbours."""
+    if names is None:
+        names = [f"p{int(p * 100)}" for p in percentiles]
+    rows = []
     for gv in sorted(counts, key=str):
         row: list = [gv, counts[gv]]
-        for name, lo, hi, frac in specs[gv]:
-            vlo, vhi = resolved[(gv, lo)], resolved[(gv, hi)]
+        for lo, hi, frac in _rank_specs(counts[gv], percentiles):
+            vlo, vhi = float(picked[gv, lo]), float(picked[gv, hi])
             row.append(vlo + frac * (vhi - vlo))
-        out_rows.append(tuple(row))
-    return spark.createDataFrame(out_rows, out_schema)
+        rows.append(tuple(row))
+    return _frame(
+        df,
+        g,
+        [StructField(count_name, LongType(), False)]
+        + [StructField(name, DoubleType()) for name in names],
+        rows,
+    )
+
+
+def _frame(df: DataFrame, g: str, fields: list, rows: list) -> DataFrame:
+    """The one output-schema builder: the group column keeps its type."""
+    schema = StructType([StructField(g, df.schema[g].dataType)] + fields)
+    return df.sparkSession.createDataFrame(rows, schema)

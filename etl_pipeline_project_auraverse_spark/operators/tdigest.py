@@ -1,7 +1,7 @@
 """t-digest approximate quantiles (Dunning & Ertl) — the sketch-path
 sibling of ``operators/order_stats.py``.
 
-The exact order-statistics operator pays a range shuffle per pass; the
+The exact order-statistics operator pays a scan per refinement pass; the
 t-digest answers the same quantile questions in ONE scan with bounded
 error concentrated at the tails, which is the right trade at 100 TB
 for monitoring/binning use cases (the exact path stays the choice when

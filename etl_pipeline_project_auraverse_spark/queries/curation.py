@@ -981,15 +981,14 @@ def q_split_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoothed shares and (p - q) * ln(p / q) terms. Everything is one
     scan plus two 1-row broadcasts (bounds, totals)."""
     from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-        exact_group_percentiles,
+        hist_group_percentiles,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     ps = [i / PSI_DECILES for i in range(1, PSI_DECILES)]
     names = [f"d{i}" for i in range(1, PSI_DECILES)]
-    bounds = exact_group_percentiles(
+    bounds = hist_group_percentiles(
         docs.withColumn("__g", F.lit("all")), "__g", "n_chars", ps, names=names,
-        n_groups_hint=1,
     ).select(F.array(*names).alias("bounds"))
 
     bucket = h28(F.col("doc_id").cast("string")) % 100
@@ -2037,7 +2036,7 @@ LEN_BAND_HI = 0.9
 def q_doc_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-language [p10, p90] word-count band + survival census.
     Pass 1: the histogram-refinement percentile operator (map-side
-    histograms only, no range shuffle); pass 2: one scan joined against
+    histograms only, no shuffle of the rows); pass 2: one scan joined against
     the broadcast 5-row percentile table."""
     from etl_pipeline_project_auraverse_spark.operators.order_stats import (
         hist_group_percentiles,
@@ -2048,8 +2047,7 @@ def q_doc_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("lang", n_words(F.col("text")).alias("nw"))
     )
     q = hist_group_percentiles(
-        d, "lang", "nw", [LEN_BAND_LO, LEN_BAND_HI], ["p10", "p90"],
-        persist=False,
+        d, "lang", "nw", [LEN_BAND_LO, LEN_BAND_HI], ["p10", "p90"]
     ).select("lang", "p10", "p90")
     in_band = (F.col("nw") >= F.col("p10")) & (F.col("nw") <= F.col("p90"))
     return (

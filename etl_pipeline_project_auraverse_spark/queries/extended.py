@@ -298,11 +298,9 @@ def q_percentiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT F.percentile: that buffers a whole group's values in one
     # aggregation buffer (3 groups → whole column on 3 tasks at 100 TB).
     # hist_group_percentiles computes the same interpolated values with
-    # NO data shuffle at all — iterative histogram refinement, map-side
+    # no shuffle of the rows: iterative histogram refinement, map-side
     # aggregates + driver narrowing, parquet-footer bounds in place of
-    # the stats job (operators/order_stats.py; the range-shuffle
-    # operator exact_group_percentiles remains for high-cardinality
-    # groups, where the per-probe broadcast would stop being tiny).
+    # the stats job (operators/order_stats.py).
     from etl_pipeline_project_auraverse_spark.operators.order_stats import (
         hist_group_percentiles,
     )
@@ -313,7 +311,6 @@ def q_percentiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     pct = hist_group_percentiles(
         li, "l_returnflag", "l_extendedprice", [0.5, 0.9, 0.99], ["p50", "p90", "p99"],
-        persist=False,
         bounds=parquet_column_bounds(sf_dir, "lineitem", "l_extendedprice"),
     )
     return pct.select(
@@ -801,7 +798,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the broadcast 3-row bounds table. No global NTILE, no
     per-metric extra pass."""
     from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-        exact_group_percentiles,
+        hist_group_percentiles,
     )
     from etl_pipeline_project_auraverse_spark.queries._util import DEC
 
@@ -834,9 +831,9 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = {
         r["metric"]: r
-        for r in exact_group_percentiles(
+        for r in hist_group_percentiles(
             melted, "metric", "value", [0.25, 0.5, 0.75],
-            names=["p25", "p50", "p75"], n_groups_hint=4,
+            names=["p25", "p50", "p75"],
         ).collect()
     }
 

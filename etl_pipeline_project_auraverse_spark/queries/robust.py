@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-    exact_group_percentiles,
+    hist_group_percentiles,
 )
 from etl_pipeline_project_auraverse_spark.queries import register
 from etl_pipeline_project_auraverse_spark.queries._util import (
@@ -61,12 +61,9 @@ def q_winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized mean per return flag: prices clamped to the exact
     [p5, p95] of their group before averaging — the outlier-robust
     aggregate a metrics pipeline runs next to the raw mean. Bounds come
-    from the range-shuffle order-statistics operator (bounded per-task
-    state at any group size), then broadcast back (3 rows) so the fact
-    scan is touched exactly twice with no low-cardinality funnel."""
-    from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-        hist_group_percentiles,
-    )
+    from the histogram-refinement order-statistics operator (bounded
+    per-task state at any group size, no shuffle of the rows) and are
+    inlined as literals, so the closing aggregate needs no join."""
     from etl_pipeline_project_auraverse_spark.queries._util import (
         parquet_column_bounds,
     )
@@ -81,7 +78,7 @@ def q_winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["l_returnflag"]: (r["lo"], r["hi"])
         for r in hist_group_percentiles(
             li, "l_returnflag", "l_extendedprice",
-            [WINSOR_LO, WINSOR_HI], names=["lo", "hi"], persist=False,
+            [WINSOR_LO, WINSOR_HI], names=["lo", "hi"],
             bounds=parquet_column_bounds(sf_dir, "lineitem", "l_extendedprice"),
         ).collect()
     }
@@ -148,9 +145,6 @@ def q_equidepth_histogram_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     global NTILE window, which would funnel every row through one sort
     task). The same shape an optimizer's column-statistics build or a
     feature-binning pass uses at scale."""
-    from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-        hist_group_percentiles,
-    )
     from etl_pipeline_project_auraverse_spark.queries._util import (
         parquet_column_bounds,
     )
@@ -163,7 +157,7 @@ def q_equidepth_histogram_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundaries come back driver-assembled, so assignment is a pure
     # literal-array expression — no join, no broadcast build job
     row = hist_group_percentiles(
-        with_g, "__g", "o_totalprice", ps, names=names, persist=False,
+        with_g, "__g", "o_totalprice", ps, names=names,
         bounds=parquet_column_bounds(sf_dir, "orders", "o_totalprice"),
     ).collect()[0]
     bounds = F.array(*[F.lit(row[n]).cast("double") for n in names])
@@ -265,7 +259,6 @@ def q_mad_outlier_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_project_auraverse_spark.operators.order_stats import (
         HIST_BUCKETS,
         HIST_FETCH_CAP,
-        hist_group_percentiles,
     )
     from etl_pipeline_project_auraverse_spark.queries._util import (
         parquet_column_bounds,
@@ -282,7 +275,7 @@ def q_mad_outlier_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = parquet_column_bounds(sf_dir, "lineitem", "l_extendedprice")
     med_df = hist_group_percentiles(
         proj, "l_returnflag", "l_extendedprice", [0.5], names=["med"],
-        persist=False, bounds=bounds,
+        bounds=bounds,
     )  # P1 + P2 (footer bounds: no stats job; falls back internally)
     med, counts = {}, {}
     glo, ghi = bounds if bounds else (None, None)
@@ -356,15 +349,12 @@ def q_mad_outlier_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
             fallback = True
     if fallback:
         # heavy candidate region (pathological skew): exact but slower
-        # two-pass tail — refine mad via the operator, then one fence
-        # aggregate. Values identical, only choreography differs.
-        dev_stats = {
-            gv: (counts[gv], 0.0, dmax) for gv in counts
-        }
+        # two-pass tail — refine mad via the operator (deviations lie in
+        # [0, dmax]), then one fence aggregate. Values identical, only
+        # choreography differs.
         mad_rows = hist_group_percentiles(
             proj.select("l_returnflag", dev.alias("dev")),
-            "l_returnflag", "dev", [0.5], names=["mad"],
-            stats=dev_stats, persist=False,
+            "l_returnflag", "dev", [0.5], names=["mad"], bounds=(0.0, dmax),
         ).collect()
         mad = {r["l_returnflag"]: r["mad"] for r in mad_rows}
         fences = {k: FENCE_C * v for k, v in mad.items()}
@@ -673,8 +663,8 @@ def q_corr_matrix_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Revenue concentration (Lorenz curve at decile granularity): how much
 # of total revenue the poorest..richest customer deciles hold — the
-# Pareto/80-20 audit. Decile bounds come from the range-shuffle exact
-# order statistics over PER-CUSTOMER revenue (never a global NTILE
+# Pareto/80-20 audit. Decile bounds come from the histogram-refinement
+# exact order statistics over PER-CUSTOMER revenue (never a global NTILE
 # sort); assignment is a map-side broadcast-array comparison; the
 # cumulative share is a running sum over the 10-row decile aggregate.
 # ---------------------------------------------------------------------------
@@ -721,16 +711,15 @@ def q_revenue_concentration_deciles(spark: SparkSession, sf_dir: str) -> DataFra
     # NOT persisted (r15, measured): the duplicated cust subtrees in
     # this one plan share their shuffle via ReusedExchange, so a cache
     # only adds materialization cost (solo min-of-5: 1.92 s unpersisted
-    # vs 2.31 s persisted). The operator's internal range-shuffle
-    # sampling is the one true re-execution and it samples, not scans.
+    # vs 2.31 s persisted). The order-statistics passes (stats, then
+    # fetch) each re-run the customer aggregate.
     cust = orders.groupBy("o_custkey").agg(
         dec_sum("o_totalprice", 2).alias("rev")
     )
     ps = [i / LORENZ_BUCKETS for i in range(1, LORENZ_BUCKETS)]
     names = [f"b{i}" for i in range(1, LORENZ_BUCKETS)]
-    bounds = exact_group_percentiles(
-        cust.withColumn("__g", F.lit("all")), "__g", "rev", ps, names=names,
-        n_groups_hint=1,
+    bounds = hist_group_percentiles(
+        cust.withColumn("__g", F.lit("all")), "__g", "rev", ps, names=names
     ).select(F.array(*names).alias("bounds"))
     assigned = cust.join(F.broadcast(bounds)).select(
         "rev",
@@ -994,7 +983,7 @@ def q_theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator: the slope set is CALENDAR-bounded (<= days^2/2 ~ 66k
     # doubles ~ 0.5 MB) no matter how large the orders table grows, so
     # the whole-group buffer is constant-size by construction — and it
-    # saves the two range-shuffle passes (measured 6.2 s -> ~1.5 s).
+    # saves the operator's extra passes over the slope set.
     # Interpolation matches DuckDB quantile_cont bit for bit.
     m = slopes.agg(
         F.count("slope").alias("n_pairs"),
@@ -1954,11 +1943,9 @@ def q_bh_fdr_brand_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Weighted median: the quantity-weighted middle price per return flag.
-# Same driver-fused two-job order-statistics plan as the percentile
-# battery (range shuffle bounds every task; the partitions x groups
-# weight-cell table collects; only the crossing slices do ranked
-# work), generalized from row counts to integer weights.
+# Weighted median: the quantity-weighted middle price per return flag,
+# through the same histogram-refinement core as the percentile battery,
+# with integer weights in place of row counts.
 # ---------------------------------------------------------------------------
 _WMED_ORACLE = """
 WITH d AS (
@@ -1990,10 +1977,9 @@ def q_weighted_median_price_by_flag(
     """Lower weighted median of extended price per return flag, with
     line quantity as the weight (2*cum >= total semantics — the
     smallest price at which half the shipped units are covered).
-    Delegates to ``operators/order_stats.weighted_median_hist`` (r15:
-    the shuffle-free histogram-refinement twin of ``weighted_median``
-    — same crossing semantics, no range shuffle of the row stream;
-    guide §2.4)."""
+    Delegates to ``operators/order_stats.weighted_median_hist``: the
+    histogram-refinement selection at rank ``(total+1)//2``, with no
+    shuffle of the row stream."""
     from etl_pipeline_project_auraverse_spark.operators.order_stats import (
         weighted_median_hist,
     )

@@ -566,7 +566,7 @@ def q_crossmodal_dedup_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Inter-event gap distribution: exact median/p90 of the seconds between
 # a user's consecutive events, grouped by the LATER event's type — the
 # latency/engagement-cadence profile. The per-user lag window is the
-# sessionize shape; the percentiles go through the range-shuffle exact
+# sessionize shape; the percentiles go through the histogram-refinement
 # order-statistics operator (bounded per-task state at any group size,
 # never a whole-group percentile buffer).
 # ---------------------------------------------------------------------------
@@ -595,15 +595,14 @@ def q_event_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact p50/p90 of inter-event gaps (seconds) per event type of
     the later event — how long users go quiet before each action."""
     from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-        exact_group_percentiles,
+        hist_group_percentiles,
     )
 
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    # persisted (r14): the order-statistics operator's range shuffle
-    # SAMPLES its input to pick bounds before shuffling it, so an
-    # unpersisted gaps table pays the per-user lag window twice (once
-    # for the sample, once for the real exchange)
+    # persisted: the order-statistics operator scans its input once per
+    # pass (stats, then fetch), so an unpersisted gaps table would pay
+    # the per-user lag window on every pass
     gaps = persist_tracked(
         ev.select(
             "event_type",
@@ -614,9 +613,9 @@ def q_event_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("gap_sec").isNotNull())
     )
-    pct = exact_group_percentiles(
+    pct = hist_group_percentiles(
         gaps, "event_type", "gap_sec", [0.5, 0.9], names=["p50", "p90"],
-        count_name="n_gaps", n_groups_hint=5,
+        count_name="n_gaps",
     )
     return (
         pct.select(

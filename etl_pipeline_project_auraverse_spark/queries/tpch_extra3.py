@@ -222,7 +222,7 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fulfillment latency: days from order to FIRST shipment, exact
 # p50/p90 per order priority — the logistics SLA profile. The
 # per-order min-ship aggregate keys on orderkey (high cardinality);
-# the percentiles go through the range-shuffle order statistics.
+# the percentiles are one value-count aggregate over the day domain.
 # ---------------------------------------------------------------------------
 
 
@@ -273,8 +273,7 @@ def q_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lat_days is a day-granularity datediff — its domain is the
     # calendar span, never the row count — so the percentile machinery
     # collapses to ONE map-side-combinable value-histogram aggregate
-    # (r14: replaces the range-shuffle + persisted rank/fetch pair;
-    # same rank arithmetic, bit-identical values)
+    # (same rank arithmetic, bit-identical values)
     pct = value_counts_percentiles(
         per_order, "o_orderpriority", "lat_days", [0.5, 0.9],
         names=["p50", "p90"], count_name="n_orders",
@@ -533,7 +532,7 @@ def q_customer_quartile_migration(spark: SparkSession, sf_dir: str) -> DataFrame
     """Transition matrix of customer revenue quartiles between the two
     halves of the date range (quartile 0 = inactive in that half)."""
     from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-        exact_group_percentiles,
+        hist_group_percentiles,
     )
 
     orders = load_table(spark, sf_dir, "orders")
@@ -567,7 +566,7 @@ def q_customer_quartile_migration(spark: SparkSession, sf_dir: str) -> DataFrame
     # ONE fused percentile pass for BOTH halves: stack (half, rev) and
     # let the operator treat the half as the group (the old plan ran
     # the whole multi-pass percentile machinery twice — 2x its fixed
-    # range-shuffle/refinement cost for the same answer). The bounds
+    # per-pass cost for the same answer). The bounds
     # table is exactly 2 rows, so inlining it driver-side as literals
     # replaces two broadcast crossJoins with a plain projection; the
     # rank arithmetic and IEEE interpolation are unchanged, so values
@@ -582,10 +581,8 @@ def q_customer_quartile_migration(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select(F.col("hr.half").alias("half"), F.col("hr.rev").alias("rev"))
     b = {
         r["half"]: r
-        for r in exact_group_percentiles(
-            stacked.where(F.col("rev").isNotNull()),
-            "half", "rev",
-            [0.25, 0.5, 0.75], names=["q1", "q2", "q3"], n_groups_hint=2,
+        for r in hist_group_percentiles(
+            stacked, "half", "rev", [0.25, 0.5, 0.75], names=["q1", "q2", "q3"]
         ).collect()
     }
 

@@ -1,20 +1,26 @@
-"""Differential tests: exact_group_percentiles vs F.percentile.
+"""Differential tests for the order-statistics operators.
 
-The operator must be value-identical to Spark's exact percentile (and
-therefore DuckDB quantile_cont) while keeping per-task state bounded —
-ties, skewed groups, and single-element groups included.
+Every entry point in ``operators/order_stats.py`` runs the same
+histogram-refinement core. The percentile entry points must be
+value-identical to Spark's exact ``percentile`` (and therefore DuckDB
+``quantile_cont``); the weighted median must match a local reference.
+Ties, skewed groups, single-element groups, nulls, wide integer and
+decimal types, and forced multi-pass refinement are all covered.
 """
 
 from __future__ import annotations
 
 import math
 import random
+from decimal import Decimal, localcontext
 
 import pytest
 from pyspark.sql import functions as F
 
+from etl_pipeline_project_auraverse_spark.operators import order_stats
 from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-    exact_group_percentiles,
+    hist_group_percentiles,
+    weighted_median_hist,
 )
 
 PS = [0.0, 0.25, 0.5, 0.9, 0.99, 1.0]
@@ -30,11 +36,22 @@ def _reference(spark, df, ps=PS, names=NAMES):
     }
 
 
+def _force_refinement(monkeypatch, fetch_cap=8, buckets=16):
+    """Tiny fetch cap and coarse buckets: every group runs the
+    multi-pass narrowing loop instead of going straight to the fetch."""
+    monkeypatch.setattr(order_stats, "HIST_FETCH_CAP", fetch_cap)
+    monkeypatch.setattr(order_stats, "HIST_BUCKETS", buckets)
+
+
 @pytest.mark.parametrize(
     "case",
     ["uniform", "ties", "skewed", "singletons"],
 )
-def test_matches_spark_exact_percentile(spark, case):
+def test_matches_spark_exact_percentile(spark, case, monkeypatch):
+    """The F.percentile differential under forced refinement (the
+    default configuration is covered by
+    test_hist_percentiles_match_spark_exact)."""
+    _force_refinement(monkeypatch)
     rng = random.Random(42)
     if case == "uniform":
         rows = [(f"g{i % 4}", rng.uniform(0, 1000)) for i in range(2000)]
@@ -49,7 +66,7 @@ def test_matches_spark_exact_percentile(spark, case):
 
     got = {
         r["g"]: [r[n] for n in NAMES]
-        for r in exact_group_percentiles(df, "g", "v", PS, NAMES).collect()
+        for r in hist_group_percentiles(df, "g", "v", PS, NAMES).collect()
     }
     want = _reference(spark, df)
     assert got.keys() == want.keys()
@@ -64,7 +81,7 @@ def test_counts_ignore_nulls(spark):
     )
     out = {
         r["g"]: (r["n_rows"], r["p50"])
-        for r in exact_group_percentiles(df, "g", "v", [0.5], ["p50"]).collect()
+        for r in hist_group_percentiles(df, "g", "v", [0.5], ["p50"]).collect()
     }
     # group b has no non-null values -> no output row, like F.percentile+HAVING
     assert out == {"a": (2, 2.0)}
@@ -72,73 +89,69 @@ def test_counts_ignore_nulls(spark):
 
 def test_plan_has_no_single_group_aggregation(spark):
     """The point of the operator: no ObjectHashAggregate percentile
-    buffer, and the heavy shuffle is a range partitioning."""
+    buffer and no range shuffle — its passes run as actions and the
+    returned frame is assembled on the driver."""
     df = spark.createDataFrame([("a", 1.0)] * 10, "g string, v double")
     plan = (
-        exact_group_percentiles(df, "g", "v", [0.5], ["p50"])
+        hist_group_percentiles(df, "g", "v", [0.5], ["p50"])
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
+        .lower()
     )
-    assert "percentile" not in plan.lower()
-    assert "rangepartitioning" in plan.lower()
+    assert "percentile" not in plan
+    assert "rangepartitioning" not in plan
 
 
-def test_fused_small_group_path_matches_distributed(spark):
-    """The n_groups_hint fast path (driver-fused two-job plan) must be
-    value-IDENTICAL to the distributed path and to F.percentile —
-    same rank arithmetic, same IEEE interpolation, different job
-    choreography only."""
-    rng = random.Random(7)
-    rows = [(f"g{i % 3}", rng.uniform(0, 500)) for i in range(2500)]
-    rows += [("g0", 250.0)] * 40  # ties
-    df = spark.createDataFrame(rows, "g string, v double").repartition(8)
-    fused = {
-        r["g"]: [r[n] for n in NAMES]
-        for r in exact_group_percentiles(
-            df, "g", "v", PS, NAMES, n_groups_hint=3
-        ).collect()
-    }
-    slow = {
-        r["g"]: [r[n] for n in NAMES]
-        for r in exact_group_percentiles(df, "g", "v", PS, NAMES).collect()
-    }
-    assert fused == slow  # bit-identical, not approximately equal
-    want = _reference(spark, df)
-    for g in want:
-        for a, b in zip(fused[g], want[g]):
-            assert math.isclose(a, b, rel_tol=0, abs_tol=1e-9), (g, a, b)
-
-
-def test_fused_path_empty_and_all_null_groups(spark):
+def test_empty_input_and_all_null_groups(spark):
     df = spark.createDataFrame(
         [("a", None), ("b", 5.0)], "g string, v double"
     )
     out = {
         r["g"]: (r["n_rows"], r["p50"])
-        for r in exact_group_percentiles(
-            df, "g", "v", [0.5], ["p50"], n_groups_hint=2
-        ).collect()
+        for r in hist_group_percentiles(df, "g", "v", [0.5], ["p50"]).collect()
     }
     assert out == {"b": (1, 5.0)}
-    empty = exact_group_percentiles(
+    empty = hist_group_percentiles(
         df.where(F.col("v").isNull() & F.col("v").isNotNull()),
-        "g", "v", [0.5], ["p50"], n_groups_hint=1,
+        "g", "v", [0.5], ["p50"],
     )
     assert empty.collect() == []
     assert [f.name for f in empty.schema.fields] == ["g", "n_rows", "p50"]
 
 
+def test_null_group_key_is_its_own_group(spark, monkeypatch):
+    """Like groupBy, a null group key forms a group; its probes must
+    still find their rows in the refinement and fetch passes."""
+    rng = random.Random(3)
+    rows = [(None if i % 2 else "a", rng.uniform(0, 10)) for i in range(400)]
+    df = spark.createDataFrame(rows, "g string, v double")
+    want = _reference(spark, df)
+    for forced in (False, True):
+        if forced:
+            _force_refinement(monkeypatch)
+        got = {
+            r["g"]: [r[n] for n in NAMES]
+            for r in hist_group_percentiles(df, "g", "v", PS, NAMES).collect()
+        }
+        assert got.keys() == want.keys() == {None, "a"}
+        for g in want:
+            for a, b in zip(got[g], want[g]):
+                assert math.isclose(a, b, rel_tol=0, abs_tol=1e-9), (g, a, b)
+
+
 # ---------------------------------------------------------------------------
-# weighted_median: differential vs a local reference implementation.
+# weighted_median_hist: differential vs a local reference implementation.
 # ---------------------------------------------------------------------------
 def _wmed_reference(rows):
-    """Lower weighted median per group: smallest v with 2*cum >= total."""
+    """Lower weighted median per group: smallest v with 2*cum >= total,
+    over the rows whose value and weight are both non-null."""
     from collections import defaultdict
 
     by_g = defaultdict(list)
     for g, v, w in rows:
-        by_g[g].append((v, int(w)))
+        if v is not None and w is not None:
+            by_g[g].append((v, int(w)))
     out = {}
     for g, pairs in by_g.items():
         pairs.sort()
@@ -152,46 +165,49 @@ def _wmed_reference(rows):
     return out
 
 
-@pytest.mark.parametrize("case", ["uniform", "ties", "odd_even", "one_row"])
-def test_weighted_median_matches_reference(spark, case):
-    from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-        weighted_median,
-    )
+def _wmed(df):
+    return {
+        r["g"]: (r["total_weight"], r["weighted_median"])
+        for r in weighted_median_hist(df, "g", "v", "w").collect()
+    }
 
+
+def _wmed_rows(case):
     rng = random.Random(7)
     if case == "uniform":
-        rows = [
+        return [
             (f"g{i % 3}", rng.uniform(0, 100), rng.randint(1, 9))
             for i in range(1500)
         ]
-    elif case == "ties":  # many repeated values, crossing lands on a tie run
-        rows = [
+    if case == "ties":  # many repeated values, crossing lands on a tie run
+        return [
             (f"g{i % 2}", float(rng.randint(0, 5)), rng.randint(1, 4))
             for i in range(800)
         ]
-    elif case == "odd_even":  # one group odd total weight, one even
-        rows = [("odd", 1.0, 1), ("odd", 2.0, 1), ("odd", 3.0, 1),
+    if case == "odd_even":  # one group odd total weight, one even
+        return [("odd", 1.0, 1), ("odd", 2.0, 1), ("odd", 3.0, 1),
                 ("even", 1.0, 2), ("even", 5.0, 2)]
-    else:
-        rows = [("solo", 42.5, 3)]
+    return [("solo", 42.5, 3)]
+
+
+@pytest.mark.parametrize("case", ["uniform", "ties", "odd_even", "one_row"])
+def test_weighted_median_matches_reference(spark, case):
+    """The null contract on every reference shape: rows with a null
+    value or a null weight are ignored. A null weight in a group that
+    goes straight to the fetch pass used to raise TypeError."""
+    rows = _wmed_rows(case)
+    groups = sorted({g for g, _, _ in rows})
+    rows += [(g, None, 5) for g in groups] + [(g, 0.5, None) for g in groups]
     df = spark.createDataFrame(rows, "g string, v double, w long")
-    got = {
-        r["g"]: (r["total_weight"], r["weighted_median"])
-        for r in weighted_median(df, "g", "v", "w").collect()
-    }
-    assert got == _wmed_reference(rows)
+    assert _wmed(df) == _wmed_reference(rows)
 
 
-def test_weighted_median_property(spark):
-    """Property check across generated shapes: duplicate-heavy values,
-    weight-1 degeneration to the plain lower median, negative values,
-    and a group landing entirely in one range slice."""
+def test_weighted_median_property(spark, monkeypatch):
+    """Property check across generated shapes, with and without forced
+    refinement: duplicate-heavy values, weight-1 degeneration to the
+    plain lower median, negative values."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-
-    from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-        weighted_median,
-    )
 
     rows_strategy = st.lists(
         st.tuples(
@@ -211,60 +227,30 @@ def test_weighted_median_property(spark):
     @given(rows=rows_strategy)
     def check(rows):
         df = spark.createDataFrame(rows, "g string, v double, w long")
-        got = {
-            r["g"]: (r["total_weight"], r["weighted_median"])
-            for r in weighted_median(df, "g", "v", "w").collect()
-        }
-        assert got == _wmed_reference(rows)
+        assert _wmed(df) == _wmed_reference(rows)
 
+    check()
+    _force_refinement(monkeypatch, fetch_cap=4, buckets=4)
     check()
 
 
 # ---------------------------------------------------------------------------
-# weighted_median_hist (r15): the shuffle-free histogram-refinement
-# twin must match the range-shuffle operator and the local reference on
-# every shape — including with the fetch cap forced tiny so the
-# histogram refinement loop (not just the direct fetch) is exercised.
+# weighted_median_hist with the fetch cap forced tiny, so the histogram
+# refinement loop (not just the direct fetch) is exercised.
 # ---------------------------------------------------------------------------
 @pytest.mark.parametrize("case", ["uniform", "ties", "odd_even", "one_row"])
 @pytest.mark.parametrize("fetch_cap", [None, 8])
 def test_weighted_median_hist_matches_reference(
     spark, case, fetch_cap, monkeypatch
 ):
-    from etl_pipeline_project_auraverse_spark.operators import order_stats
-
     if fetch_cap is not None:
         monkeypatch.setattr(order_stats, "HIST_FETCH_CAP", fetch_cap)
-
-    rng = random.Random(7)
-    if case == "uniform":
-        rows = [
-            (f"g{i % 3}", rng.uniform(0, 100), rng.randint(1, 9))
-            for i in range(1500)
-        ]
-    elif case == "ties":  # many repeated values, crossing lands on a tie run
-        rows = [
-            (f"g{i % 2}", float(rng.randint(0, 5)), rng.randint(1, 4))
-            for i in range(800)
-        ]
-    elif case == "odd_even":
-        rows = [("odd", 1.0, 1), ("odd", 2.0, 1), ("odd", 3.0, 1),
-                ("even", 1.0, 2), ("even", 5.0, 2)]
-    else:
-        rows = [("solo", 42.5, 3)]
+    rows = _wmed_rows(case)
     df = spark.createDataFrame(rows, "g string, v double, w long")
-    got = {
-        r["g"]: (r["total_weight"], r["weighted_median"])
-        for r in order_stats.weighted_median_hist(df, "g", "v", "w").collect()
-    }
-    assert got == _wmed_reference(rows)
+    assert _wmed(df) == _wmed_reference(rows)
 
 
 def test_weighted_median_hist_empty_and_schema(spark):
-    from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-        weighted_median_hist,
-    )
-
     df = spark.createDataFrame([("a", 1.0, 1)], "g string, v double, w long")
     empty = weighted_median_hist(
         df.where(F.col("v").isNull() & F.col("v").isNotNull()), "g", "v", "w"
@@ -275,16 +261,52 @@ def test_weighted_median_hist_empty_and_schema(spark):
     ]
 
 
+@pytest.mark.parametrize("dtype", ["bigint", "decimal(38,18)"])
+def test_weighted_median_hist_exact_on_wide_types(spark, dtype, monkeypatch):
+    """Refinement on values a double cannot tell apart: bigints near
+    2^60 (one double ulp there is 256) and decimal(38,18) values that
+    differ past the 16th significant digit. The bucket offset is taken
+    in the value's own type, so intervals keep narrowing and the result
+    is exact, in the value's own type."""
+    monkeypatch.setattr(order_stats, "HIST_FETCH_CAP", 4)
+    rng = random.Random(5)
+    if dtype == "bigint":
+        base, step = 2**60, 1
+    else:
+        base = Decimal("12345678901234567890.123456789012345678")
+        step = Decimal("0.000000000001")
+    with localcontext() as ctx:
+        ctx.prec = 60  # Python's default 28 digits would round the values
+        rows = [
+            (f"g{i % 2}", base + step * rng.randint(0, 500), rng.randint(1, 6))
+            for i in range(600)
+        ]
+    df = spark.createDataFrame(rows, f"g string, v {dtype}, w long")
+    got = _wmed(df)
+    assert got == _wmed_reference(rows)
+    assert all(type(m) is type(base) for _, m in got.values())
+
+
+def test_refinement_raises_when_interval_stays_heavy(spark, monkeypatch):
+    """One bucket per pass cannot narrow anything: after the last pass
+    the interval still holds more than HIST_FETCH_CAP rows, and the
+    core must say so instead of collecting it unbounded."""
+    monkeypatch.setattr(order_stats, "HIST_FETCH_CAP", 4)
+    monkeypatch.setattr(order_stats, "HIST_BUCKETS", 1)
+    rows = [("heavy", float(i), 1) for i in range(40)]
+    df = spark.createDataFrame(rows, "g string, v double, w long")
+    with pytest.raises(ValueError, match=r"'heavy' still holds 40 rows"):
+        weighted_median_hist(df, "g", "v", "w")
+    with pytest.raises(ValueError, match=r"'heavy' still holds 40 rows"):
+        hist_group_percentiles(df, "g", "v", [0.5])
+
+
 # ---------------------------------------------------------------------------
-# hist_group_percentiles: the shuffle-free histogram-refinement path
-# must be value-identical to the range-shuffle operator (and therefore
-# to F.percentile / quantile_cont) on every distribution shape,
-# including the bounds mode and the pathological single-value group
-# that exercises the zero-width-interval early exit.
+# hist_group_percentiles in its default configuration must be
+# value-identical to F.percentile / quantile_cont on every distribution
+# shape, including the bounds mode and the pathological single-value
+# group that exercises the zero-width-interval early exit.
 # ---------------------------------------------------------------------------
-from etl_pipeline_project_auraverse_spark.operators.order_stats import (  # noqa: E402
-    hist_group_percentiles,
-)
 
 
 @pytest.mark.parametrize(
@@ -349,16 +371,13 @@ def test_hist_percentiles_bounds_mode(spark):
 def test_hist_percentiles_refinement_loop(spark, monkeypatch):
     """Force multi-pass refinement (tiny fetch cap + coarse buckets) so
     the narrowing loop itself is exercised, not just the direct fetch."""
-    import etl_pipeline_project_auraverse_spark.operators.order_stats as os_mod
-
-    monkeypatch.setattr(os_mod, "HIST_FETCH_CAP", 20)
-    monkeypatch.setattr(os_mod, "HIST_BUCKETS", 16)
+    _force_refinement(monkeypatch, fetch_cap=20)
     rng = random.Random(13)
     rows = [(f"g{i % 2}", rng.uniform(0, 1.0)) for i in range(4000)]
     df = spark.createDataFrame(rows, "g string, v double").repartition(8)
     got = {
         r["g"]: [r[n] for n in NAMES]
-        for r in os_mod.hist_group_percentiles(df, "g", "v", PS, NAMES).collect()
+        for r in hist_group_percentiles(df, "g", "v", PS, NAMES).collect()
     }
     want = _reference(spark, df)
     for g in want:

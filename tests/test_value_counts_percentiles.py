@@ -1,9 +1,8 @@
-"""Focused tests for the r14 bounded-domain percentile operator.
+"""Focused tests for the bounded-domain percentile operator.
 
-``value_counts_percentiles`` replaced the range-shuffle percentile
-machinery for day-granularity datediff domains
-(q_fulfillment_latency, q_repeat_purchase_timing). Its contract is
-bit-identity with ``exact_group_percentiles`` — same pos = p·(n−1)
+``value_counts_percentiles`` serves day-granularity datediff domains
+(q_fulfillment_latency) with one value-count aggregate. Its contract is
+bit-identity with ``hist_group_percentiles`` — same pos = p·(n−1)
 rank arithmetic, same IEEE interpolation — so the tests compare the
 two operators directly on frames with ties, nulls, odd/even counts,
 and single-row groups.
@@ -15,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-    exact_group_percentiles,
+    hist_group_percentiles,
     value_counts_percentiles,
 )
 
@@ -43,7 +42,7 @@ def test_matches_exact_group_percentiles_with_ties_and_nulls(spark):
     df = spark.createDataFrame(data, "g string, v long")
     ps = [0.1, 0.25, 0.5, 0.9]
     got = value_counts_percentiles(df, "g", "v", ps)
-    want = exact_group_percentiles(df, "g", "v", ps, n_groups_hint=4)
+    want = hist_group_percentiles(df, "g", "v", ps)
     assert got.schema == want.schema
     assert _rows(got) == _rows(want)
 
@@ -52,7 +51,7 @@ def test_off_grid_interpolation_matches_engine_twin(spark):
     # Values chosen so p90 interpolates off-grid between DIFFERENT
     # neighbors (pos = 0.9*(7-1) = 5.4, frac carries float error), so
     # the interpolation formula itself is exercised, not just rank
-    # picks. The reference is the engine's long-attested operator:
+    # picks. The reference is the histogram-refinement operator:
     # both must compute v_lo + frac*(v_hi - v_lo) on float()-converted
     # neighbors. (NB: the installed DuckDB's quantile_cont evaluates
     # (1-frac)*lo + frac*hi, which can differ in the last ulp on
@@ -66,9 +65,7 @@ def test_off_grid_interpolation_matches_engine_twin(spark):
     )
     ps = [0.5, 0.9]
     got = value_counts_percentiles(df, "g", "v", ps, names=["p50", "p90"])
-    want = exact_group_percentiles(
-        df, "g", "v", ps, names=["p50", "p90"], n_groups_hint=1
-    )
+    want = hist_group_percentiles(df, "g", "v", ps, names=["p50", "p90"])
     assert _rows(got) == _rows(want)
     assert got.collect()[0]["n_rows"] == len(vals)
 
