@@ -109,21 +109,26 @@ def _try_date(s: Column) -> Column:
 def _render_date(s: Column) -> Column:
     """dateutil ``dt.isoformat()`` rendering (etl_pipeline.py:205):
     seconds always printed, microseconds only when nonzero, original
-    UTC offset re-attached after the fraction."""
+    UTC offset re-attached after the fraction. Null exactly when no
+    format of the battery parses ``s``."""
     suffix = (
         F.when(s.rlike("Z$"), F.lit("+00:00"))
         .when(s.rlike(r"[+-]\d{2}:\d{2}$"), F.regexp_extract(s, r"([+-]\d{2}:\d{2})$", 1))
         .otherwise(F.lit(""))
     )
-    ts = _try_date(s)
-    base = F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss")
-    frac = F.date_format(ts, "SSSSSS")
-    body = F.when(frac != "000000", F.concat(base, F.lit("."), frac)).otherwise(base)
-    return F.concat(body, suffix)
+    full = F.date_format(_try_date(s), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+    return F.concat(F.regexp_replace(full, r"\.000000$", ""), suffix)
 
 
 def normalize_expr(col: Column) -> Column:
-    """T1–T8 cascade → canonical string (Python ``str()`` renderings)."""
+    """T1–T8 cascade → canonical string (Python ``str()`` renderings).
+
+    The date battery is expanded once per column (T7 renders, and falls
+    back to T8 when the render is null). It is still the bulk of the
+    generated code: a projection with three or more ``full``-rule
+    columns exceeds the JVM's 64 KB method limit, and Spark logs the
+    compile error and runs that stage interpreted.
+    """
     s = F.trim(col.cast("string"))
     sl = F.lower(s)
     no_cur = F.trim(F.regexp_replace(s, r"[,$₹]", ""))
@@ -140,8 +145,7 @@ def normalize_expr(col: Column) -> Column:
         .when(s.rlike(PHONE_RE), F.regexp_replace(s, r"[^0-9]", ""))  # T5: phone digits
         .when(no_cur.rlike(INT_RE), no_cur.cast("long").cast("string"))  # T6: int
         .when(no_cur.rlike(FLOAT_RE), no_cur.cast("double").cast("string"))  # T6: float
-        .when(_try_date(s).isNotNull(), _render_date(s))  # T7: fuzzy date → ISO
-        .otherwise(sl)  # T8: lower fallback
+        .otherwise(F.coalesce(_render_date(s), sl))  # T7: fuzzy date → ISO, else T8 lower
     )
 
 

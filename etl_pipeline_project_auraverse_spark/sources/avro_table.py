@@ -15,9 +15,10 @@ types ride on their base primitive.
 
 Same two-stage mechanism as the XML/XLSX sources: binary file scan
 (one task per file, distributed) -> one JSON record string per row in
-Arrow-batched ``mapInPandas`` -> ``spark.read.json`` schema inference
-and the union-of-keys table (S13). ``bytes``/``fixed`` values render
-as latin-1 strings so they survive the JSON hop losslessly.
+Arrow-batched ``mapInPandas`` -> ``blocks.json_table`` schema
+inference and the union-of-keys table (S13). ``bytes``/``fixed``
+values render as latin-1 strings so they survive the JSON hop
+losslessly.
 """
 
 from __future__ import annotations
@@ -30,6 +31,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from etl_pipeline_project_auraverse_spark.sources.blocks import json_table
 
 _MAGIC = b"Obj\x01"
 
@@ -189,7 +192,7 @@ def read_avro_table(spark: SparkSession, path: str) -> DataFrame:
     JSON records -> distributed schema inference."""
     files = spark.read.format("binaryFile").load(path)
     records = avro_records(files)
-    return spark.read.json(records.rdd.map(lambda r: r["record_json"]))
+    return json_table(spark, records)
 
 
 # --------------------------------------------------------------------------

@@ -16,8 +16,10 @@ Re-expresses the reference's extract layer (S1–S14, reference
   CSV and YAML blocks (which need stateful per-block parsers) go through
   one Arrow-batched ``mapInPandas`` (S7/S8), HTML likewise (bs4 if
   available, else a regex fallback — the lib isn't in this container).
-- Table assembly: per-source-type ``spark.read.json`` (distributed
-  schema inference) then ``unionByName(allowMissingColumns=True)`` —
+- Table assembly: per source type, :func:`json_table` infers the
+  schema with the JVM JSON reader and parses with ``from_json``, so the
+  table stays a native plan over the cached records; the typed parts
+  are then combined with ``unionByName(allowMissingColumns=True)`` —
   the reference's ``pd.json_normalize`` union-of-heterogeneous-keys
   semantics (etl_pipeline.py:158) without a single-node materialize.
 
@@ -36,6 +38,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 
@@ -43,7 +46,10 @@ from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 BLOCK_PATTERNS: list[tuple[str, str, int]] = [
     ("json", r"\{[\s\S]+?\}", 0),  # embedded JSON objects (S5)
     ("json_arr", r"\[[\s\S]+?\]", 0),  # embedded JSON arrays (S6)
-    ("csv", r'((?:[\w" ]+,)+[\w" ]+\n(?:[^\n]*\n?)+)', 1),  # embedded CSV (S7)
+    # embedded CSV (S7): header line, then the rest of the text. `[\s\S]*`
+    # rather than a repeated per-line group, which Java's regex engine
+    # matches by recursing once per line (a stack overflow past ~2k lines)
+    ("csv", r'((?:[\w" ]+,)+[\w" ]+\n[\s\S]*)', 1),
     ("yaml", r"(?:[a-zA-Z0-9_]+:\s[^\n]+\n(?:\s+- .+\n)*)+", 0),  # YAML (S8)
     ("code", r"(def .+?:\n(?:\s+.+\n)*|print\(.+\))", 1),  # code blocks (S10)
     ("log", r"\[\d{4}-\d{2}-\d{2} .+?\] .+", 0),  # log lines (S11)
@@ -136,7 +142,7 @@ def scan_blocks(docs: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Block → JSON-record-string parsers. Everything funnels into JSON lines
-# so table assembly is a single mechanism (spark.read.json inference).
+# so table assembly is a single mechanism (json_table).
 # ---------------------------------------------------------------------------
 
 
@@ -303,14 +309,38 @@ def extract_records(docs: DataFrame, include_html: bool = True) -> DataFrame:
     return records.unionByName(empty)
 
 
+def json_table(spark: SparkSession, records: DataFrame) -> DataFrame:
+    """The typed table the JSON reader gives for the ``record_json``
+    strings of ``records``: its inferred schema, column order and
+    ``_corrupt_record`` column, without leaving the JVM.
+
+    PySpark's ``DataFrameReader.json`` takes only paths or RDDs, and the
+    RDD form returns a frame backed by a Python RDD that pickles every
+    row through a Python worker on each later action. So the schema is
+    inferred by the JVM reader's ``Dataset[String]`` overload (the one
+    the RDD form delegates to; one job) and the rows are parsed by
+    ``from_json`` in the plan.
+    """
+    lines = getattr(records.select("record_json")._jdf, "as")(
+        spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    )
+    inferred = spark._jsparkSession.read().json(lines).schema()
+    schema = T.StructType.fromJson(json.loads(inferred.json()))
+    return records.select(F.from_json("record_json", schema).alias("r")).select("r.*")
+
+
 def records_to_table(spark: SparkSession, records: DataFrame) -> DataFrame:
     """S13: union-of-keys table from heterogeneous JSON records.
 
-    Per-source-type distributed schema inference (``spark.read.json``),
-    then ``unionByName(allowMissingColumns=True)`` — missing keys become
-    nulls, matching ``pd.json_normalize`` (etl_pipeline.py:158). Nested
-    objects stay native StructType here; ``operators.flatten`` turns
-    them into flat columns.
+    The records are cached once; each source type is then typed by
+    :func:`json_table` (one schema-inference job, parsing in the plan)
+    and the parts are combined with
+    ``unionByName(allowMissingColumns=True)`` — missing keys become
+    nulls, matching ``pd.json_normalize`` (etl_pipeline.py:158). A type
+    whose records all fail to parse (schema ``_corrupt_record`` only)
+    is skipped, and the corrupt-record column is dropped from the rest.
+    Nested objects stay native StructType here; ``operators.flatten``
+    turns them into flat columns.
     """
     cached = persist_tracked(records)
     types = [r[0] for r in cached.select("source_type").distinct().collect()]
@@ -319,9 +349,9 @@ def records_to_table(spark: SparkSession, records: DataFrame) -> DataFrame:
         cond = (
             F.col("source_type").isNull() if typ is None else F.col("source_type") == typ
         )
-        part = cached.filter(cond)
-        js = spark.read.json(part.rdd.map(lambda r: r["record_json"]))
-        if js.isEmpty() or js.columns == ["_corrupt_record"]:
+        # each type comes from the records' own distinct(), so no part is empty
+        js = json_table(spark, cached.filter(cond))
+        if js.columns == ["_corrupt_record"]:
             continue
         js = js.drop("_corrupt_record")
         if typ is not None:

@@ -7,7 +7,7 @@ reader decodes all of that with ``zipfile`` + ``xml.etree`` inside the
 same two-stage mechanism as the other semi-structured sources
 (``sources/xml_table.py``): binary file scan (distributed) -> one JSON
 record string per data row via Arrow-batched ``mapInPandas`` ->
-``spark.read.json`` for distributed schema inference and the
+``blocks.json_table`` for distributed schema inference and the
 union-of-keys table (S13).
 
 Cell semantics (the subset every spreadsheet export uses):
@@ -37,6 +37,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from etl_pipeline_project_auraverse_spark.sources.blocks import json_table
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _COL_RE = re.compile(r"([A-Z]+)(\d+)")
@@ -174,7 +176,7 @@ def read_xlsx_table(spark: SparkSession, path: str) -> DataFrame:
     JSON records -> distributed schema inference."""
     files = spark.read.format("binaryFile").load(path)
     records = xlsx_records(files)
-    return spark.read.json(records.rdd.map(lambda r: r["record_json"]))
+    return json_table(spark, records)
 
 
 # --------------------------------------------------------------------------

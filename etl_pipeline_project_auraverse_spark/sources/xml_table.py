@@ -3,8 +3,9 @@
 The same two-stage mechanism as the embedded-format extractors
 (``sources/blocks.py``): files scan as binary (distributed), each
 row element serializes to a JSON record string inside Arrow-batched
-``mapInPandas``, then ``spark.read.json`` performs distributed schema
-inference and the union-of-keys row model (S13) falls out for free.
+``mapInPandas``, then ``blocks.json_table`` performs distributed
+schema inference and the union-of-keys row model (S13) falls out for
+free.
 No external XML library — ElementTree ships with CPython.
 
 Element mapping: each row element becomes one record; attributes key
@@ -20,6 +21,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from etl_pipeline_project_auraverse_spark.sources.blocks import json_table
 
 
 def _element_to_value(el) -> object:
@@ -92,4 +95,4 @@ def read_xml_table(
     keys table assembly as every other semi-structured source)."""
     files = spark.read.format("binaryFile").load(path)
     records = xml_records(files, row_tag=row_tag)
-    return spark.read.json(records.rdd.map(lambda r: r["record_json"]))
+    return json_table(spark, records)

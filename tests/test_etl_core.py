@@ -15,7 +15,11 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.operators import config_ops
 from etl_pipeline_project_auraverse_spark.operators.flatten import flatten_table
-from etl_pipeline_project_auraverse_spark.operators.normalize import normalize_expr, normalize_table
+from etl_pipeline_project_auraverse_spark.operators.normalize import (
+    normalize_expr,
+    normalize_table,
+    plan_normalization,
+)
 from etl_pipeline_project_auraverse_spark.operators.schema_profile import (
     diff_schemas,
     generate_schema,
@@ -154,6 +158,32 @@ def test_normalize_table_dispatch(spark):
     assert r["pct"] == "0.95"  # all-numeric-like → full normalize
     assert r["label"] == "mixed case"  # free text → trim+lower
     assert r["amt"] == "1200"  # currency column → int parse
+
+
+def test_normalize_full_rule_columns_compile(spark):
+    """Two full-rule columns stay within the JVM's 64 KB method limit:
+    with codegen fallback off, a compile failure would raise here."""
+    df = spark.createDataFrame(
+        [
+            ("2026-01-05T10:00:00", "95%"),
+            ("2026-01-05T10:00:00", "95%"),
+            ("2026-02-01T11:30:00.250000Z", "80%"),
+        ],
+        "a string, b string",
+    )
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        out = normalize_table(df)
+        assert [r.rule for r in plan_normalization(df)] == ["full", "full"]
+        assert config_ops.drop_duplicates(out).count() == 2
+        got = {(r["a"], r["b"]) for r in out.collect()}
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+    assert got == {
+        ("2026-01-05T10:00:00", "0.95"),
+        ("2026-02-01T11:30:00.250000+00:00", "0.8"),
+    }
 
 
 # ---------------------------------------------------------------------------

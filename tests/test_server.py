@@ -162,3 +162,19 @@ def test_mixed_text_upload(server):
     out = _post(f"http://127.0.0.1:{server.port}/run-etl", body, ctype)
     assert out["success"] is True, out
     assert len(out["table"]) >= 3  # json + csv + yaml/log/code records
+
+
+def test_long_csv_upload_keeps_the_session(server):
+    """A 5,000-row CSV block extracts whole (the block pattern must not
+    recurse per line: a stack overflow is fatal to the local JVM), and
+    the session still serves the next upload."""
+    rids = [f"r{i:05d}" for i in range(5000)]
+    rows = "".join(f"{r},n{i % 7},{i % 13}\n" for i, r in enumerate(rids))
+    payload = ("rid,name,qty\n" + rows).encode()
+    body, ctype = _multipart("long.csv", payload)
+    out = _post(f"http://127.0.0.1:{server.port}/run-etl", body, ctype)
+    assert out["success"] is True, out
+    assert {r["rid"] for r in out["table"]} == set(rids)
+
+    body, ctype = _multipart("simple.json", (FIXTURES / "simple.json").read_bytes())
+    assert _post(f"http://127.0.0.1:{server.port}/run-etl", body, ctype)["success"] is True
