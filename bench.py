@@ -581,13 +581,13 @@ def main() -> None:
         }
 
     # Cold-vs-warm index visibility (r14 verdict ask #7): within one
-    # bench process the memo_table system re-reads its parquet snapshot
-    # on runs 2..N, so headline minima for the memoized dedup/pq/graph
+    # bench process the memo_table checkpoints survive the clearCache
+    # between runs, so headline minima for the memoized dedup/pq/graph
     # families are WARM-index times. This block records, for one
     # representative per family, what the first-touch COLD build costs:
-    # memos released, memo dicts emptied, this application's snapshot
-    # dir deleted, then ONE timed run. Goes to BENCH_SWEEP.json and the
-    # preceding stdout line — never the final line.
+    # memo blocks freed, memo dicts emptied, then ONE timed run. Goes
+    # to BENCH_SWEEP.json and the preceding stdout line — never the
+    # final line.
     cold_index: dict[str, dict] = {}
     if "--headline-only" not in sys.argv:
         from etl_pipeline_project_auraverse_spark.cache import cold_reset

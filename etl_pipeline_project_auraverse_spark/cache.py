@@ -123,18 +123,16 @@ def register_checkpoint_ids(spark: SparkSession, ids: Iterable[int]) -> None:
 
 # Cross-query memoized builds (shared index artifacts: the IVFADC
 # scores table, the co-purchase pair graph) are deliberately NOT in
-# _LIVE_CACHES — release_caches() runs at every query start and would
-# defeat the sharing. They register here instead so tests (and any
-# caller that wants a truly cold engine) can drop them explicitly;
-# the owning memo dicts keep working afterwards — the getters detect
-# the lost cache and re-persist on next use.
-_LIVE_MEMOS: list = []
+# _LIVE_CACHES or _LIVE_CHECKPOINTS — release_caches() runs at every
+# query start and would defeat the sharing. Each memo is a final
+# localCheckpoint; its block ids are recorded here, keyed by id() of
+# the memo DataFrame, so release_memos() and corpus eviction can free
+# them.
+_MEMO_BLOCKS: dict[int, frozenset] = {}
 
-# Every dict ever handed to memo_table(), so cold_reset() can empty the
-# owners too (release_memos alone leaves the dicts pointing at released
-# DataFrames, which the getters would eagerly re-persist from their
-# snapshots — warm, not cold). Extra driver-value memos (e.g. the pq
-# trained-centroid rows) register a clearer callback here as well.
+# Every dict ever handed to memo_table(), so release_memos() can empty
+# the owners too. Extra driver-value memos (e.g. the pq trained-centroid
+# rows) register a clearer callback for cold_reset as well.
 _MEMO_DICTS: list = []
 _MEMO_CLEARERS: list = []
 
@@ -146,213 +144,33 @@ def register_memo_clearer(fn) -> None:
 
 
 def cold_reset(spark: SparkSession) -> None:
-    """Return the engine to a COLD-index state: unpersist every memo,
-    empty every memo dict, run registered clearers, and delete this
-    application's memo-snapshot directory — the next memoized query
-    pays the full index build, exactly like a fresh driver process.
-    Measurement hook only (the bench's cold-index stat); never called
-    on a query path."""
-    import shutil
-
+    """Return the engine to a COLD-index state: free every memo table,
+    empty every memo dict and run registered clearers — the next
+    memoized query pays the full index build, exactly like a fresh
+    driver process. Measurement hook only (the bench's cold-index
+    stat); never called on a query path. ``spark`` is unused: each
+    memo table carries its own session."""
     release_memos()
-    for d in _MEMO_DICTS:
-        d.clear()
     for fn in _MEMO_CLEARERS:
         try:
             fn()
         except Exception:
             pass
-    try:
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        if wh.startswith("file:"):
-            wh = wh[len("file:"):]
-        app = spark.sparkContext.applicationId
-        shutil.rmtree(
-            f"{wh.rstrip('/')}/memo_snapshots/{app}", ignore_errors=True
-        )
-    except Exception:
-        pass
 
 
-def track_memo(df):
-    """Register a memoized persisted DataFrame for explicit release."""
-    _LIVE_MEMOS.append(df)
-    return df
+def _drop_memo(memo: dict, key, blocking: bool) -> None:
+    df = memo.pop(key)
+    ids = _MEMO_BLOCKS.pop(id(df), None)
+    if ids:
+        unpersist_rdd_ids(df.sparkSession, ids, blocking=blocking)
 
 
 def release_memos(blocking: bool = True) -> None:
-    """Unpersist every tracked memo (idempotent, never raises)."""
-    while _LIVE_MEMOS:
-        df = _LIVE_MEMOS.pop()
-        try:
-            df.unpersist(blocking=blocking)
-        except Exception:
-            pass
-
-
-def memo_snapshot_path(spark: SparkSession, name: str, corpus_key: str) -> str:
-    """Per-(application, corpus) parquet location for a materialized
-    index table, under Spark's own warehouse dir."""
-    import hashlib
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    tag = hashlib.md5(corpus_key.encode()).hexdigest()[:12]
-    app = spark.sparkContext.applicationId
-    return f"{wh.rstrip('/')}/memo_snapshots/{app}/{name}_{tag}"
-
-
-# applicationIds whose superseded-snapshot GC already ran (get_spark
-# calls the GC on every build/fetch; one sweep per application is
-# enough and keeps repeated getOrCreate calls free).
-_GC_SEEN: set = set()
-
-_OWNER_FILE = "_OWNER"  # driver PID of the session that owns an app dir
-
-
-def _proc_start_time(pid: int):
-    """The process's kernel start time (clock ticks since boot, field
-    22 of ``/proc/<pid>/stat``) — the canonical PID-reuse discriminator
-    on Linux. ``None`` where /proc is unavailable (non-Linux) or the
-    process is gone."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as f:
-            stat = f.read()
-        # comm (field 2) may contain spaces/parens — parse after the
-        # LAST ')' per proc(5)
-        return int(stat.rsplit(b")", 1)[1].split()[19])
-    except (OSError, IndexError, ValueError):
-        return None
-
-
-def _mark_owner(snapshot_path: str) -> None:
-    """Record this driver's PID — plus hostname and kernel start time,
-    so the GC can detect PID reuse and foreign-host owners — in the
-    app-level snapshot dir. Liveness, not directory age, is what the
-    GC keys on (age cannot work: a full parity run exceeds an hour
-    while its early-written snapshots go stale-by-mtime, and a session
-    re-materializing a memo after a cache sweep re-reads those very
-    parquet files)."""
-    import os
-    import socket
-
-    local = (
-        snapshot_path[len("file:") :]
-        if snapshot_path.startswith("file:")
-        else snapshot_path
-    )
-    app_dir = os.path.dirname(local.rstrip("/"))
-    pid = os.getpid()
-    start = _proc_start_time(pid)
-    try:
-        os.makedirs(app_dir, exist_ok=True)
-        with open(os.path.join(app_dir, _OWNER_FILE), "w") as f:
-            f.write(f"{pid} {socket.gethostname()} {'' if start is None else start}")
-    except OSError:
-        pass  # bookkeeping must never mask the session's real work
-
-
-def _pid_alive(pid: int) -> bool:
-    import os
-
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # exists, owned by someone else
-    except OSError:
-        return True  # unknown — err on the safe side, keep the dir
-
-
-def _owner_state(owner_path: str) -> str:
-    """Classify an ``_OWNER`` file: ``"live"`` (skip the dir),
-    ``"dead"`` (remove immediately), or ``"unknown"`` (fall back to the
-    1 h mtime rule — missing/corrupt file, foreign-host owner whose
-    liveness this host cannot probe, or a PID-reuse suspect whose
-    start time doesn't match the recorded one)."""
-    import socket
-
-    try:
-        with open(owner_path) as f:
-            parts = f.read().split()
-        pid = int(parts[0])
-    except (OSError, IndexError, ValueError):
-        return "unknown"
-    host = parts[1] if len(parts) > 1 else socket.gethostname()
-    if host != socket.gethostname():
-        # a warehouse shared across hosts: a foreign PID existing (or
-        # not) locally says nothing about the remote driver
-        return "unknown"
-    if not _pid_alive(pid):
-        return "dead"
-    rec_start = int(parts[2]) if len(parts) > 2 and parts[2] else None
-    if rec_start is not None:
-        cur_start = _proc_start_time(pid)
-        if cur_start is not None and cur_start != rec_start:
-            return "unknown"  # PID recycled — the recorded owner is gone
-    return "live"
-
-
-def gc_memo_snapshots(spark: SparkSession) -> list[str]:
-    """Remove memo-snapshot directories left by SUPERSEDED sessions.
-
-    Snapshots are keyed per applicationId (:func:`memo_snapshot_path`)
-    and only the CURRENT application's directory is ever read — a prior
-    session's snapshots are dead weight that accumulates across
-    bench/parity/test sessions (measured: 126 MB over ~10 historical
-    app dirs after one round's cycle). Runs once per application at
-    session start and never touches the live application's directory.
-
-    Liveness is gated on the OWNING DRIVER PROCESS, not directory age:
-    each app dir carries an ``_OWNER`` file with the driver PID
-    (written by :func:`memo_table`); a dir whose owner is still running
-    is skipped no matter how old (a >1 h parity session keeps reading
-    snapshots it wrote in its first minutes — the age heuristic deleted
-    them out from under it), and a dir whose owner is provably gone
-    (same host, PID dead or kernel start time mismatched = recycled) is
-    removed immediately. Everything else — no owner file, a corrupt
-    one, or a FOREIGN-HOST owner whose liveness this host cannot probe
-    — falls back to the >1 h-mtime rule so a concurrent just-started or
-    remote session can't lose its directory. Returns the removed
-    directory names (for tests/telemetry)."""
-    import os
-    import shutil
-    import time
-
-    app = spark.sparkContext.applicationId
-    if app in _GC_SEEN:
-        return []
-    _GC_SEEN.add(app)
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    root = wh[len("file:") :] if wh.startswith("file:") else wh
-    base = os.path.join(root.rstrip("/"), "memo_snapshots")
-    removed: list[str] = []
-    try:
-        entries = os.listdir(base)
-    except OSError:
-        return removed
-    cutoff = time.time() - 3600.0
-    for d in entries:
-        if d == app:
-            continue
-        p = os.path.join(base, d)
-        try:
-            if not os.path.isdir(p):
-                continue
-            state = _owner_state(os.path.join(p, _OWNER_FILE))
-            if state == "live":
-                continue  # live same-host session — never remove, however old
-            if state == "unknown" and os.path.getmtime(p) >= cutoff:
-                # unowned / foreign-host / PID-recycled dirs get the 1 h
-                # age grace instead of immediate removal — a live remote
-                # driver's PID not existing locally proves nothing
-                continue
-            shutil.rmtree(p)
-            removed.append(d)
-        except OSError:
-            pass  # cleanup must never mask the session's real work
-    return removed
+    """Free every memo table's blocks and empty the memo dicts — the
+    next call rebuilds (idempotent, never raises)."""
+    for memo in _MEMO_DICTS:
+        for key in list(memo):
+            _drop_memo(memo, key, blocking)
 
 
 def memo_table(
@@ -360,43 +178,39 @@ def memo_table(
     spark: SparkSession,
     corpus_key: str,
     build_plan,
-    snapshot_path: str,
+    name: str,
     subkey: str = "",
 ) -> DataFrame:
-    """Per-(application, corpus) MATERIALIZED index table — built once,
-    written to a parquet snapshot, persisted outside the per-query
-    cache registry (at most one corpus held per memo dict).
+    """Per-(application, corpus) MATERIALIZED index table: ``build_plan()``
+    is localCheckpointed once and kept in ``memo`` outside the
+    per-query cache registry (at most one corpus held per memo dict;
+    same-corpus siblings under different ``subkey`` coexist). ``name``
+    labels the build's Spark jobs.
 
-    Recovery after a cache sweep (``catalog.clearCache()`` /
-    ``release_memos()``): ``storageLevel`` — not ``is_cached``, which
-    reflects only the persist REQUEST — detects the lost cache, and
-    re-materialization is an EAGER re-read of the compact snapshot
-    (consumers scan these tables several times, often twice inside one
-    job, where a lazily-populating cache double-computes partitions —
-    measured 7 -> 18 s on k-core), never a re-derivation of the build
-    plan from base tables.
+    Checkpoint blocks are not held by Spark's CacheManager, so
+    ``catalog.clearCache()`` leaves a memo intact and its plan never
+    re-derives from base tables; ``release_memos()`` frees it. The
+    trade-off: a memo lives in the executors' block managers, like
+    every other localCheckpoint in the package, so losing an executor
+    loses the memo's data rather than leaving a copy to re-read.
     """
     key = (spark.sparkContext.applicationId, corpus_key, subkey)
     if all(d is not memo for d in _MEMO_DICTS):
         _MEMO_DICTS.append(memo)
-    _mark_owner(snapshot_path)  # liveness marker for gc_memo_snapshots
     hit = memo.get(key)
     if hit is not None:
-        lvl = hit.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            track_memo(hit.persist())
-            hit.count()
         return hit
-    # evict other CORPORA only: same-corpus siblings (different subkey,
-    # e.g. the plain and residual IVFADC scores) coexist
     for k in [k for k in memo if k[:2] != key[:2]]:
-        try:
-            memo.pop(k).unpersist(blocking=False)
-        except Exception:
-            pass
-    build_plan().write.mode("overwrite").parquet(snapshot_path)
-    df = spark.read.parquet(snapshot_path).persist()
-    track_memo(df)
-    df.count()  # materialize now; survives the per-query cache sweep
+        _drop_memo(memo, k, blocking=False)
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        df, ids = local_checkpoint_tracked(build_plan())
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    # the build may also have materialized per-query caches, which stay
+    # with their own registry: the memo owns only its checkpoint RDD
+    _MEMO_BLOCKS[id(df)] = ids & {df._jdf.logicalPlan().rdd().id()}
     memo[key] = df
     return df

@@ -44,12 +44,6 @@ def has_cartesian(df: DataFrame) -> bool:
     return "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    """Number of distinct WholeStageCodegen regions (fewer/wider is
-    better — each `*(n)` id marks one fused pipeline)."""
-    return len(set(re.findall(r"\*\((\d+)\)", physical_plan(df))))
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """Filters that reached the parquet scan (PushedFilters: [...])."""
     out: list[str] = []

@@ -32,91 +32,9 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 # Registration order is deliberate: the external correctness harness
-# samples ~50 queries in dict-insertion order, so coverage ROTATES per
-# round via the _FRONT list below (module import order alone can't
-# express "these two TPC-H queries plus eight whole families first").
-# History: r1-r3 led relational/TPC-H (green by r3), r4 led dedup/
-# similarity/profiling/curation (green in r4), r5 re-attested
-# relational/TPC-H + the statistical additions. Round 6 leads with the
-# families that have NEVER had a driver row — search, dq, layout, cdc,
-# chunking, sketches, robust, pq, sequences, graph representatives —
-# plus the de-vacuated q08/q22 (their r5 greens matched the oracle at
-# 0 rows) and the new two-iteration k-means training query.
-# Round 8 executes the rotation the r7 verdict pinned (ask #2): ALL 45
-# queries that had never had a driver row entering r8 (the exact
-# never_attested list in ATTESTATION.json after r7; the r7 judge
-# oracle-verified every one at sf0.01 independently), plus the FIVE
-# queries NEW in r8 (MP4 container gate — r7 ask #6 — and the audio
-# gate twin, Matryoshka recall, weighted median, k-core peel), which
-# exactly fills the 50 slots. After a green r8, never-attested = 0
-# across the whole registry, including everything added this round.
-# Round 9 executes that plan: the three late-r8 additions lead, then
-# q_array_functions_per_order (red in r4 — the registry's only
-# red-never-green oracle entry — since fixed and green in every
-# committed parity log), then the FOUR queries new in r9 (exactly-once
-# rollup replay attestation — r8 verdict ask #4 — Levenshtein-blocked
-# near-dup, MRR@10 search eval, grouped closed-form OLS), then the
-# AGE refresh: q_price_histogram (last green r3) and the oldest 41 of
-# the 45 r4-attested entries. The four r4 entries that did not fit
-# (q_text_top_sources, q_user_first_last_event, q_user_funnel,
-# q_window_analytics_battery — plus q_text_token_counts, displaced by
-# the late-r9 mixture-allocation query) lead the r10 age refresh
-# together with the remaining r5 block.
-# Round 10 executes that plan: the SIX queries new/newly-oracle-backed
-# in r10 lead (trained-BPE argmax-trajectory oracle — r9 verdict ask
-# #5 — cross-source contamination matrix, unigram-LM cross-entropy,
-# vocab coverage curve, percentile length-band filter, blocked-GEMM
-# kNN label-consistency audit), then the 5 deferred r4 names, then the
-# oldest 37 of the 48 r5-attested entries (two late-r10
-# additions — the interval-join stream twin and the Bloom-prefiltered
-# decontamination — displaced the 38th/39th).
-# The 13 second-half additions (winnowing … keep-policy) lead the
-# front, so the ~50-slot sample now ends inside the r5 tranche: the 24
-# r5 names through q_scalar_math_functions stay in-sample; the 13
-# after them (q_topk_orders_by_price, q10, q13, q14, q18, q02, q07,
-# q09, q12, q15, q17, q19, q21) are displaced to r11.
-# Round 11 executes that plan (r10 verdict ask #3): the 12 queries NEW
-# in r11 lead (six cross-modal audits — image-caption, image-dup x
-# caption diversity, CLIP stripe alignment, audio sync, video density,
-# retrieval recall — plus Zipf fit, per-doc perplexity filter,
-# temperature sampling, k-center seeding, length x quality census,
-# truncation loss), then the ENTIRE 26-name r5 tranche (the oldest
-# attestations after the r10 fold), then the 12 oldest r6 names —
-# exactly 50 slots.
-# Round 12 executes that plan (r11 verdict ask #2): the SIX queries
-# new in r12 lead (SemDeDup over trained k-means clusters, plus the
-# five real-decoder oracle gates — PNG all-filters, DC-only baseline
-# JPEG, two-scan progressive JPEG, interlaced GIF, big-endian PackBits
-# TIFF), then the ENTIRE remaining 38-name r6 tranche (the registry's
-# oldest attestations after the r11 fold — and it happens to re-attest
-# q_ann_pq_recall / q_ann_ivf_trained / q_ann_ivfadc_recall, whose
-# truth arms were GEMM-ported this round), then the 8 oldest r7 names
-# (which include q_dedup_containment, whose band-candidate generation
-# changed this round) — 52 pinned, so the ~50-slot sample ends at
-# q_dedup_containment and the last two r7 pins roll to r13.
-# Round 13 executes that plan (r12 verdict ask #1): the THREE queries
-# new in r13 lead (the audio codec gates — G.711 mu-law, G.711 A-law
-# and IMA-ADPCM WAV decode, r12 ask #5), then the ENTIRE remaining
-# 44-name r7 tranche (the registry's oldest attestations after the
-# r12 fold; registry order), then q_ann_lsh_recall — not an age pick
-# but the round's one materially CHANGED query (its exact truth arm
-# moved to the blocked-GEMM idiom per r12 ask #3), pinned so the
-# driver itself attests the change rather than leaving it parity-only
-# — then the 3 oldest r8 names. 51 pinned, so the ~50-slot sample
-# ends at q_map_functions_per_order and the last r8 age fill
-# (q_null_semantics_battery — sf0.1-re-verified this round in
-# PARITY_SF01_r13.log regardless) rolls to r14, the r12 precedent.
-# NEXT ROUND (r14): front-pin anything newly registered, then the
-# remaining 47 r8-attested names (q_null_semantics_battery, then
-# q_bpe_apply_fixed_merges and everything after it in registry
-# order), then fill by age from ATTESTATION.json.
-# Round 15 (r14 verdict ask #3): the optimization rounds changed ~35
-# query paths and the r14 sample covered almost none of them, so the
-# rotation pins the full r14+r15 touched set first (35 names), then
-# fills the remaining slots with the oldest r8-attested names. The
-# r8 tranche continues next round (q_source_diversity_by_lang onward).
-# NEXT ROUND (r16): front-pin anything newly changed, then continue
-# the r8-attested fill by age from ATTESTATION.json.
+# samples ~50 queries in dict-insertion order, so _FRONT (below) pins
+# the names a round must attest ahead of module import order. Per-query
+# attestation history (green rounds, last green) is in ATTESTATION.json.
 _MODULES = [
     "etl_pipeline_project_auraverse_spark.queries.relational",
     "etl_pipeline_project_auraverse_spark.queries.tpch_extra",

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_project_auraverse_spark.cache import memo_table
 from etl_pipeline_project_auraverse_spark.functions.text import h28, h60, norm_text, shingles, words
 from etl_pipeline_project_auraverse_spark.functions.vectors import cosine, sql_cosine
 from etl_pipeline_project_auraverse_spark.queries import register
@@ -91,25 +92,19 @@ _SHINGLE_MEMO: dict = {}
 
 
 def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized, disk-snapshotted :func:`_shingle_hashes` over the
-    standard documents table (see ``cache.memo_table`` for the
-    recovery contract)."""
-    from etl_pipeline_project_auraverse_spark.cache import (
-        memo_snapshot_path,
-        memo_table,
-    )
+    """Memoized :func:`_shingle_hashes` over the standard documents
+    table (see ``cache.memo_table`` for the memo lifecycle)."""
 
     def build() -> DataFrame:
-        # full-parallelism snapshot files: the consumers do window-heavy
-        # work straight off the cached scan (df counts over h, per-doc
-        # ranks), so a few-partition snapshot would serialize them
-        # (measured: prefix filter 3.2 s -> 8.6 s on an 8-file snapshot)
+        # full-parallelism memo partitions: the consumers do window-heavy
+        # work straight off the memo (df counts over h, per-doc ranks),
+        # so a few-partition table would serialize them (measured:
+        # prefix filter 3.2 s -> 8.6 s on an 8-partition table)
         return _shingle_hashes(load_table(spark, sf_dir, "documents")).repartition(
             spark.sparkContext.defaultParallelism, "h"
         )
 
-    snap = memo_snapshot_path(spark, "shingle_index", f"{sf_dir}|3gram")
-    return memo_table(_SHINGLE_MEMO, spark, sf_dir, build, snap)
+    return memo_table(_SHINGLE_MEMO, spark, sf_dir, build, "shingle_index")
 
 
 # The DF-capped representation and the exact pair-statistics table
@@ -121,8 +116,8 @@ def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # maintained at ingest (q_dedup_incremental_minhash is that shape);
 # rebuilding it inside every consumer is the anti-pattern the memo
 # removes. Pair stats hold INTEGER sufficient statistics only —
-# Jaccard ratios are recomputed by each consumer, so the snapshot
-# never stores engine-dependent floats.
+# Jaccard ratios are recomputed by each consumer, so the memo never
+# stores engine-dependent floats.
 _CAPPED_MEMO: dict = {}
 _PAIR_MEMO: dict = {}
 
@@ -130,10 +125,6 @@ _PAIR_MEMO: dict = {}
 def capped_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized DF-capped distinct (doc_id, h): shingles with document
     frequency > ``DF_CAP`` removed from the representation."""
-    from etl_pipeline_project_auraverse_spark.cache import (
-        memo_snapshot_path,
-        memo_table,
-    )
 
     def build() -> DataFrame:
         raw = shingle_index(spark, sf_dir)
@@ -146,8 +137,7 @@ def capped_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext.defaultParallelism, "h"
         )
 
-    snap = memo_snapshot_path(spark, "shingle_capped", f"{sf_dir}|3gram|cap{DF_CAP}")
-    return memo_table(_CAPPED_MEMO, spark, sf_dir, build, snap)
+    return memo_table(_CAPPED_MEMO, spark, sf_dir, build, "shingle_capped")
 
 
 PAIR_MEMO_MIN_J = 0.5  # every consumer thresholds at >= this
@@ -161,15 +151,11 @@ def capped_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The raw any-shared-shingle pair table is ~200x larger (1.13M rows
     vs 256 at sf0.1) and NO consumer reads below J=0.5, so the
-    threshold belongs inside the maintained table: the snapshot stays
+    threshold belongs inside the maintained table: the memo stays
     compact at any corpus size while the expensive self-join+aggregate
     still runs exactly once. Integer columns only — each consumer
     recomputes its own Jaccard, so no engine-dependent floats are
     stored."""
-    from etl_pipeline_project_auraverse_spark.cache import (
-        memo_snapshot_path,
-        memo_table,
-    )
 
     def build() -> DataFrame:
         shc = capped_shingle_index(spark, sf_dir)
@@ -199,10 +185,7 @@ def capped_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(jac >= PAIR_MEMO_MIN_J)
         )
 
-    snap = memo_snapshot_path(
-        spark, "pair_stats", f"{sf_dir}|3gram|cap{DF_CAP}|j{PAIR_MEMO_MIN_J}"
-    )
-    return memo_table(_PAIR_MEMO, spark, sf_dir, build, snap)
+    return memo_table(_PAIR_MEMO, spark, sf_dir, build, "pair_stats")
 
 
 # ---------------------------------------------------------------------------
@@ -872,7 +855,7 @@ def _clusters_oracle() -> str:
 # readout, the size histogram (via it), and the keep-policy study all
 # consume the same (doc_id, cluster_id) fixpoint. The closure is the
 # single most expensive dedup derivation (iterative hash-min rounds),
-# so it runs once per corpus and snapshots compactly (rows = clustered
+# so it runs once per corpus into a compact memo (rows = clustered
 # docs only).
 _CLUSTER_MEMO: dict = {}
 
@@ -880,10 +863,6 @@ _CLUSTER_MEMO: dict = {}
 def cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (doc_id, cluster_id) fixpoint of the >= 0.8-Jaccard
     near-dup graph's transitive closure."""
-    from etl_pipeline_project_auraverse_spark.cache import (
-        memo_snapshot_path,
-        memo_table,
-    )
 
     def build() -> DataFrame:
         from etl_pipeline_project_auraverse_spark.operators.components import (
@@ -909,8 +888,7 @@ def cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id")
         )
 
-    snap = memo_snapshot_path(spark, "clusters", f"{sf_dir}|3gram|cap{DF_CAP}|j0.8")
-    return memo_table(_CLUSTER_MEMO, spark, sf_dir, build, snap)
+    return memo_table(_CLUSTER_MEMO, spark, sf_dir, build, "clusters")
 
 
 @register("q_dedup_clusters", oracle=_clusters_oracle())

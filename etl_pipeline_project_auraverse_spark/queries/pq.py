@@ -61,6 +61,7 @@ _TRAINED_CENT_MEMO: dict = {}
 # cold_reset (the bench's cold-index stat) must drop the driver-value
 # memos too, not just the memo_table DataFrames.
 from etl_pipeline_project_auraverse_spark.cache import (  # noqa: E402
+    memo_table,
     register_memo_clearer,
 )
 
@@ -1221,7 +1222,7 @@ def _ivfadc_residual_scores(emb: DataFrame) -> DataFrame:
 # Cross-query shared index: in a real deployment the IVFADC index
 # (coarse assignments, residual codes, LUTs) is built ONCE and every
 # search reuses it; here `_topk` and `_recall` would otherwise each
-# rebuild the identical scores subplan. The memo persists the scored
+# rebuild the identical scores subplan. The memo materializes the scored
 # candidate table (|Q| x nprobe x block rows — tiny) OUTSIDE the
 # per-query cache registry, keyed by (application, corpus), evicting
 # any previous corpus so at most one index is ever held. Values are
@@ -1234,21 +1235,13 @@ def _shared_scores(
     builder, tag: str, emb: DataFrame, spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Memoize a scores table per (application, corpus, index kind);
-    see the block comment above. Disk-snapshotted via
-    ``cache.memo_table`` since r10: recovery after a cache sweep
-    re-reads the tiny candidate table instead of replaying the whole
-    IVF/PQ index build from the embeddings (which is what the old
-    lazy re-persist cost on the consumer's next action — the memoized
-    plan WAS the build DAG). The plain and residual kinds coexist per
-    corpus via the subkey."""
-    from etl_pipeline_project_auraverse_spark.cache import (
-        memo_snapshot_path,
-        memo_table,
-    )
-
-    snap = memo_snapshot_path(spark, f"ivfadc_scores_{tag}", f"{sf_dir}|{tag}")
+    see the block comment above. ``cache.memo_table`` checkpoints the
+    tiny candidate table, so a cache sweep leaves it intact and no
+    consumer replays the IVF/PQ index build from the embeddings. The
+    plain and residual kinds coexist per corpus via the subkey."""
     return memo_table(
-        _SCORES_MEMO, spark, sf_dir, lambda: builder(emb), snap, subkey=tag
+        _SCORES_MEMO, spark, sf_dir, lambda: builder(emb), f"ivfadc_scores_{tag}",
+        subkey=tag,
     )
 
 

@@ -116,16 +116,6 @@ def get_spark(
             stacklevel=2,
         )
     spark.sparkContext.setLogLevel("WARN")
-    # Superseded memo-snapshot GC (once per application): prior
-    # sessions' per-appId snapshot dirs are never read again and would
-    # otherwise grow the warehouse without bound across bench/parity
-    # cycles.
-    try:
-        from etl_pipeline_project_auraverse_spark.cache import gc_memo_snapshots
-
-        gc_memo_snapshots(spark)
-    except Exception:
-        pass
     return spark
 
 

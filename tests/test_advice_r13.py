@@ -1,8 +1,6 @@
 """Pins for the round-13 ADVICE fixes (the test_advice_r12 precedent):
 single-strip TIFF conformance, empty-query-set GEMM guard, the
-SemDeDup k constant share, and the chosen-attempt telemetry. The
-owner-GC hostname/start-time hardening is pinned in test_memos.py
-(test_snapshot_gc_foreign_host_and_pid_reuse_get_age_grace)."""
+SemDeDup k constant share, and the chosen-attempt telemetry."""
 
 from __future__ import annotations
 

@@ -1,13 +1,18 @@
 """Cross-query memoized index builds (the shared IVFADC scores table,
-co-purchase pair graph, logreg weights): identity, release, and
-clearCache-recovery contracts. These memos live OUTSIDE the per-query
-cache registry, so their lifecycle needs its own pins — a silent drop
-would turn the shared builds back into per-query rebuilds, and a
-broken recovery would crash every consumer after catalog.clearCache().
+co-purchase pair graph, dedup maintained tables, logreg weights):
+identity, sharing and release contracts. These memos live OUTSIDE the
+per-query cache registry, so their lifecycle needs its own pins — a
+silent drop would turn the shared builds back into per-query rebuilds,
+and a leaked block would hold a corpus's index for the whole session.
 """
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
+from etl_pipeline_project_auraverse_spark import cache as C
 from etl_pipeline_project_auraverse_spark.cache import release_memos
 from etl_pipeline_project_auraverse_spark.queries import QUERIES, load_all
 
@@ -18,35 +23,44 @@ def _rows(spark, name, sf_dir):
     return sorted(map(tuple, QUERIES[name](spark, sf_dir).collect()))
 
 
-def _live(df) -> bool:
-    # is_cached reflects the persist REQUEST and survives clearCache;
-    # storageLevel asks the cache manager (the real liveness signal)
-    lvl = df.storageLevel
-    return lvl.useMemory or lvl.useDisk
+def _blocks(df) -> frozenset:
+    """The checkpoint RDD ids memo_table recorded for a memo table."""
+    return C._MEMO_BLOCKS.get(id(df), frozenset())
+
+
+def _live(spark, df) -> bool:
+    # a memo is live while its recorded checkpoint blocks are pinned
+    ids = _blocks(df)
+    return bool(ids) and ids <= C.persistent_rdd_ids(spark)
+
+
+def _scans_base_table(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "lineitem" in plan or "documents" in plan
 
 
 def test_ivfadc_memo_identity_and_recovery(spark, sf_dir):
     """Both IVFADC consumers must return identical values whether the
-    scores table is freshly built, memo-reused, cleared by
-    catalog.clearCache(), or dropped by release_memos()."""
+    scores table is freshly built, memo-reused, kept through
+    catalog.clearCache(), or dropped by release_memos() and rebuilt."""
     import etl_pipeline_project_auraverse_spark.queries.pq as pq
 
     first = _rows(spark, "q_ann_ivfadc_residual_topk", sf_dir)
     assert pq._SCORES_MEMO, "build did not register in the memo"
     memo_df = next(iter(pq._SCORES_MEMO.values()))
-    assert _live(memo_df)
+    assert _live(spark, memo_df)
 
     again = _rows(spark, "q_ann_ivfadc_residual_topk", sf_dir)
     assert again == first  # memo hit, same values
 
     spark.catalog.clearCache()
-    assert not _live(memo_df)
-    recovered = _rows(spark, "q_ann_ivfadc_residual_topk", sf_dir)
-    assert recovered == first  # re-persisted transparently
-    assert _live(memo_df)
+    assert _live(spark, memo_df)  # checkpoint blocks survive clearCache
+    kept = _rows(spark, "q_ann_ivfadc_residual_topk", sf_dir)
+    assert kept == first
+    assert next(iter(pq._SCORES_MEMO.values())) is memo_df
 
     release_memos()
-    assert not _live(memo_df)
+    assert not _live(spark, memo_df) and not pq._SCORES_MEMO
     dropped = _rows(spark, "q_ann_ivfadc_residual_topk", sf_dir)
     assert dropped == first
 
@@ -78,71 +92,114 @@ def test_logreg_weight_memo_is_deterministic(spark, sf_dir):
 
 
 def test_pair_memo_clearcache_recovery_end_to_end(spark, sf_dir):
-    """The r9 verdict's driver-order pin: kcore → clearCache → kcore
-    must RECOVER the pair-graph memo (re-persist + eager materialize
-    from the parquet snapshot), not rebuild per scan. Fails if the
-    liveness check regresses to ``is_cached`` (which stays True after
-    clearCache, so recovery would never fire) or if the snapshot-read
-    plan regresses to a lineitem re-derivation."""
+    """The driver-order pin: kcore → clearCache → kcore. The driver's
+    bench clears the cache before every query, and that must leave the
+    pair-graph memo in place — same DataFrame object, same checkpoint
+    blocks, and a plan that scans the checkpoint, never lineitem."""
     import etl_pipeline_project_auraverse_spark.queries.graph as graph
 
     first = _rows(spark, "q_kcore_copurchase", sf_dir)
     ((key, memo),) = list(graph._PAIRS_MEMO.items())
-    assert _live(memo)
+    blocks = _blocks(memo)
+    assert _live(spark, memo)
 
     spark.catalog.clearCache()
-    lvl = memo.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk)  # really dropped
-    # Pin WHY is_cached is the wrong signal: it still claims cached.
-    # If a future Spark makes is_cached reflect real liveness, this
-    # assert flags that the recovery comment/logic deserve a re-look.
-    assert memo.is_cached
-
     assert _rows(spark, "q_kcore_copurchase", sf_dir) == first
-    memo2 = graph._PAIRS_MEMO[key]
-    assert memo2 is memo  # recovered in place, not rebuilt
-    assert _live(memo2)  # re-persisted by the liveness check
-    # eagerly MATERIALIZED, not just re-marked: cached partitions exist
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    assert any(i.numCachedPartitions() > 0 for i in infos)
-    # and the memo scans the compact snapshot, not lineitem
-    # (inputFiles() is empty on a cached DF; the physical plan's
-    # FileScan location is the reliable handle)
-    plan = memo2._jdf.queryExecution().sparkPlan().toString()
-    assert "memo_snapshots" in plan
-    assert "lineitem" not in plan
+    assert graph._PAIRS_MEMO[key] is memo  # kept, not rebuilt
+    assert _blocks(memo) == blocks and _live(spark, memo)
+    assert not _scans_base_table(memo)
 
 
 def test_dedup_maintained_tables_memo_recovery(spark, sf_dir):
-    """The r10 dedup maintained tables (capped shingle index, J>=0.5
+    """The dedup maintained tables (shingle index, capped index, J>=0.5
     pair stats, cluster assignments) share the same lifecycle contract
     as the older memos: consumers return identical values on fresh
-    build, memo hit, clearCache recovery, and release_memos rebuild."""
+    build, memo hit, after clearCache (which keeps every table and its
+    blocks, with no documents re-scan), and after a release_memos
+    rebuild."""
     import etl_pipeline_project_auraverse_spark.queries.dedup as dedup
 
     first = _rows(spark, "q_dedup_ngram_jaccard", sf_dir)
     clusters = _rows(spark, "q_dedup_clusters", sf_dir)
-    assert dedup._CAPPED_MEMO and dedup._PAIR_MEMO and dedup._CLUSTER_MEMO
-    pair_df = next(iter(dedup._PAIR_MEMO.values()))
-    cluster_df = next(iter(dedup._CLUSTER_MEMO.values()))
-    assert _live(pair_df) and _live(cluster_df)
+    memos = [dedup._SHINGLE_MEMO, dedup._CAPPED_MEMO, dedup._PAIR_MEMO,
+             dedup._CLUSTER_MEMO]
+    tables = [next(iter(m.values())) for m in memos]
+    blocks = [_blocks(df) for df in tables]
+    assert all(_live(spark, df) for df in tables)
 
     spark.catalog.clearCache()
-    assert not _live(pair_df) and not _live(cluster_df)
     assert _rows(spark, "q_dedup_ngram_jaccard", sf_dir) == first
     assert _rows(spark, "q_dedup_clusters", sf_dir) == clusters
-    assert _live(pair_df) and _live(cluster_df)
+    assert all(next(iter(m.values())) is df for m, df in zip(memos, tables))
+    assert [_blocks(df) for df in tables] == blocks
+    assert all(_live(spark, df) for df in tables)
+    assert not any(_scans_base_table(df) for df in tables)
 
     release_memos()
+    assert not any(_live(spark, df) for df in tables)
     assert _rows(spark, "q_dedup_keep_policy_impact", sf_dir) == _rows(
         spark, "q_dedup_keep_policy_impact", sf_dir
     )
     assert _rows(spark, "q_dedup_ngram_jaccard", sf_dir) == first
 
 
+def test_release_memos_frees_blocks(spark, sf_dir):
+    """release_memos() must unpin every memo block and empty the memo
+    dicts; the next call rebuilds a table with identical rows."""
+    import etl_pipeline_project_auraverse_spark.queries.dedup as dedup
+
+    ps = dedup.capped_pair_stats(spark, sf_dir)
+    rows = sorted(map(tuple, ps.collect()))
+    ids = frozenset().union(*C._MEMO_BLOCKS.values())
+    assert _blocks(ps) and ids <= C.persistent_rdd_ids(spark)
+
+    release_memos()
+    assert not ids & C.persistent_rdd_ids(spark)
+    assert not C._MEMO_BLOCKS and not any(C._MEMO_DICTS)
+    rebuilt = dedup.capped_pair_stats(spark, sf_dir)
+    assert rebuilt is not ps
+    assert sorted(map(tuple, rebuilt.collect())) == rows
+
+
+def test_corpus_switch_frees_old_blocks(spark, sf_dir):
+    """A memo dict holds one corpus: building the shingle index for a
+    second sf_dir must unpin the first corpus's blocks."""
+    import etl_pipeline_project_auraverse_spark.queries.dedup as dedup
+
+    root = os.path.dirname(sf_dir.rstrip("/"))
+    small, large = (os.path.join(root, f"sf{s}") for s in ("0.001", "0.01"))
+    if not (os.path.isdir(small) and os.path.isdir(large)):
+        pytest.skip("needs the sf0.001 and sf0.01 datasets side by side")
+    try:
+        old = dedup.shingle_index(spark, small)
+        old_ids = _blocks(old)
+        assert old_ids and old_ids <= C.persistent_rdd_ids(spark)
+        new = dedup.shingle_index(spark, large)
+        assert len(dedup._SHINGLE_MEMO) == 1
+        assert _live(spark, new)
+        assert not old_ids & C.persistent_rdd_ids(spark)
+        assert id(old) not in C._MEMO_BLOCKS
+    finally:
+        release_memos()
+
+
+def test_cold_reset_leaves_no_memo_block(spark, sf_dir):
+    """cold_reset must leave no memo table pinned and no memo entry."""
+    import etl_pipeline_project_auraverse_spark.queries.graph as graph
+
+    _rows(spark, "q_dedup_clusters", sf_dir)
+    graph.copurchase_pairs(spark, sf_dir)
+    ids = frozenset().union(*C._MEMO_BLOCKS.values())
+    assert ids and ids <= C.persistent_rdd_ids(spark)
+
+    C.cold_reset(spark)
+    assert not ids & C.persistent_rdd_ids(spark)
+    assert not C._MEMO_BLOCKS and not any(C._MEMO_DICTS)
+
+
 def test_pair_stats_memo_is_thresholded(spark, sf_dir):
     """The stored pair table must contain ONLY pairs at or above the
-    memo threshold — the compactness contract that keeps the snapshot
+    memo threshold — the compactness contract that keeps the memo table
     bounded at corpus scale."""
     from pyspark.sql import functions as F
 
@@ -154,158 +211,3 @@ def test_pair_stats_memo_is_thresholded(spark, sf_dir):
     )
     assert ps.filter(jac < dedup.PAIR_MEMO_MIN_J).count() == 0
     assert ps.count() > 0
-
-
-def test_superseded_snapshot_gc_bounds_warehouse(spark, tmp_path):
-    """gc_memo_snapshots must delete app-id dirs from FINISHED sessions
-    (stale > 1 h), keep the live application's dir, and keep
-    fresh dirs that may belong to a concurrent session."""
-    import os
-    import time
-
-    from etl_pipeline_project_auraverse_spark import cache as C
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    root = wh[len("file:"):] if wh.startswith("file:") else wh
-    base = os.path.join(root.rstrip("/"), "memo_snapshots")
-    app = spark.sparkContext.applicationId
-    os.makedirs(os.path.join(base, app), exist_ok=True)
-    stale = os.path.join(base, "local-0000000000001")
-    fresh = os.path.join(base, "local-0000000000002")
-    os.makedirs(stale, exist_ok=True)
-    os.makedirs(fresh, exist_ok=True)
-    old = time.time() - 7200
-    os.utime(stale, (old, old))
-    C._GC_SEEN.discard(app)  # the session fixture already swept once
-    removed = C.gc_memo_snapshots(spark)
-    assert "local-0000000000001" in removed
-    assert not os.path.exists(stale)
-    assert os.path.exists(fresh), "a <1h-old dir may belong to a live session"
-    assert os.path.exists(os.path.join(base, app)), "never GC the live app dir"
-    # once-per-application: a second call is a no-op even with stale dirs
-    os.makedirs(stale, exist_ok=True)
-    os.utime(stale, (old, old))
-    assert C.gc_memo_snapshots(spark) == []
-    os.rmdir(stale)
-    os.rmdir(fresh)
-
-
-def test_snapshot_gc_is_gated_on_owner_liveness(spark, tmp_path):
-    """A >1h-stale dir whose _OWNER process is STILL RUNNING must
-    survive the GC (a long parity session keeps re-reading snapshots it
-    wrote in its first minutes), while a FRESH dir whose owner is gone
-    is removed immediately — liveness, not age, decides."""
-    import os
-    import subprocess
-    import sys
-    import time
-
-    from etl_pipeline_project_auraverse_spark import cache as C
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    root = wh[len("file:"):] if wh.startswith("file:") else wh
-    base = os.path.join(root.rstrip("/"), "memo_snapshots")
-    app = spark.sparkContext.applicationId
-
-    live_owned = os.path.join(base, "local-0000000000011")
-    dead_owned = os.path.join(base, "local-0000000000012")
-    os.makedirs(live_owned, exist_ok=True)
-    os.makedirs(dead_owned, exist_ok=True)
-    # live owner: this very test process; dir made ancient on purpose
-    with open(os.path.join(live_owned, C._OWNER_FILE), "w") as f:
-        f.write(str(os.getpid()))
-    old = time.time() - 7200
-    os.utime(live_owned, (old, old))
-    # dead owner: a child that has already exited (PID guaranteed dead
-    # after wait); dir left FRESH on purpose
-    p = subprocess.Popen([sys.executable, "-c", "pass"])
-    p.wait()
-    with open(os.path.join(dead_owned, C._OWNER_FILE), "w") as f:
-        f.write(str(p.pid))
-
-    C._GC_SEEN.discard(app)
-    removed = C.gc_memo_snapshots(spark)
-    assert "local-0000000000012" in removed, "dead-owner dir must go"
-    assert not os.path.exists(dead_owned)
-    assert os.path.exists(live_owned), (
-        "a dir owned by a RUNNING process must survive however stale"
-    )
-    os.remove(os.path.join(live_owned, C._OWNER_FILE))
-    os.rmdir(live_owned)
-
-
-def test_memo_table_marks_owner(spark, sf_dir):
-    """Any memo build/fetch must leave the app dir owner-marked so a
-    concurrent session's GC can see this session is alive."""
-    import os
-
-    import etl_pipeline_project_auraverse_spark.queries.dedup as dedup
-    from etl_pipeline_project_auraverse_spark import cache as C
-
-    dedup.capped_pair_stats(spark, sf_dir)  # any memoized table works
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    root = wh[len("file:"):] if wh.startswith("file:") else wh
-    app_dir = os.path.join(
-        root.rstrip("/"), "memo_snapshots", spark.sparkContext.applicationId
-    )
-    marker = os.path.join(app_dir, C._OWNER_FILE)
-    assert os.path.exists(marker)
-    with open(marker) as f:
-        parts = f.read().split()
-    import socket
-
-    assert int(parts[0]) == os.getpid()
-    assert parts[1] == socket.gethostname()
-    # on Linux the kernel start time must round-trip (PID-reuse guard)
-    if len(parts) > 2:
-        assert int(parts[2]) == C._proc_start_time(os.getpid())
-
-
-def test_snapshot_gc_foreign_host_and_pid_reuse_get_age_grace(spark):
-    """Owner files from ANOTHER HOST (whose PID liveness this host
-    cannot probe) and recycled-PID owners (start-time mismatch) must
-    fall back to the 1h mtime rule — fresh dirs survive, ancient ones
-    go — never the immediate removal a provably-dead local owner gets."""
-    import os
-    import time
-
-    from etl_pipeline_project_auraverse_spark import cache as C
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    root = wh[len("file:"):] if wh.startswith("file:") else wh
-    base = os.path.join(root.rstrip("/"), "memo_snapshots")
-    app = spark.sparkContext.applicationId
-
-    old = time.time() - 7200
-    dirs = {}
-    # foreign-host owner, live-looking PID, FRESH dir -> keep
-    # foreign-host owner, ANCIENT dir -> remove (mtime fallback)
-    # recycled PID (this process's PID, wrong start time), ANCIENT -> remove
-    specs = {
-        "local-0000000000021": (f"{os.getpid()} other-host 123", None),
-        "local-0000000000022": (f"{os.getpid()} other-host 123", old),
-        "local-0000000000023": (f"{os.getpid()} {__import__('socket').gethostname()} 1", old),
-    }
-    for name, (owner, mtime) in specs.items():
-        p = os.path.join(base, name)
-        os.makedirs(p, exist_ok=True)
-        with open(os.path.join(p, C._OWNER_FILE), "w") as f:
-            f.write(owner)
-        if mtime is not None:
-            os.utime(p, (mtime, mtime))
-        dirs[name] = p
-
-    C._GC_SEEN.discard(app)
-    removed = C.gc_memo_snapshots(spark)
-    assert "local-0000000000021" not in removed and os.path.exists(
-        dirs["local-0000000000021"]
-    ), "fresh foreign-host dir must get the age grace"
-    assert "local-0000000000022" in removed, "ancient foreign-host dir goes by age"
-    if C._proc_start_time(os.getpid()) is not None:
-        assert "local-0000000000023" in removed, (
-            "ancient recycled-PID dir goes by age despite a live PID"
-        )
-    for p in dirs.values():
-        if os.path.exists(p):
-            os.remove(os.path.join(p, C._OWNER_FILE))
-            os.rmdir(p)

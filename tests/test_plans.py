@@ -220,18 +220,33 @@ def test_caches_released_between_queries(spark, q):
     """Cache hygiene: building + materializing cache-using queries in a
     row must not accumulate persisted RDDs — the registry releases the
     previous query's caches when the next one starts, and an explicit
-    release_caches() empties the rest."""
-    from etl_pipeline_project_auraverse_spark.cache import release_memos
+    release_caches() empties the rest. Memo tables are cross-query by
+    design, so they are pinned separately: one checkpoint per memo
+    table built, and no new blocks when a later query hits them."""
+    from etl_pipeline_project_auraverse_spark import cache as C
     from etl_pipeline_project_auraverse_spark.queries._util import release_caches
 
+    def memo_blocks() -> frozenset:
+        return frozenset().union(*C._MEMO_BLOCKS.values())
+
     release_caches()  # drop any caches a previous test left registered
-    release_memos()  # and any cross-query memoized index builds
-    for name in ["q_dedup_ngram_jaccard", "q_dedup_simhash", "q_ann_lsh_cosine"]:
+    C.release_memos()  # and any cross-query memoized index builds
+    names = ["q_dedup_ngram_jaccard", "q_dedup_simhash", "q_ann_lsh_cosine"]
+    for name in names:
         q(name).count()
-        n_cached = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        live = C.persistent_rdd_ids(spark)
+        n_cached = len(live - memo_blocks())
         assert n_cached <= 2, f"{name}: {n_cached} cached RDDs live mid-sweep"
+        n_tables = sum(len(d) for d in C._MEMO_DICTS)
+        assert len(C._MEMO_BLOCKS) == n_tables
+        assert all(len(ids) == 1 for ids in C._MEMO_BLOCKS.values())
+        assert memo_blocks() <= live, f"{name}: a memo table lost its blocks"
+    assert n_tables > 0, "q_dedup_ngram_jaccard reads memo tables"
+    held = memo_blocks()
+    q(names[0]).count()  # every memo it reads is a hit now
+    assert memo_blocks() == held, "memo hits must not add blocks"
     release_caches()
-    release_memos()
+    C.release_memos()
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == 0
 
 
