@@ -210,23 +210,39 @@ def _prior_headline() -> dict[str, float]:
     ``BENCH_r<N>.json`` driver artifact (r14 verdict ask #2: four
     untouched relational queries read 2.5-4.5x slow in one window and
     dragged the geomean; the bench must notice such a block itself).
-    Empty dict when no artifact parses — the guard simply stays off."""
-    import glob
+
+    The artifact is read from git (``git ls-files`` + ``git show
+    HEAD:``), never from the worktree: the current round's own
+    untracked artifact must not become the prior it is compared with.
+    Empty dict when git is unavailable or no artifact parses — the
+    guard simply stays off."""
     import re
+    import subprocess
 
     here = Path(__file__).resolve().parent
+
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", "-C", str(here), *args],
+            capture_output=True, text=True, check=True,
+        ).stdout
+
+    try:
+        names = git("ls-files", "BENCH_r*.json").split()
+    except (OSError, subprocess.CalledProcessError):
+        return {}
     paths = []
-    for p in glob.glob(str(here / "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
+    for name in names:
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", name)
         if m:
-            paths.append((int(m.group(1)), p))
-    for _, p in sorted(paths, reverse=True):
+            paths.append((int(m.group(1)), name))
+    for _, name in sorted(paths, reverse=True):
         try:
-            parsed = json.loads(Path(p).read_text()).get("parsed") or {}
+            parsed = json.loads(git("show", f"HEAD:./{name}")).get("parsed") or {}
             queries = parsed.get("queries") or {}
             if queries:
                 return {n: float(t) for n, t in queries.items()}
-        except Exception:
+        except (ValueError, TypeError, AttributeError, subprocess.CalledProcessError):
             continue
     return {}
 
@@ -601,14 +617,14 @@ def main() -> None:
         for name in cold_reps:
             if name not in QUERIES:
                 continue
-            cold_reset(spark)
+            cold_reset()
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             QUERIES[name](spark, sf_dir).collect()
             cold_sec = round(time.perf_counter() - t0, 4)
             warm = timings.get(name) or all_timings.get(name)
             cold_index[name] = {"cold_sec": cold_sec, "warm_sec": warm}
-        cold_reset(spark)
+        cold_reset()
 
     stat1 = _read_proc_stat()
     run_steal = None  # whole-process steal: context only (preceding line)

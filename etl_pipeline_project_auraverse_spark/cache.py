@@ -143,19 +143,16 @@ def register_memo_clearer(fn) -> None:
     _MEMO_CLEARERS.append(fn)
 
 
-def cold_reset(spark: SparkSession) -> None:
+def cold_reset() -> None:
     """Return the engine to a COLD-index state: free every memo table,
     empty every memo dict and run registered clearers — the next
     memoized query pays the full index build, exactly like a fresh
     driver process. Measurement hook only (the bench's cold-index
-    stat); never called on a query path. ``spark`` is unused: each
-    memo table carries its own session."""
+    stat); never called on a query path. A clearer that raises
+    propagates: a memo left half-cleared would make the cold stat warm."""
     release_memos()
     for fn in _MEMO_CLEARERS:
-        try:
-            fn()
-        except Exception:
-            pass
+        fn()
 
 
 def _drop_memo(memo: dict, key, blocking: bool) -> None:

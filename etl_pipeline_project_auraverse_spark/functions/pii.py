@@ -69,18 +69,6 @@ def luhn_valid_count(col: Column) -> Column:
     return F.coalesce(F.size(valid), F.lit(0)).cast("long")
 
 
-def pii_counts(col: Column) -> Column:
-    """Struct of per-type counts: email/ipv4/phone/ssn/card (card =
-    Luhn-validated candidates only)."""
-    return F.struct(
-        pii_count(col, "email").alias("email"),
-        pii_count(col, "ipv4").alias("ipv4"),
-        pii_count(col, "phone").alias("phone"),
-        pii_count(col, "ssn").alias("ssn"),
-        luhn_valid_count(col).alias("card"),
-    )
-
-
 def redact(col: Column) -> Column:
     """Replace every PII occurrence with a typed placeholder. Card
     candidates are redacted regardless of Luhn validity (redaction

@@ -1,4 +1,4 @@
-"""Unicode normalization for text cleanup — the NFC/NFKC pass every
+"""Unicode normalization for text cleanup — the NFC pass every
 LLM ingest pipeline runs before tokenization (comparable strings,
 stable dedup fingerprints, no mojibake token splits).
 
@@ -7,8 +7,8 @@ of the engine's documented Arrow-batched Python exceptions (alongside
 the multimodal codecs and the Misra–Gries fold): ``pandas``'
 ``Series.str.normalize`` runs ``unicodedata.normalize`` over whole
 Arrow batches — never row-at-a-time Python. Everything around the
-normalization itself (control-char stripping, whitespace collapse,
-length/difference accounting) stays in JVM codegen expressions.
+normalization itself (length/difference accounting in
+``q_text_nfc_cleanup``) stays in JVM codegen expressions.
 
 Determinism: NFC is a pure function of the code-point sequence; the
 DuckDB oracle's ``nfc_normalize`` (utf8proc) implements the same
@@ -22,16 +22,15 @@ import functools
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
 @functools.cache
-def _normalizer(form: str):
+def _normalizer():
     # built lazily: pandas_udf needs an active SparkContext, so module
     # import must not construct it (the PySpark-4 import-time gotcha)
     def norm(s: pd.Series) -> pd.Series:
-        return s.str.normalize(form)
+        return s.str.normalize("NFC")
 
     return pandas_udf(norm, "string")
 
@@ -39,31 +38,6 @@ def _normalizer(form: str):
 def nfc_normalize(col: Column) -> Column:
     """NFC-normalize a string column (composes combining sequences:
     ``e + U+0301`` → ``é``). Null-safe."""
-    return _normalizer("NFC")(col)
+    return _normalizer()(col)
 
 
-def nfkc_normalize(col: Column) -> Column:
-    """NFKC-normalize a string column (NFC plus compatibility folds:
-    ligatures, fullwidth forms, superscripts). Null-safe."""
-    return _normalizer("NFKC")(col)
-
-
-# C0/C1 control characters except \t \n \r — the standard pre-token
-# strip set. Pure codegen regex (Java and RE2 agree on these classes).
-_CONTROL_RE = "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F-\\x9F]"
-
-
-def strip_controls(col: Column) -> Column:
-    """Remove non-whitespace control characters (JVM-side)."""
-    return F.regexp_replace(col, _CONTROL_RE, "")
-
-
-def collapse_whitespace(col: Column) -> Column:
-    """Trim + collapse runs of whitespace to single spaces (JVM-side)."""
-    return F.trim(F.regexp_replace(col, "\\s+", " "))
-
-
-def clean_text(col: Column) -> Column:
-    """The composite cleanup pass: NFC → control strip → whitespace
-    collapse. Only the NFC step leaves codegen."""
-    return collapse_whitespace(strip_controls(nfc_normalize(col)))

@@ -6,15 +6,11 @@ Decoder: full variable-width LZW over the image sub-blocks — clear /
 end-of-information codes, dictionary growth with width bumps at table
 sizes 2^w, the deferred-clear rule (a full 4096-entry table keeps
 emitting 12-bit codes until an explicit clear), and global or local
-color tables. Interlaced images de-interlace via the 4-pass row map;
-multi-frame animations decode through ``decode_gif_frames`` (the
-frame-sampling path) while the single-image seam rejects them.
-
-Encoder (test-fixture twin): the canonical "literal-codes" GIF writer —
-every pixel is emitted as its own root code while tracking the SAME
-table-growth/width-bump state machine a decoder runs, with a clear
-code whenever the table would reach 4095. Valid output for any
-conformant decoder; compression ratio is irrelevant for fixtures.
+color tables. Interlaced images de-interlace via the 4-pass row map.
+Every frame is decoded (patch frames composited under the GIF89a
+disposal model and transparency); the single-image seam then rejects
+multi-frame animations. The fixture writer the tests round-trip
+through is ``tests/codec_builders.py``.
 """
 
 from __future__ import annotations
@@ -22,75 +18,6 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-
-_MAX_TABLE = 4096
-
-
-def encode_gif(indices: np.ndarray, palette: np.ndarray) -> bytes:
-    """One-frame GIF from (h, w) uint8 palette indices + (n, 3) RGB
-    palette; n must be a power of two in [2, 256]."""
-    return encode_gif_frames([indices], palette)
-
-
-def encode_gif_frames(
-    frames: list[np.ndarray],
-    palette: np.ndarray,
-    delay_cs: int = 4,
-    interlace: bool = False,
-) -> bytes:
-    """Animated GIF from same-shaped (h, w) index frames; each frame
-    gets a graphic-control extension carrying ``delay_cs``. With
-    ``interlace`` the rows are stored in the GIF 4-pass order and the
-    descriptor's interlace bit is set."""
-    h, w = frames[0].shape
-    n = len(palette)
-    assert n in (2, 4, 8, 16, 32, 64, 128, 256)
-    bits = max((n - 1).bit_length(), 1)
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    out += bytes(np.asarray(palette, dtype=np.uint8).reshape(-1))
-    for indices in frames:
-        assert indices.shape == (h, w) and indices.max() < n
-        if len(frames) > 1:
-            out += b"\x21\xf9\x04\x00" + struct.pack("<H", delay_cs) + b"\x00\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40 if interlace else 0)
-        rows = indices[_interlace_order(h)] if interlace else indices
-        out += _encode_image_data(rows, bits)
-    out += b"\x3b"
-    return bytes(out)
-
-
-def encode_gif_patches(
-    screen: tuple[int, int],
-    patches: list[tuple[np.ndarray, int, int, int, int | None]],
-    palette: np.ndarray,
-    bg: int = 0,
-    delay_cs: int = 4,
-) -> bytes:
-    """Animated GIF whose frames are sub-rectangle PATCHES — the
-    optimized real-world encoding the compositing decoder handles.
-    ``patches`` is ``[(indices, left, top, disposal, transparent_idx)]``
-    with indices shaped (h, w); ``transparent_idx`` None for opaque."""
-    sw, sh = screen
-    n = len(palette)
-    assert n in (2, 4, 8, 16, 32, 64, 128, 256)
-    bits = max((n - 1).bit_length(), 1)
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", sw, sh, 0x80 | (bits - 1), bg, 0)
-    out += bytes(np.asarray(palette, dtype=np.uint8).reshape(-1))
-    for indices, left, top, disposal, transp in patches:
-        h, w = indices.shape
-        assert left + w <= sw and top + h <= sh and indices.max() < n
-        packed = ((disposal & 0x07) << 2) | (0x01 if transp is not None else 0)
-        out += b"\x21\xf9\x04" + bytes([packed])
-        out += struct.pack("<H", delay_cs)
-        out += bytes([transp or 0]) + b"\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", left, top, w, h, 0)
-        out += _encode_image_data(indices, bits)
-    out += b"\x3b"
-    return bytes(out)
 
 
 def _interlace_order(h: int) -> list[int]:
@@ -105,58 +32,6 @@ def _interlace_order(h: int) -> list[int]:
     )
 
 
-def _encode_image_data(indices: np.ndarray, bits: int) -> bytes:
-    out = bytearray()
-    min_code = max(bits, 2)
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    out.append(min_code)
-
-    bitbuf = 0
-    nbits = 0
-    data = bytearray()
-
-    def emit(code: int, width: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            data.append(bitbuf & 0xFF)
-            bitbuf >>= 8
-            nbits -= 8
-
-    # mirror the decoder's table-size/width state while emitting only
-    # root codes: after each emitted code (beyond the first since a
-    # clear) the decoder adds one table entry; width bumps when the
-    # table size hits 2^width; clear resets before the table fills
-    width = min_code + 1
-    emit(clear, width)
-    table_size = eoi + 1
-    first_after_clear = True
-    for px in indices.reshape(-1):
-        emit(int(px), width)
-        if first_after_clear:
-            first_after_clear = False
-        else:
-            table_size += 1
-            if table_size == _MAX_TABLE - 1:
-                emit(clear, width)
-                width = min_code + 1
-                table_size = eoi + 1
-                first_after_clear = True
-            elif table_size == (1 << width):
-                width += 1
-    emit(eoi, width)
-    if nbits:
-        data.append(bitbuf & 0xFF)
-
-    for i in range(0, len(data), 255):
-        block = data[i : i + 255]
-        out.append(len(block))
-        out += block
-    out += b"\x00"  # sub-block terminator (trailer is the container's)
-    return bytes(out)
-
-
 def decode_gif(buf: bytes) -> tuple[int, int, int, np.ndarray]:
     """Decode the first (and only permitted) frame; returns
     (width, height, 3, rows) with rows shaped (h, w*3) uint8 RGB —
@@ -169,29 +44,10 @@ def decode_gif(buf: bytes) -> tuple[int, int, int, np.ndarray]:
         raise NotImplementedError(f"truncated GIF: {exc}") from exc
     if not frames:
         raise NotImplementedError("GIF with no image frame")
-    if len(frames) > 1:
-        # the image seam decodes stills; multi-frame payloads go
-        # through decode_gif_frames (the frame-sampling path)
+    if len(frames) > 1:  # the image seam decodes stills only
         raise NotImplementedError("animated (multi-frame) GIF")
     _delay, w, h, rgb = frames[0]
     return w, h, 3, rgb
-
-
-def decode_gif_frames(buf: bytes) -> list[tuple[int, int, int, np.ndarray]]:
-    """All frames of a (possibly animated) GIF:
-    ``[(delay_cs, width, height, rows), ...]`` with rows shaped
-    (sh, sw*3) uint8 RGB — always the full logical screen, with
-    sub-rectangle patch frames composited onto the running canvas
-    under the GIF89a disposal model (none/keep, restore-to-background,
-    restore-to-previous) and graphic-control transparency (transparent
-    pixels keep the prior canvas content). Restore-to-background
-    paints the global background COLOR (RGB output has no alpha)."""
-    if buf[:6] not in (b"GIF87a", b"GIF89a"):
-        raise NotImplementedError("not a GIF signature")
-    try:
-        return _decode_frames(buf)
-    except (struct.error, IndexError) as exc:
-        raise NotImplementedError(f"truncated GIF: {exc}") from exc
 
 
 def _decode_frames(buf: bytes) -> list[tuple[int, int, int, np.ndarray]]:

@@ -25,8 +25,6 @@ Scale notes:
 - All operators are ``mapInPandas`` (per-partition Arrow batches): no
   shuffle, embarrassingly parallel, memory bounded by
   ``spark.sql.execution.arrow.maxRecordsPerBatch``.
-- Byte-level features (size/entropy/histogram) are real computations
-  (numpy over the buffer) — the pattern a real decoder plugs into.
 
 Fake payload format (deterministic test stand-in for a codec):
 ``b"FAKEIMG!" + width:uint16 + height:uint16 + channels:uint8 + pixels``
@@ -35,26 +33,16 @@ where pixels are row-major uint8. ``synth_image_bytes`` builds one.
 
 from __future__ import annotations
 
-import math
 import struct
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 FAKE_MAGIC = b"FAKEIMG!"
 
-IMAGE_META_DDL = (
-    "doc_id long, content binary, media_type string, width int, height int, channels int"
-)
-FEATURE_DDL = (
-    "doc_id long, media_type string, n_bytes long, entropy double, "
-    "mean_byte double, histogram array<long>"
-)
 DECODED_DDL = "doc_id long, width int, height int, channels int, mean_pixel double"
-THUMB_DDL = "doc_id long, thumb_width int, thumb_height int, thumbnail binary"
 
 
 def synth_image_bytes(doc_id: int, width: int = 8, height: int = 6, channels: int = 1) -> bytes:
@@ -142,47 +130,6 @@ def _decode_image_bytes(buf: bytes) -> tuple[int, int, int, np.ndarray]:
     return w, h, c, pixels.reshape(h, w * c)
 
 
-def byte_features(df: DataFrame, n_bins: int = 16) -> DataFrame:
-    """Codec-free byte-level features: size, Shannon entropy, mean byte,
-    coarse histogram. Real math, no decode needed — the cheap first
-    pass a 100 TB pipeline runs before any expensive decoding."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, media_type, content in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["content"]
-            ):
-                buf = np.frombuffer(bytes(content), dtype=np.uint8)
-                counts = np.bincount(buf, minlength=256).astype(np.float64)
-                p = counts[counts > 0] / len(buf)
-                entropy = float(-(p * np.log2(p)).sum()) if len(buf) else 0.0
-                hist = np.bincount(buf // (256 // n_bins), minlength=n_bins)
-                rows.append(
-                    (
-                        int(doc_id),
-                        media_type,
-                        int(len(buf)),
-                        round(entropy, 6),
-                        round(float(buf.mean()) if len(buf) else 0.0, 6),
-                        [int(x) for x in hist],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "media_type",
-                    "n_bytes",
-                    "entropy",
-                    "mean_byte",
-                    "histogram",
-                ],
-            )
-
-    return df.mapInPandas(run, schema=FEATURE_DDL)
-
-
 def decode_images(df: DataFrame) -> DataFrame:
     """Decode stage (stub-backed): emits per-image dimensions + mean
     pixel; rows whose payload can't decode are dropped (corrupt-row
@@ -202,33 +149,6 @@ def decode_images(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(run, schema=DECODED_DDL)
-
-
-def resize_images(df: DataFrame, max_side: int = 4) -> DataFrame:
-    """Resize/thumbnail stage on the fake format: integer-stride
-    downsample re-encoded as FAKEIMG. Shows the binary-in → binary-out
-    UDF shape a real resizer uses."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    w, h, c, pixels = _decode_image_bytes(bytes(content))
-                except NotImplementedError:
-                    continue
-                stride = max(1, math.ceil(max(w, h) / max_side))
-                thumb = pixels.reshape(h, w, c)[::stride, ::stride, :]
-                th, tw = thumb.shape[0], thumb.shape[1]
-                payload = (
-                    FAKE_MAGIC + struct.pack("<HHB", tw, th, c) + thumb.tobytes()
-                )
-                rows.append((int(doc_id), tw, th, payload))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "thumb_width", "thumb_height", "thumbnail"]
-            )
-
-    return df.mapInPandas(run, schema=THUMB_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -635,27 +555,6 @@ AUDIO_DDL = (
 )
 
 
-def synth_wav_bytes(
-    doc_id: int, n_samples: int = 800, sample_rate: int = 8000
-) -> bytes:
-    """A real PCM16 mono WAV with a deterministic waveform."""
-    import io
-    import wave
-
-    t = np.arange(n_samples)
-    freq = 100.0 + (doc_id % 10) * 50.0
-    samples = (
-        (np.sin(2 * np.pi * freq * t / sample_rate) * 12000).astype("<i2")
-    )
-    bio = io.BytesIO()
-    with wave.open(bio, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(samples.tobytes())
-    return bio.getvalue()
-
-
 # ---------------------------------------------------------------------------
 # WAV audio codec seam: from-scratch RIFF container parse + sample
 # decode for PCM16 (tag 1), G.711 mu-law (tag 7) and IMA-ADPCM
@@ -938,212 +837,3 @@ def decode_audio(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=AUDIO_DDL)
 
 
-HIST_DDL = "doc_id long, n_pixels long, hist array<double>"
-
-
-def image_histogram_features(df: DataFrame, bins: int = 16) -> DataFrame:
-    """Normalized grayscale-intensity histogram per image — the
-    classic cheap visual fingerprint for near-duplicate image
-    detection (two crops/re-encodes of one photo have nearly identical
-    histograms; compare downstream with L1 distance using the same
-    centroid-blocked pair machinery as the embedding dedup). Decodes
-    through the same codec seam as :func:`decode_images`; undecodable
-    payloads quarantine."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    w, h, c, pixels = _decode_image_bytes(bytes(content))
-                except NotImplementedError:
-                    continue
-                # decoders emit (h, w*c); average channels -> luminance
-                gray = pixels.astype(np.float64).reshape(h, w, c).mean(axis=2)
-                counts, _ = np.histogram(gray, bins=bins, range=(0.0, 256.0))
-                n = int(counts.sum())
-                hist = (counts / n).round(6).tolist() if n else [0.0] * bins
-                rows.append((int(doc_id), n, hist))
-            yield pd.DataFrame(rows, columns=["doc_id", "n_pixels", "hist"])
-
-    return df.mapInPandas(run, schema=HIST_DDL)
-
-
-def near_dup_images(df: DataFrame, max_l1: float = 0.15, bins: int = 16) -> DataFrame:
-    """Near-duplicate image pairs by histogram L1 distance: decode ->
-    normalized histogram fingerprint -> coarse bucket on the dominant
-    bin (the blocking key: re-encodes of one image share it) ->
-    within-bucket pair join -> exact L1 <= max_l1. The pair join is an
-    equi-join on the block key, never all-pairs; at corpus scale the
-    same shape as the embedding-dedup centroid blocking."""
-    hist = image_histogram_features(df, bins=bins)
-    blocked = hist.select(
-        "doc_id",
-        "hist",
-        F.expr(
-            "array_position(hist, array_max(hist))"
-        ).cast("int").alias("__blk"),
-    )
-    a = blocked.select(
-        F.col("doc_id").alias("doc_a"), F.col("hist").alias("h_a"), "__blk"
-    )
-    b = blocked.select(
-        F.col("doc_id").alias("doc_b"), F.col("hist").alias("h_b"), "__blk"
-    )
-    l1 = F.aggregate(
-        F.zip_with("h_a", "h_b", lambda x, y: F.abs(x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.join(b, "__blk")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("l1_dist", F.round(l1, 6))
-        .filter(F.col("l1_dist") <= max_l1)
-        .select("doc_a", "doc_b", "l1_dist")
-    )
-
-
-AUDIO_FRAME_DDL = (
-    "doc_id long, frame_idx int, start_sec double, rms double, "
-    "zcr double, is_silence boolean"
-)
-
-
-def audio_frame_features(
-    df: DataFrame, frame_ms: int = 25, silence_rms: float = 500.0
-) -> DataFrame:
-    """Per-frame audio features over WAV payloads (PCM16, G.711
-    mu-law/A-law, IMA-ADPCM — the full codec seam): windowed RMS
-    energy, zero-crossing rate, and a silence flag — the VAD /
-    silence-trimming front end of an audio training-data pipeline
-    (one output row per ``frame_ms`` window, the explode shape a
-    spectrogram stage consumes). Vectorized numpy inside Arrow-batched
-    ``mapInPandas``; undecodable payloads fall into the same
-    quarantine policy as :func:`decode_audio`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                buf = bytes(content)
-                try:
-                    sr, _nch, raw = _decode_audio_bytes(buf)
-                except NotImplementedError:
-                    continue
-                samples = raw.astype(np.float64)
-                hop = max(1, sr * frame_ms // 1000)
-                n_frames = max(1, -(-len(samples) // hop))
-                for fi in range(n_frames):
-                    frame = samples[fi * hop : (fi + 1) * hop]
-                    if not len(frame):
-                        continue
-                    rms = float(np.sqrt((frame**2).mean()))
-                    # sign changes per sample pair, ignoring exact zeros
-                    signs = np.sign(frame[frame != 0.0])
-                    zcr = (
-                        float((signs[1:] != signs[:-1]).sum()) / len(frame)
-                        if len(signs) > 1
-                        else 0.0
-                    )
-                    rows.append(
-                        (
-                            int(doc_id),
-                            fi,
-                            round(fi * hop / sr, 6),
-                            round(rms, 6),
-                            round(zcr, 6),
-                            rms < silence_rms,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "frame_idx",
-                    "start_sec",
-                    "rms",
-                    "zcr",
-                    "is_silence",
-                ],
-            )
-
-    return df.mapInPandas(run, schema=AUDIO_FRAME_DDL)
-
-
-def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame-sampling stage for video-like payloads: treats each pixel
-    row of the fake format as a 'frame', emits every Nth — the
-    explode-shaped mapInPandas a real ffmpeg sampler plugs into."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    w, h, c, pixels = _decode_image_bytes(bytes(content))
-                except NotImplementedError:
-                    continue
-                for frame_idx in range(0, h, every_n):
-                    frame = pixels[frame_idx]
-                    rows.append(
-                        (int(doc_id), frame_idx, round(float(frame.mean()), 6))
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_mean"])
-
-    return df.mapInPandas(run, schema="doc_id long, frame_idx int, frame_mean double")
-
-
-def sample_gif_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL animated-frame sampling: decodes every Nth frame of an
-    animated GIF payload (from-scratch LZW, ``gif_codec``) and emits
-    per-frame stats + timeline position — the actual shape of a video
-    frame-sampling stage, exercised on a real container format rather
-    than the FAKE one. Sub-rectangle patch frames, transparency, and
-    interlace all decode for real (disposal compositing in
-    ``gif_codec``); genuinely undecodable payloads (non-GIF bytes,
-    truncated streams) are skipped into the same quarantine policy as
-    ``decode_images``."""
-    from etl_pipeline_project_auraverse_spark.operators.gif_codec import (
-        decode_gif_frames,
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    frames = decode_gif_frames(bytes(content))
-                except NotImplementedError:
-                    continue
-                t_cs = 0
-                for idx, (delay_cs, w, h, rgb) in enumerate(frames):
-                    if idx % every_n == 0:
-                        rows.append(
-                            (
-                                int(doc_id),
-                                idx,
-                                t_cs,
-                                w,
-                                h,
-                                round(float(rgb.mean()), 6),
-                            )
-                        )
-                    t_cs += delay_cs
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "frame_idx",
-                    "t_centisec",
-                    "width",
-                    "height",
-                    "frame_mean",
-                ],
-            )
-
-    return df.mapInPandas(
-        run,
-        schema="doc_id long, frame_idx int, t_centisec int, "
-        "width int, height int, frame_mean double",
-    )

@@ -15,10 +15,9 @@ inflate → per-scanline unfilter (None/Sub/Up/Average/Paeth, PNG spec
 §9). Adam7 streams are seven sequential sub-images in one deflate
 stream, each filtered against its own previous scanline (spec §8.2);
 the defiltered pass pixels scatter back through the pass grid. The
-encoder writes filter-0 scanlines — valid, unoptimized — so tests
-round-trip through an independent pair of code paths (the unfilter
-logic is exercised against reference vectors, not just our own
-encoder's output).
+tests' fixture writer (``tests/codec_builders.py``) emits filter-0
+scanlines only, so the unfilter logic is exercised against reference
+vectors as well.
 """
 
 from __future__ import annotations
@@ -40,73 +39,6 @@ _ADAM7 = [
     (1, 0, 2, 2),
     (0, 1, 1, 2),
 ]
-
-
-def _chunk(tag: bytes, body: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(body))
-        + tag
-        + body
-        + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(pixels: np.ndarray, interlace: bool = False) -> bytes:
-    """Encode HxW (greyscale) or HxWx3 (RGB) uint8 array as PNG,
-    optionally Adam7-interlaced (filter-0 scanlines either way)."""
-    if pixels.ndim == 2:
-        color_type, channels = 0, 1
-        h, w = pixels.shape
-    elif pixels.ndim == 3 and pixels.shape[2] == 3:
-        color_type, channels = 2, 3
-        h, w = pixels.shape[:2]
-    else:
-        raise ValueError("expected HxW grey or HxWx3 RGB uint8 array")
-    raw = bytearray()
-    if interlace:
-        px = pixels.reshape(h, w, channels)
-        for x0, y0, dx, dy in _ADAM7:
-            sub = px[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            flat = sub.reshape(sub.shape[0], sub.shape[1] * channels)
-            for y in range(flat.shape[0]):
-                raw.append(0)
-                raw += flat[y].astype(np.uint8).tobytes()
-    else:
-        flat = pixels.reshape(h, w * channels)
-        for y in range(h):
-            raw.append(0)  # filter type 0 (None)
-            raw += flat[y].astype(np.uint8).tobytes()
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, int(interlace))
-    return (
-        _SIG
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _chunk(b"IEND", b"")
-    )
-
-
-def encode_png_palette(indices: np.ndarray, palette: np.ndarray) -> bytes:
-    """Encode an HxW uint8 index array + Nx3 uint8 palette as a
-    color-type-3 PNG (filter-0 scanlines, like :func:`encode_png`)."""
-    if indices.ndim != 2:
-        raise ValueError("expected HxW uint8 index array")
-    if palette.ndim != 2 or palette.shape[1] != 3 or not 1 <= palette.shape[0] <= 256:
-        raise ValueError("expected Nx3 uint8 palette, 1 <= N <= 256")
-    h, w = indices.shape
-    raw = bytearray()
-    for y in range(h):
-        raw.append(0)
-        raw += indices[y].astype(np.uint8).tobytes()
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-    return (
-        _SIG
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-        + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _chunk(b"IEND", b"")
-    )
 
 
 def _paeth(a: int, b: int, c: int) -> int:

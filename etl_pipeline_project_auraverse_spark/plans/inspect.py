@@ -96,12 +96,6 @@ def unpartitioned_windows(df: DataFrame) -> int:
     return walk(df._jdf.queryExecution().optimizedPlan())
 
 
-def exchange_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the plan (each is a full
-    repartition of its input — the unit of cost at 100 TB)."""
-    return physical_plan(df).count("Exchange ")
-
-
 @dataclass
 class PlanReport:
     cartesian: bool

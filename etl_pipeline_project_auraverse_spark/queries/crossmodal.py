@@ -603,16 +603,6 @@ def q_video_caption_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 CM_QUERY_MOD = 48  # query images: doc_id % 48 == 0 (subset of IMG_MOD)
 
 
-def _sql_pooled_for(prefix: str) -> str:
-    pools = []
-    for p in range(N_POOL):
-        terms = " + ".join(
-            f"CAST({prefix}embedding[{16 * p + j + 1}] AS DOUBLE)" for j in range(16)
-        )
-        pools.append(f"({terms})")
-    return "[" + ", ".join(pools) + "]"
-
-
 def _sql_pool_term(prefix: str, p: int) -> str:
     return "(" + " + ".join(
         f"CAST({prefix}embedding[{16 * p + j + 1}] AS DOUBLE)" for j in range(16)

@@ -371,20 +371,6 @@ def band_candidate_pairs(
     return pair.unionByName(star).distinct()
 
 
-def _sql_cap_bands(raw: str, extra_cols: str = "") -> str:
-    """DuckDB twin of :func:`_cap_band_buckets` over a bands CTE body
-    with columns (doc_id, band, key[, extra])."""
-    cols = f"doc_id, band, key{extra_cols}"
-    part = f"band, key{extra_cols}"
-    return f"""
-        SELECT {cols} FROM (
-            SELECT {cols},
-                   ROW_NUMBER() OVER (PARTITION BY {part}
-                                      ORDER BY doc_id) AS _bn
-            FROM ({raw})
-        ) WHERE _bn <= {BAND_BUCKET_CAP}"""
-
-
 def _sql_band_bucketed(raw: str, extra_cols: str = "") -> str:
     """bands CTE body: every band row annotated with its bucket rank
     (``_bn``, by doc_id) and the bucket representative (``_rep`` = min

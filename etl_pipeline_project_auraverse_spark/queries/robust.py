@@ -1539,7 +1539,7 @@ def q_welch_ttest_price_returnflag(
 # value differ by segment? Per-segment (n, Σv, Σv²) from one
 # hash-partitioned groupBy over cent-scaled integers (the join to
 # customer broadcasts nothing — both sides shuffle on custkey, and at
-# 100 TB bucketing on custkey makes it shuffle-free); the
+# 100 TB tables bucketed on custkey make it shuffle-free); the
 # between-groups term S_g²/n_g is 6dp-rounded and DECIMAL(38,6)-
 # re-accumulated so the k-row float sum is partition-order-free.
 # ---------------------------------------------------------------------------

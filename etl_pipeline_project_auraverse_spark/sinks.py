@@ -52,18 +52,3 @@ def write_csv_dir(df: DataFrame, destination: str) -> None:
 # with a single request. The reference returns the whole table
 # (server.js:52-70); below the cap behavior is identical.
 TABLE_ROW_CAP = 10_000
-
-
-def table_records(
-    df: DataFrame, max_rows: int = TABLE_ROW_CAP
-) -> tuple[list[dict], bool]:
-    """K3: the HTTP-response shape (server.js:52-70) — row dicts at the
-    API edge. Only for result-sized frames; never in a pipeline.
-
-    Returns ``(records, truncated)``. At most ``max_rows + 1`` rows ever
-    cross to the driver — the one extra row exists only to detect
-    truncation and is not returned.
-    """
-    rows = df.limit(max_rows + 1).collect()
-    truncated = len(rows) > max_rows
-    return [row.asDict(recursive=True) for row in rows[:max_rows]], truncated

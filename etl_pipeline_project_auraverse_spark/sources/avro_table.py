@@ -193,92 +193,3 @@ def read_avro_table(spark: SparkSession, path: str) -> DataFrame:
     files = spark.read.format("binaryFile").load(path)
     records = avro_records(files)
     return json_table(spark, records)
-
-
-# --------------------------------------------------------------------------
-# Minimal writer (tests): spec-conformant container with null/deflate
-# codec, readable by any Avro implementation and by read_avro_table.
-# --------------------------------------------------------------------------
-
-
-def _zigzag(n: int) -> bytes:
-    u = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _encode(schema, val) -> bytes:
-    if isinstance(schema, str):
-        t = schema
-    elif isinstance(schema, list):
-        for i, branch in enumerate(schema):
-            bt = branch if isinstance(branch, str) else branch["type"]
-            if (val is None) == (bt == "null"):
-                return _zigzag(i) + _encode(branch, val)
-        raise ValueError("no union branch matched")
-    else:
-        t = schema["type"]
-    if t == "null":
-        return b""
-    if t == "boolean":
-        return b"\x01" if val else b"\x00"
-    if t in ("int", "long"):
-        return _zigzag(int(val))
-    if t == "float":
-        return struct.pack("<f", val)
-    if t == "double":
-        return struct.pack("<d", val)
-    if t in ("bytes", "string"):
-        raw = val.encode("utf-8") if isinstance(val, str) else bytes(val)
-        return _zigzag(len(raw)) + raw
-    if t == "enum":
-        return _zigzag(schema["symbols"].index(val))
-    if t == "fixed":
-        return bytes(val)
-    if t == "record":
-        return b"".join(_encode(f["type"], val[f["name"]]) for f in schema["fields"])
-    if t == "array":
-        if not val:
-            return _zigzag(0)
-        return (
-            _zigzag(len(val))
-            + b"".join(_encode(schema["items"], v) for v in val)
-            + _zigzag(0)
-        )
-    if t == "map":
-        if not val:
-            return _zigzag(0)
-        body = b"".join(
-            _encode("string", k) + _encode(schema["values"], v)
-            for k, v in val.items()
-        )
-        return _zigzag(len(val)) + body + _zigzag(0)
-    raise ValueError(f"unsupported avro type {t!r}")
-
-
-def write_avro_bytes(schema: dict, rows: list[dict], codec: str = "null") -> bytes:
-    sync = bytes((i * 37 + 11) % 256 for i in range(16))  # deterministic
-    meta = {
-        "avro.schema": json.dumps(schema).encode(),
-        "avro.codec": codec.encode(),
-    }
-    out = bytearray(_MAGIC)
-    out += _zigzag(len(meta))
-    for k, v in meta.items():
-        kk = k.encode()
-        out += _zigzag(len(kk)) + kk + _zigzag(len(v)) + v
-    out += _zigzag(0)
-    out += sync
-    block = b"".join(_encode(schema, row) for row in rows)
-    if codec == "deflate":
-        cobj = zlib.compressobj(9, zlib.DEFLATED, -15)
-        block = cobj.compress(block) + cobj.flush()
-    out += _zigzag(len(rows)) + _zigzag(len(block)) + block + sync
-    return bytes(out)

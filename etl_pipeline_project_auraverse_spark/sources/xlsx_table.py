@@ -177,89 +177,3 @@ def read_xlsx_table(spark: SparkSession, path: str) -> DataFrame:
     files = spark.read.format("binaryFile").load(path)
     records = xlsx_records(files)
     return json_table(spark, records)
-
-
-# --------------------------------------------------------------------------
-# Minimal writer (tests + the CSV-sink family's spreadsheet twin): a
-# spec-conformant single-sheet workbook with inline strings, readable
-# by Excel/LibreOffice and by :func:`read_xlsx_table`.
-# --------------------------------------------------------------------------
-
-
-def write_xlsx_bytes(header: list[str], rows: list[list[object]]) -> bytes:
-    def esc(s: str) -> str:
-        return (
-            str(s)
-            .replace("&", "&amp;")
-            .replace("<", "&lt;")
-            .replace(">", "&gt;")
-        )
-
-    def cell(ci: int, ri: int, val: object) -> str:
-        letters = ""
-        n = ci + 1
-        while n:
-            n, r = divmod(n - 1, 26)
-            letters = chr(65 + r) + letters
-        ref = f"{letters}{ri}"
-        if isinstance(val, bool):
-            return f'<c r="{ref}" t="b"><v>{1 if val else 0}</v></c>'
-        if isinstance(val, (int, float)):
-            return f'<c r="{ref}"><v>{val}</v></c>'
-        return f'<c r="{ref}" t="inlineStr"><is><t>{esc(val)}</t></is></c>'
-
-    def row_xml(ri: int, vals: list[object]) -> str:
-        cells = "".join(
-            cell(ci, ri, v) for ci, v in enumerate(vals) if v is not None
-        )
-        return f'<row r="{ri}">{cells}</row>'
-
-    sheet_rows = [row_xml(1, list(header))]
-    for i, r in enumerate(rows, start=2):
-        sheet_rows.append(row_xml(i, r))
-    sheet = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<worksheet xmlns="{_NS[1:-1]}"><sheetData>'
-        + "".join(sheet_rows)
-        + "</sheetData></worksheet>"
-    )
-    workbook = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<workbook xmlns="{_NS[1:-1]}" '
-        'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-        '<sheets><sheet name="Sheet1" sheetId="1" r:id="rId1"/></sheets></workbook>'
-    )
-    rels = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-        '<Relationship Id="rId1" '
-        'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" '
-        'Target="worksheets/sheet1.xml"/></Relationships>'
-    )
-    root_rels = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-        '<Relationship Id="rId1" '
-        'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" '
-        'Target="xl/workbook.xml"/></Relationships>'
-    )
-    content_types = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
-        '<Default Extension="rels" '
-        'ContentType="application/vnd.openxmlformats-package.relationships+xml"/>'
-        '<Default Extension="xml" ContentType="application/xml"/>'
-        '<Override PartName="/xl/workbook.xml" ContentType='
-        '"application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>'
-        '<Override PartName="/xl/worksheets/sheet1.xml" ContentType='
-        '"application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>'
-        "</Types>"
-    )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("[Content_Types].xml", content_types)
-        zf.writestr("_rels/.rels", root_rels)
-        zf.writestr("xl/workbook.xml", workbook)
-        zf.writestr("xl/_rels/workbook.xml.rels", rels)
-        zf.writestr("xl/worksheets/sheet1.xml", sheet)
-    return buf.getvalue()

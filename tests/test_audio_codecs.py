@@ -24,8 +24,8 @@ from etl_pipeline_project_auraverse_spark.operators.multimodal import (
     ima_gate_header,
     synth_ima_adpcm_wav_bytes,
     synth_mulaw_wav_bytes,
-    synth_wav_bytes,
 )
+from tests.codec_builders import synth_wav_bytes
 
 # ---------------------------------------------------------------------------
 # mu-law
@@ -286,22 +286,3 @@ def test_decode_audio_mixed_payloads(spark):
     assert got[2]["n_samples"] == 100
     assert got[3]["n_samples"] == IMA_GATE_BLOCKS * IMA_GATE_SAMPLES_PER_BLOCK
     assert all(got[k]["sample_rate"] == 8000 for k in got)
-
-
-def test_audio_frame_features_on_compressed_wav(spark):
-    # VAD frame features must now ride the full codec seam: a mu-law
-    # clip produces frames, and frame 0's RMS equals the expanded
-    # samples' RMS over the first hop window
-    from etl_pipeline_project_auraverse_spark.operators.multimodal import (
-        audio_frame_features,
-    )
-
-    buf = synth_mulaw_wav_bytes(5, 400)
-    df = spark.createDataFrame([(5, bytearray(buf))], "doc_id long, content binary")
-    frames = sorted(
-        audio_frame_features(df).collect(), key=lambda r: r["frame_idx"]
-    )
-    assert len(frames) == 2  # 400 samples / (8000*25ms = 200-sample hop)
-    _sr, _nch, s = _decode_audio_bytes(buf)
-    want = float(np.sqrt((s[:200].astype(np.float64) ** 2).mean()))
-    assert abs(frames[0]["rms"] - want) < 1e-6

@@ -8,8 +8,8 @@ import json
 from etl_pipeline_project_auraverse_spark.sources.avro_table import (
     _records_from_avro,
     read_avro_table,
-    write_avro_bytes,
 )
+from tests.codec_builders import write_avro_bytes
 
 SCHEMA = {
     "type": "record",

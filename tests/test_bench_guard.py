@@ -12,15 +12,51 @@
 
 from __future__ import annotations
 
+import json
+import subprocess
+
+import pytest
+
 import bench
 
 
 def test_prior_headline_reads_newest_artifact() -> None:
     prior = bench._prior_headline()
-    # the repo carries BENCH_r14.json with a parsed 50-query block
+    # the newest committed artifact, BENCH_r15.json, carries a parsed
+    # 50-query block
     assert len(prior) == 50
     assert all(isinstance(v, float) for v in prior.values())
     assert prior["q01_pricing_summary"] > 0
+
+
+def test_prior_headline_ignores_untracked_artifacts(tmp_path, monkeypatch) -> None:
+    """A re-run's own untracked BENCH_r<N>.json must not become the
+    prior: only the newest COMMITTED artifact counts."""
+
+    def artifact(t: float) -> str:
+        return json.dumps({"parsed": {"queries": {"q01_pricing_summary": t}}})
+
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    assert bench._prior_headline() == {}  # not a git repo: guard off
+
+    def git(*args: str) -> None:
+        subprocess.run(
+            ["git", "-C", str(tmp_path), "-c", "user.name=t",
+             "-c", "user.email=t@t", "-c", "commit.gpgsign=false", *args],
+            check=True, capture_output=True,
+        )
+
+    git("init", "-q")
+    (tmp_path / "BENCH_r07.json").write_text(artifact(1.5))
+    git("add", "BENCH_r07.json")
+    git("commit", "-q", "-m", "r07")
+    (tmp_path / "BENCH_r08.json").write_text(artifact(9.0))  # untracked
+    assert bench._prior_headline() == {"q01_pricing_summary": 1.5}
+    git("add", "BENCH_r08.json")  # staged, still not committed
+    assert bench._prior_headline() == {"q01_pricing_summary": 1.5}
+    # a worktree edit of the committed artifact is not the prior either
+    (tmp_path / "BENCH_r07.json").write_text(artifact(4.0))
+    assert bench._prior_headline() == {"q01_pricing_summary": 1.5}
 
 
 def test_vs_prev_guard_policy() -> None:
@@ -39,19 +75,24 @@ def test_cold_reset_clears_memo_dicts_and_clearers() -> None:
     cleared = []
     cache.register_memo_clearer(lambda: cleared.append(True))
 
-    class _FakeConf:
-        def get(self, *a):  # no warehouse dir: rmtree branch no-ops
-            raise KeyError
-
-    class _FakeSC:
-        applicationId = "test-app"
-
-    class _FakeSpark:
-        conf = _FakeConf()
-        sparkContext = _FakeSC()
-
-    cache.cold_reset(_FakeSpark())
+    cache.cold_reset()
     assert d == {}
     assert cleared == [True]
     cache._MEMO_DICTS.remove(d)
     cache._MEMO_CLEARERS.pop()
+
+
+def test_cold_reset_propagates_a_failing_clearer() -> None:
+    """A clearer that raises is a bug: cold_reset must not swallow it
+    (a half-cleared memo would make the cold-index stat warm)."""
+    from etl_pipeline_project_auraverse_spark import cache
+
+    def broken() -> None:
+        raise RuntimeError("clearer failed")
+
+    cache.register_memo_clearer(broken)
+    try:
+        with pytest.raises(RuntimeError, match="clearer failed"):
+            cache.cold_reset()
+    finally:
+        cache._MEMO_CLEARERS.remove(broken)

@@ -148,10 +148,9 @@ def test_tiff_payload_exercises_packbits_run_branch(monkeypatch):
 
 def test_spec_writers_cross_agree_with_production_encoders():
     """Same pixels through the INDEPENDENT spec-side writer and the
-    production encoder must decode identically — a co-bug between the
-    production encode/decode pair cannot satisfy both paths."""
-    from etl_pipeline_project_auraverse_spark.operators.gif_codec import encode_gif
-    from etl_pipeline_project_auraverse_spark.operators.png_codec import encode_png
+    test-fixture encoder must decode identically — a co-bug between the
+    fixture encoder and the decoder cannot satisfy both paths."""
+    from tests.codec_builders import encode_gif, encode_png
 
     d, w0, h0 = 123, 12, 9
     want = _expected(d, w0, h0).astype(np.uint8)

@@ -1,7 +1,8 @@
 """From-scratch GIF codec tests: encoder/decoder round-trips (incl.
 table-reset territory), a hand-assembled LZW vector so the decoder is
 checked against the spec rather than our own encoder, extension-block
-skipping, interlaced round-trips, and the animation seams."""
+skipping, interlaced round-trips, and animated-frame decoding (the
+still-image seam rejects animations)."""
 
 from __future__ import annotations
 
@@ -12,10 +13,11 @@ import pytest
 
 from etl_pipeline_project_auraverse_spark.operators import multimodal as mm
 from etl_pipeline_project_auraverse_spark.operators.gif_codec import (
+    _decode_frames,
     _lzw_decode,
     decode_gif,
-    encode_gif,
 )
+from tests.codec_builders import encode_gif, encode_gif_frames, encode_gif_patches
 
 PAL4 = np.array([[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], dtype=np.uint8)
 
@@ -93,10 +95,7 @@ def test_interlaced_round_trip():
     """Interlaced GIFs de-interlace via the 4-pass row map: encode with
     rows permuted to stream order + the interlace bit, decode, and the
     display-order image must come back exactly."""
-    from etl_pipeline_project_auraverse_spark.operators.gif_codec import (
-        _interlace_order,
-        encode_gif_frames,
-    )
+    from etl_pipeline_project_auraverse_spark.operators.gif_codec import _interlace_order
 
     for hh in (1, 2, 5, 8, 17):
         idx = _rand_idx((hh, 6), 4, 6 + hh)
@@ -127,14 +126,9 @@ def test_truncated_stream_raises():
 
 
 def test_animated_round_trip_with_delays():
-    from etl_pipeline_project_auraverse_spark.operators.gif_codec import (
-        decode_gif_frames,
-        encode_gif_frames,
-    )
-
     frames = [_rand_idx((4, 5), 4, 10 + i) for i in range(5)]
     buf = encode_gif_frames(frames, PAL4, delay_cs=7)
-    got = decode_gif_frames(buf)
+    got = _decode_frames(buf)
     assert len(got) == 5
     for (delay, w, h, rgb), want in zip(got, frames):
         assert (delay, w, h) == (7, 5, 4)
@@ -148,13 +142,6 @@ def test_animated_round_trip_with_delays():
 def test_patch_frame_compositing_and_transparency():
     """Sub-rectangle patch frames composite onto the running canvas;
     transparent patch pixels keep the prior canvas content."""
-    import numpy as np
-
-    from etl_pipeline_project_auraverse_spark.operators.gif_codec import (
-        decode_gif_frames,
-        encode_gif_patches,
-    )
-
     base = _rand_idx((4, 6), 4, 7)
     patch = _rand_idx((2, 3), 4, 8)
     # frame 3: 2x2 patch at (2, 1) where index 0 is transparent
@@ -168,7 +155,7 @@ def test_patch_frame_compositing_and_transparency():
         ],
         PAL4,
     )
-    frames = decode_gif_frames(buf)
+    frames = _decode_frames(buf)
     assert [(w, h) for _d, w, h, _r in frames] == [(6, 4)] * 3
 
     expect = PAL4[base].astype(np.uint8)  # (4, 6, 3)
@@ -184,13 +171,6 @@ def test_patch_frame_compositing_and_transparency():
 def test_patch_frame_disposal_background_and_previous():
     """Disposal 2 restores the patch region to the background color
     before the next frame; disposal 3 restores the previous content."""
-    import numpy as np
-
-    from etl_pipeline_project_auraverse_spark.operators.gif_codec import (
-        decode_gif_frames,
-        encode_gif_patches,
-    )
-
     base = _rand_idx((4, 6), 4, 9)
     p1 = _rand_idx((2, 2), 4, 10)
     p2 = _rand_idx((2, 2), 4, 11)
@@ -207,7 +187,7 @@ def test_patch_frame_disposal_background_and_previous():
         PAL4,
         bg=2,
     )
-    frames = decode_gif_frames(buf)
+    frames = _decode_frames(buf)
 
     expect = PAL4[base].astype(np.uint8)
     expect[1:3, 1:3] = PAL4[p1]
@@ -222,24 +202,3 @@ def test_patch_frame_disposal_background_and_previous():
     # after disposal 3 the p2 region reverts to pre-p2 content
     expect[3, 0] = PAL4[3]
     assert np.array_equal(frames[4][3], expect.reshape(4, 18))
-
-
-def test_sample_gif_frames_operator(spark):
-    from etl_pipeline_project_auraverse_spark.operators.gif_codec import (
-        encode_gif_frames,
-    )
-
-    rows = []
-    for doc_id in range(3):
-        frames = [_rand_idx((3, 4), 4, 30 + doc_id * 10 + i) for i in range(6)]
-        rows.append((doc_id, bytearray(encode_gif_frames(frames, PAL4, delay_cs=5))))
-    rows.append((99, bytearray(b"not a gif")))  # quarantined, not fatal
-    df = spark.createDataFrame(rows, "doc_id long, content binary")
-    out = mm.sample_gif_frames(df, every_n=2).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append((r["frame_idx"], r["t_centisec"]))
-    assert set(by_doc) == {0, 1, 2}
-    for doc in by_doc.values():
-        assert sorted(doc) == [(0, 0), (2, 10), (4, 20)]
-    assert all(r["width"] == 4 and r["height"] == 3 for r in out)

@@ -192,7 +192,7 @@ def test_cold_reset_leaves_no_memo_block(spark, sf_dir):
     ids = frozenset().union(*C._MEMO_BLOCKS.values())
     assert ids and ids <= C.persistent_rdd_ids(spark)
 
-    C.cold_reset(spark)
+    C.cold_reset()
     assert not ids & C.persistent_rdd_ids(spark)
     assert not C._MEMO_BLOCKS and not any(C._MEMO_DICTS)
 

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.operators import multimodal as mm
+from tests.codec_builders import synth_wav_bytes
 
 
 @pytest.fixture(scope="module")
@@ -22,20 +23,6 @@ def media_df(spark):
     ).repartition(4)
 
 
-def test_byte_features_real_math(media_df):
-    feats = {r["doc_id"]: r for r in mm.byte_features(media_df).collect()}
-    assert len(feats) == 21
-    f0 = feats[0]
-    raw = mm.synth_image_bytes(0, 8, 6, 1)
-    assert f0["n_bytes"] == len(raw)
-    buf = np.frombuffer(raw, dtype=np.uint8)
-    assert f0["mean_byte"] == pytest.approx(float(buf.mean()), abs=1e-6)
-    assert sum(f0["histogram"]) == len(raw)
-    counts = np.bincount(buf, minlength=256).astype(float)
-    p = counts[counts > 0] / len(buf)
-    assert f0["entropy"] == pytest.approx(float(-(p * np.log2(p)).sum()), abs=1e-5)
-
-
 def test_decode_drops_corrupt_rows(media_df):
     decoded = mm.decode_images(media_df)
     rows = decoded.collect()
@@ -44,23 +31,6 @@ def test_decode_drops_corrupt_rows(media_df):
     assert (r["width"], r["height"], r["channels"]) == (8, 6, 1)
     pixels = np.array([(3 * 31 + i * 7) % 256 for i in range(48)])
     assert r["mean_pixel"] == pytest.approx(float(pixels.mean()), abs=1e-6)
-
-
-def test_resize_roundtrip(media_df):
-    thumbs = mm.resize_images(media_df, max_side=4).collect()
-    assert len(thumbs) == 20
-    t = {x["doc_id"]: x for x in thumbs}[0]
-    assert (t["thumb_width"], t["thumb_height"]) == (4, 3)  # stride 2 on 8x6
-    w, h, c, pixels = mm._decode_image_bytes(bytes(t["thumbnail"]))
-    assert (w, h, c) == (4, 3, 1)
-
-
-def test_frame_sampling(media_df):
-    frames = mm.sample_frames(media_df, every_n=2).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-    assert sorted(by_doc[1]) == [0, 2, 4]  # 6 rows, every 2nd
 
 
 def test_column_pruning_skips_binary(spark, media_df, tmp_path):
@@ -94,7 +64,7 @@ def test_bmp_decodes_for_real(spark):
 
 
 def test_wav_decodes_for_real(spark):
-    rows = [(i, bytearray(mm.synth_wav_bytes(i, n_samples=800, sample_rate=8000)),
+    rows = [(i, bytearray(synth_wav_bytes(i, n_samples=800, sample_rate=8000)),
              "audio/wav") for i in range(2)]
     df = spark.createDataFrame(rows, "doc_id long, content binary, media_type string")
     got = {r["doc_id"]: r for r in mm.decode_audio(df).collect()}
@@ -111,80 +81,7 @@ def test_wav_decodes_for_real(spark):
 
 def test_audio_skips_non_wav(spark):
     rows = [(0, bytearray(b"ID3\x03not-an-mp3-really"), "audio/mp3"),
-            (1, bytearray(mm.synth_wav_bytes(1)), "audio/wav")]
+            (1, bytearray(synth_wav_bytes(1)), "audio/wav")]
     df = spark.createDataFrame(rows, "doc_id long, content binary, media_type string")
     got = [r["doc_id"] for r in mm.decode_audio(df).collect()]
     assert got == [1]
-
-
-def test_audio_frame_features_real_math(spark):
-    # 800 samples @8kHz = 0.1s -> 25ms frames of 200 samples each
-    rows = [(7, bytearray(mm.synth_wav_bytes(7, n_samples=800, sample_rate=8000)),
-             "audio/wav")]
-    df = spark.createDataFrame(rows, "doc_id long, content binary, media_type string")
-    frames = sorted(mm.audio_frame_features(df).collect(),
-                    key=lambda r: r["frame_idx"])
-    assert [r["frame_idx"] for r in frames] == [0, 1, 2, 3]
-    assert frames[1]["start_sec"] == 0.025
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(mm.synth_wav_bytes(7, 800, 8000)), "rb") as w:
-        samples = np.frombuffer(w.readframes(800), dtype="<i2").astype(float)
-    for r in frames:
-        seg = samples[r["frame_idx"] * 200:(r["frame_idx"] + 1) * 200]
-        assert abs(r["rms"] - float(np.sqrt((seg ** 2).mean()))) < 1e-4
-        # a 450 Hz sine crosses zero ~2*450 times/sec -> ~22.5 per 200
-        # samples -> zcr ~ 0.1125
-        assert 0.05 < r["zcr"] < 0.2
-        assert r["is_silence"] is False
-
-
-def test_audio_frame_features_silence_flag(spark):
-    import io
-    import wave
-
-    bio = io.BytesIO()
-    with wave.open(bio, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(np.zeros(400, dtype="<i2").tobytes())
-    rows = [(1, bytearray(bio.getvalue()), "audio/wav")]
-    df = spark.createDataFrame(rows, "doc_id long, content binary, media_type string")
-    frames = mm.audio_frame_features(df).collect()
-    assert len(frames) == 2
-    assert all(r["is_silence"] for r in frames)
-    assert all(r["rms"] == 0.0 and r["zcr"] == 0.0 for r in frames)
-
-
-def test_image_histogram_features(spark):
-    rows = [(i, bytearray(mm.synth_bmp_bytes(i, width=8, height=6)), "image/bmp")
-            for i in range(3)] + [(9, bytearray(b"JFIF-nope"), "image/jpeg")]
-    df = spark.createDataFrame(rows, "doc_id long, content binary, media_type string")
-    got = {r["doc_id"]: r for r in mm.image_histogram_features(df, bins=8).collect()}
-    assert set(got) == {0, 1, 2}  # jpeg payload quarantined
-    for doc_id, r in got.items():
-        assert r["n_pixels"] == 8 * 6
-        assert abs(sum(r["hist"]) - 1.0) < 1e-4
-        # cross-check one histogram against a direct decode
-        w, h, c, px = mm._decode_bmp(mm.synth_bmp_bytes(doc_id, 8, 6))
-        gray = px.astype(float).reshape(h, w, c).mean(axis=2)
-        counts, _ = np.histogram(gray, bins=8, range=(0.0, 256.0))
-        want = (counts / counts.sum()).round(6).tolist()
-        assert r["hist"] == pytest.approx(want, abs=1e-6)
-
-
-def test_near_dup_images_finds_duplicates(spark):
-    # doc 0 and doc 10 carry the SAME bmp payload (10 % 10 == 0 in the
-    # synth generator yields a different image, so duplicate bytes are
-    # built explicitly); doc 2 is different
-    same = bytearray(mm.synth_bmp_bytes(7, 8, 6))
-    rows = [(0, same, "image/bmp"), (10, same, "image/bmp"),
-            (2, bytearray(mm.synth_bmp_bytes(2, 8, 6)), "image/bmp")]
-    df = spark.createDataFrame(rows, "doc_id long, content binary, media_type string")
-    pairs = {(r["doc_a"], r["doc_b"]): r["l1_dist"]
-             for r in mm.near_dup_images(df, max_l1=0.05).collect()}
-    assert (0, 10) in pairs
-    assert pairs[(0, 10)] == 0.0
-    assert all(k == (0, 10) for k in pairs), pairs

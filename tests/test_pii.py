@@ -7,7 +7,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from etl_pipeline_project_auraverse_spark.functions.pii import (
-    pii_counts,
+    luhn_valid_count,
+    pii_count,
     redact,
 )
 
@@ -29,10 +30,19 @@ def _df(spark):
     return spark.createDataFrame(ROWS, "id long, text string")
 
 
+def _counts(col):
+    """Per-type count columns, as ``q_pii_scrub_stats`` builds them
+    (card = Luhn-validated candidates only)."""
+    kinds = ("email", "ipv4", "phone", "ssn")
+    return [pii_count(col, k).alias(k) for k in kinds] + [
+        luhn_valid_count(col).alias("card")
+    ]
+
+
 def test_pii_counts(spark):
     got = {
-        r["id"]: r["c"].asDict()
-        for r in _df(spark).select("id", pii_counts(F.col("text")).alias("c")).collect()
+        r["id"]: {k: v for k, v in r.asDict().items() if k != "id"}
+        for r in _df(spark).select("id", *_counts(F.col("text"))).collect()
     }
     assert got[0] == {"email": 2, "ipv4": 0, "phone": 0, "ssn": 0, "card": 0}
     assert got[1]["ipv4"] == 2 and got[1]["email"] == 0
@@ -65,20 +75,18 @@ def test_redaction_replaces_every_occurrence(spark):
 def test_counts_and_redaction_stay_in_codegen(spark):
     """No UDFs: the whole battery must be pure Column expressions
     (BatchEvalPython in the plan would mean a Python hot path)."""
-    df = _df(spark).select(
-        pii_counts(F.col("text")).alias("c"), redact(F.col("text")).alias("r")
-    )
+    df = _df(spark).select(*_counts(F.col("text")), redact(F.col("text")).alias("r"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_corpus_rollup_shape(spark):
-    """The corpus-level scrub report: one aggregate over the struct."""
-    df = _df(spark).select(pii_counts(F.col("text")).alias("c"))
+    """The corpus-level scrub report: one aggregate over the counts."""
+    df = _df(spark).select(*_counts(F.col("text")))
     row = df.agg(
-        F.sum("c.email").alias("emails"),
-        F.sum("c.card").alias("cards"),
-        F.count(F.when(F.col("c.email") + F.col("c.ipv4") + F.col("c.phone")
-                       + F.col("c.ssn") + F.col("c.card") > 0, 1)).alias("docs_with_pii"),
+        F.sum("email").alias("emails"),
+        F.sum("card").alias("cards"),
+        F.count(F.when(F.col("email") + F.col("ipv4") + F.col("phone")
+                       + F.col("ssn") + F.col("card") > 0, 1)).alias("docs_with_pii"),
     ).collect()[0]
     assert (row["emails"], row["cards"], row["docs_with_pii"]) == (2, 2, 5)

@@ -404,7 +404,7 @@ def test_chunking_is_map_side_until_the_sort(q):
     project. The only shuffles are the small-file parallelize spread
     and the presentation sort; and the scan reads just (doc_id, text)."""
     df = q("q_doc_chunks_overlap")
-    assert PI.exchange_count(df) <= 2
+    assert PI.physical_plan(df).count("Exchange ") <= 2
     cols = PI.scan_columns(df)
     assert "text" in cols and "n_chars" not in cols
 
@@ -415,7 +415,7 @@ def test_chunk_dedup_groups_on_fingerprint_only(q):
     expansion, both on maximal-cardinality keys), presentation sort.
     Nothing else — in particular no join back to the documents scan."""
     df = q("q_chunk_dedup_crossdoc")
-    assert PI.exchange_count(df) <= 4
+    assert PI.physical_plan(df).count("Exchange ") <= 4
     assert "Join" not in PI.physical_plan(df)
 
 

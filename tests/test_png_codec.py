@@ -11,13 +11,8 @@ import numpy as np
 import pytest
 
 from etl_pipeline_project_auraverse_spark.operators import multimodal as mm
-from etl_pipeline_project_auraverse_spark.operators.png_codec import (
-    _SIG,
-    _chunk,
-    decode_png,
-    encode_png,
-    encode_png_palette,
-)
+from etl_pipeline_project_auraverse_spark.operators.png_codec import _SIG, decode_png
+from tests.codec_builders import _chunk, encode_png, encode_png_palette
 
 
 def _rand(shape, seed):

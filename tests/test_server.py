@@ -136,11 +136,10 @@ def test_concurrent_uploads_are_serialized(server):
         assert names == {f"{tag}0", f"{tag}1", f"{tag}2"}, (tag, names)
 
 
-def test_table_response_is_capped(tmp_path, spark):
+def test_table_response_is_capped(tmp_path):
     """An over-cap table returns exactly the cap plus a truncated flag —
     one request can never pull an unbounded result onto the driver."""
     from etl_pipeline_project_auraverse_spark.server import _read_csv_rows
-    from etl_pipeline_project_auraverse_spark.sinks import table_records
 
     p = tmp_path / "big.csv"
     p.write_text("id,name\n" + "".join(f"{i},n{i}\n" for i in range(25)))
@@ -148,12 +147,6 @@ def test_table_response_is_capped(tmp_path, spark):
     assert len(rows) == 10 and truncated is True
     rows, truncated = _read_csv_rows(str(p), max_rows=25)
     assert len(rows) == 25 and truncated is False
-
-    df = spark.range(40)
-    recs, truncated = table_records(df, max_rows=15)
-    assert len(recs) == 15 and truncated is True
-    recs, truncated = table_records(df.limit(5), max_rows=15)
-    assert len(recs) == 5 and truncated is False
 
 
 def test_mixed_text_upload(server):

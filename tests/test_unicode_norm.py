@@ -1,17 +1,10 @@
-"""Unicode normalization functions: NFC/NFKC composition, control
-stripping, whitespace collapse — known-string case tables."""
+"""Unicode normalization: NFC composition — known-string case table."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_project_auraverse_spark.functions.unicode_norm import (
-    clean_text,
-    collapse_whitespace,
-    nfc_normalize,
-    nfkc_normalize,
-    strip_controls,
-)
+from etl_pipeline_project_auraverse_spark.functions.unicode_norm import nfc_normalize
 
 
 def _one(spark, s, col_fn):
@@ -24,21 +17,3 @@ def test_nfc_composes_combining_sequences(spark):
     # already-composed text is a fixed point
     assert _one(spark, "café", nfc_normalize) == "café"
     assert _one(spark, None, nfc_normalize) is None
-
-
-def test_nfkc_folds_compatibility_forms(spark):
-    assert _one(spark, "ﬁle", nfkc_normalize) == "file"  # ﬁ ligature
-    assert _one(spark, "Ｈｉ", nfkc_normalize) == "Hi"  # fullwidth
-
-
-def test_strip_controls_keeps_whitespace(spark):
-    assert _one(spark, "a\x00b\x1fc\td\ne", strip_controls) == "abc\td\ne"
-
-
-def test_collapse_whitespace(spark):
-    assert _one(spark, "  a\t\tb \n c  ", collapse_whitespace) == "a b c"
-
-
-def test_clean_text_composite(spark):
-    got = _one(spark, " café\x07   menu \n", clean_text)
-    assert got == "café menu"

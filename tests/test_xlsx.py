@@ -12,8 +12,8 @@ import pytest
 from etl_pipeline_project_auraverse_spark.sources.xlsx_table import (
     _records_from_xlsx,
     read_xlsx_table,
-    write_xlsx_bytes,
 )
+from tests.codec_builders import write_avro_bytes, write_xlsx_bytes
 
 
 def test_roundtrip_types(tmp_path, spark):
@@ -82,9 +82,6 @@ def test_wide_columns_past_z():
 
 def test_engine_read_routes_xlsx_and_avro(tmp_path, spark):
     from etl_pipeline_project_auraverse_spark.sources.tabular import read_table
-    from etl_pipeline_project_auraverse_spark.sources.avro_table import (
-        write_avro_bytes,
-    )
 
     (tmp_path / "t.xlsx").write_bytes(
         write_xlsx_bytes(["k", "v"], [["a", 1], ["b", 2]])
