@@ -11,8 +11,10 @@ Catalyst prunes any flattened column a downstream plan doesn't use.
 Kept semantics: ``_``-joined nested names (sep configurable), lists →
 comma-joined strings with Python renderings (``True``/``None``), the
 ``{"warning": "empty_record"}`` sentinel for all-null rows
-(etl_pipeline.py:79-80). Deviation (documented): list elements that are
-structs render as JSON text rather than Python ``str(dict)`` repr.
+(etl_pipeline.py:79-80; normalize's stats pass counts the all-null
+rows, so flattening runs no job). Deviation (documented): list
+elements that are structs render as JSON text rather than Python
+``str(dict)`` repr.
 """
 
 from __future__ import annotations
@@ -64,21 +66,15 @@ def flatten_columns(df: DataFrame, sep: str = "_") -> DataFrame:
     return df.select(*out)
 
 
+def empty_record(df: DataFrame) -> Column:
+    """T13's test: every column of the row is null (``df`` has columns)."""
+    return reduce(lambda a, b: a & b, (F.col(f"`{c}`").isNull() for c in df.columns))
+
+
 def add_empty_record_sentinel(df: DataFrame) -> DataFrame:
-    """T13: all-null rows get ``warning='empty_record'``
-    (reference etl_pipeline.py:79-80). The column appears only when at
-    least one such row exists — matching the reference, where the key
-    shows up only for empty records."""
-    if not df.columns:
-        return df
-    all_null = reduce(
-        lambda a, b: a & b, (F.col(f"`{c}`").isNull() for c in df.columns)
-    )
-    if df.filter(all_null).isEmpty():
-        return df
-    return df.withColumn("warning", F.when(all_null, F.lit("empty_record")))
-
-
-def flatten_table(df: DataFrame, sep: str = "_") -> DataFrame:
-    """Full T10–T13 pass."""
-    return add_empty_record_sentinel(flatten_columns(df, sep=sep))
+    """T13: ``warning='empty_record'`` on all-null rows, null elsewhere
+    (reference etl_pipeline.py:79-80). The reference's key shows up only
+    for empty records, so the column belongs in a table only when at
+    least one such row exists: ``normalize.plan_normalization`` counts
+    them in its stats pass, and ``normalize_table`` adds the column."""
+    return df.withColumn("warning", F.when(empty_record(df), F.lit("empty_record")))

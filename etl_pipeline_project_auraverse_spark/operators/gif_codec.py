@@ -7,9 +7,10 @@ end-of-information codes, dictionary growth with width bumps at table
 sizes 2^w, the deferred-clear rule (a full 4096-entry table keeps
 emitting 12-bit codes until an explicit clear), and global or local
 color tables. Interlaced images de-interlace via the 4-pass row map.
-Every frame is decoded (patch frames composited under the GIF89a
-disposal model and transparency); the single-image seam then rejects
-multi-frame animations. The fixture writer the tests round-trip
+``_decode_frames`` decodes every frame (patch frames composited under
+the GIF89a disposal model and transparency); the single-image seam
+first counts image descriptors by walking the block structure and
+rejects a multi-frame animation before any frame is decoded. The fixture writer the tests round-trip
 through is ``tests/codec_builders.py``.
 """
 
@@ -39,15 +40,40 @@ def decode_gif(buf: bytes) -> tuple[int, int, int, np.ndarray]:
     if buf[:6] not in (b"GIF87a", b"GIF89a"):
         raise NotImplementedError("not a GIF signature")
     try:
+        if _image_count(buf) > 1:  # the image seam decodes stills only
+            raise NotImplementedError("animated (multi-frame) GIF")
         frames = _decode_frames(buf)
     except (struct.error, IndexError) as exc:  # truncated mid-structure
         raise NotImplementedError(f"truncated GIF: {exc}") from exc
     if not frames:
         raise NotImplementedError("GIF with no image frame")
-    if len(frames) > 1:  # the image seam decodes stills only
-        raise NotImplementedError("animated (multi-frame) GIF")
     _delay, w, h, rgb = frames[0]
     return w, h, 3, rgb
+
+
+def _image_count(buf: bytes) -> int:
+    """Image descriptors in the block stream, found by skipping every
+    color table and data sub-block: nothing is decoded."""
+    flags = buf[10]
+    pos = 13 + (3 * (2 << (flags & 0x07)) if flags & 0x80 else 0)
+    n = 0
+    while pos < len(buf):
+        marker = buf[pos]
+        pos += 1
+        if marker == 0x3B:  # trailer
+            break
+        if marker == 0x21:  # extension: label, then sub-blocks
+            pos += 1
+        elif marker == 0x2C:  # descriptor, local color table, LZW code size
+            n += 1
+            iflags = buf[pos + 8]
+            pos += 9 + (3 * (2 << (iflags & 0x07)) if iflags & 0x80 else 0) + 1
+        else:
+            raise NotImplementedError(f"unknown GIF block 0x{marker:02x}")
+        while buf[pos]:
+            pos += 1 + buf[pos]
+        pos += 1
+    return n
 
 
 def _decode_frames(buf: bytes) -> list[tuple[int, int, int, np.ndarray]]:

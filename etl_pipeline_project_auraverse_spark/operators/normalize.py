@@ -6,7 +6,8 @@ Spark-first: the reference maps a Python function over every cell
 per-column dispatch heuristics (T9) run as ONE aggregate pass whose
 result lets the driver *generate* a native CASE-cascade Column
 expression per column (T1–T8) — execution stays inside whole-stage
-codegen with zero Python in the row path.
+codegen with zero Python in the row path. The same pass counts the
+all-null rows that get flatten's empty-record sentinel (T13).
 
 The cascade order and renderings replicate ``normalize_value``
 (etl_pipeline.py:167-207) including its quirks, which are semantics:
@@ -26,6 +27,11 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_pipeline_project_auraverse_spark.operators.flatten import (
+    add_empty_record_sentinel,
+    empty_record,
+)
 
 NULL_TOKENS = ["na", "n/a", "null", "none", "", "nan"]  # T1, etl_pipeline.py:173
 TRUE_TOKENS = ["true", "yes", "1"]  # T2, etl_pipeline.py:176
@@ -154,18 +160,25 @@ class ColumnRule:
     """Decision record for one column (what T9 chose and why)."""
 
     name: str
-    rule: str  # 'full' | 'lower' | 'keep'
+    rule: str  # 'full' | 'lower' | 'keep' | 'empty_record' (T13's sentinel, see below)
     sample: str | None = None
 
 
 def plan_normalization(df: DataFrame) -> list[ColumnRule]:
-    """T9 dispatch heuristics (etl_pipeline.py:209-226) as ONE aggregate
-    pass: per string column, the first non-null sample and an
-    every-value-numeric-like flag; the driver then picks the rule."""
+    """T9 dispatch heuristics (etl_pipeline.py:209-226) and T13's
+    all-null-row count as ONE aggregate pass: per string column, the
+    first non-null sample and an every-value-numeric-like flag; the
+    driver then picks the rule.
+
+    When at least one row is all-null, the plan also holds flatten's
+    ``warning`` sentinel column (appended, or in place of a ``warning``
+    column the table already has, as ``withColumn`` puts it) with rule
+    ``empty_record``: ``normalize_table`` adds the column and renders it
+    by the 'lower' rule, which is what T9 picks for its only text."""
+    if not df.columns:
+        return []
     str_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    if not str_cols:
-        return [ColumnRule(c, "keep") for c in df.columns]
-    aggs = []
+    aggs = [F.count_if(empty_record(df)).alias("empty_rows")]
     for c in str_cols:
         qc = F.col(f"`{c}`")
         # MIN, not FIRST: first(ignorenulls) is partition-order-dependent,
@@ -206,11 +219,14 @@ def plan_normalization(df: DataFrame) -> list[ColumnRule]:
             rules.append(ColumnRule(c, "full", sample))
         else:
             rules.append(ColumnRule(c, "lower", sample))
+    if stats["empty_rows"]:
+        at = next((i for i, r in enumerate(rules) if r.name == "warning"), len(rules))
+        rules[at : at + 1] = [ColumnRule("warning", "empty_record", "empty_record")]
     return rules
 
 
 def normalize_table(df: DataFrame, array_cols: set[str] | None = None) -> DataFrame:
-    """Apply T9's chosen rule per column in one generated projection.
+    """T13, then T9's chosen rule per column in one generated projection.
 
     ``array_cols`` marks columns produced by array stringification
     (T11): the reference normalized *before* flattening, so values that
@@ -219,6 +235,8 @@ def normalize_table(df: DataFrame, array_cols: set[str] | None = None) -> DataFr
     """
     array_cols = array_cols or set()
     rules = plan_normalization(df)
+    if any(r.rule == "empty_record" for r in rules):
+        df = add_empty_record_sentinel(df)
     out: list[Column] = []
     for r in rules:
         qc = F.col(f"`{r.name}`")
@@ -226,7 +244,7 @@ def normalize_table(df: DataFrame, array_cols: set[str] | None = None) -> DataFr
             out.append(qc.alias(r.name))
         elif r.rule == "full":
             out.append(normalize_expr(qc).alias(r.name))
-        else:  # 'lower': trim + lower, null → '' (etl_pipeline.py:221)
+        else:  # 'lower' (and the sentinel): trim + lower, null → '' (etl_pipeline.py:221)
             out.append(
                 F.coalesce(F.lower(F.trim(qc.cast("string"))), F.lit("")).alias(r.name)
             )

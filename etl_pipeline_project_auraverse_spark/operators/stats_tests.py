@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 from etl_pipeline_project_auraverse_spark.operators.ranks import (
-    average_rank2,
     ordered_prefix_sums,
 )
 

@@ -1,13 +1,18 @@
 """Config-driven ETL pipeline: the reference's ``run_etl_pipeline``
-(``backend/etl_pipeline.py:295-319``) re-architected as one lazy Spark
-plan.
+(``backend/etl_pipeline.py:295-319``) re-architected as Spark
+DataFrame stages in one session.
 
 Reference lifecycle (extract → normalize → flatten → schema → CSV) with
 two changes that are execution strategy, not semantics:
 
 - One SparkSession owns everything; the Node→Python process boundary
-  (server.js:43) disappears. Stages are DataFrame transformations in a
-  single Catalyst plan; nothing materializes until the sinks.
+  (server.js:43) disappears. Stages are DataFrame transformations over
+  one lineage. Extract materializes twice (the documents and the
+  records, local checkpoints), then lists the source types and infers
+  every type's schema in one job; transform runs one stats aggregate;
+  the profile and the CSV write share one cached frame. Each stage's
+  jobs carry its name as the job description (``etl:extract``,
+  ``etl:transform``, ``etl:profile``, ``etl:write``).
 - Flatten runs BEFORE normalize. The reference normalizes first, so
   values inside nested lists were never normalized; we tag
   array-derived columns and skip them in normalize, reproducing the
@@ -24,6 +29,8 @@ from __future__ import annotations
 import threading
 import time
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -32,7 +39,7 @@ from pyspark.sql import types as T
 
 from etl_pipeline_project_auraverse_spark.cache import release_caches
 from etl_pipeline_project_auraverse_spark.operators import config_ops
-from etl_pipeline_project_auraverse_spark.operators.flatten import flatten_table
+from etl_pipeline_project_auraverse_spark.operators.flatten import flatten_columns
 from etl_pipeline_project_auraverse_spark.operators.normalize import normalize_table
 from etl_pipeline_project_auraverse_spark.operators.schema_profile import (
     diff_schemas,
@@ -187,8 +194,8 @@ def transform(df: DataFrame, cfg_transform: dict[str, Any] | None) -> tuple[Data
     and a validation report."""
     cfg_transform = cfg_transform or {}
     array_cols = _array_derived_columns(df)
-    df = flatten_table(df)  # T10–T13
-    df = normalize_table(df, array_cols=array_cols)  # T1–T9
+    df = flatten_columns(df)  # T10–T12
+    df = normalize_table(df, array_cols=array_cols)  # T13, T1–T9: one stats pass
     if cfg_transform.get("drop_duplicates"):
         df = config_ops.drop_duplicates(df)  # D1
     if cfg_transform.get("dropna"):
@@ -209,7 +216,8 @@ def run_etl_pipeline(
     schema_dir: str = "schemas",
     timeout_sec: float | None = None,
 ) -> RunReport:
-    """Full lifecycle (etl_pipeline.py:295-319), one lazy plan.
+    """Full lifecycle (etl_pipeline.py:295-319), each stage's jobs
+    labelled with its name.
 
     ``timeout_sec`` is O2 (reference ``server.js:45-48``: 60 s then
     SIGKILL + error JSON): when the deadline fires, in-flight Spark
@@ -224,20 +232,24 @@ def run_etl_pipeline(
 
     try:
         with JobDeadline(spark, timeout_sec) if timeout_sec else _null_ctx():
-            df = extract(spark, cfg["extract"])
-            df, validation = transform(df, cfg.get("transform"))
+            with _stage(spark, "etl:extract"):
+                df = extract(spark, cfg["extract"])
+            with _stage(spark, "etl:transform"):
+                df, validation = transform(df, cfg.get("transform"))
             rep.missing_columns = validation["missing_columns"]
             rep.type_problems = validation["type_problems"]
 
             df = df.cache()  # profiled once, written once
-            new_schema = generate_schema(df)  # A1–A5
+            with _stage(spark, "etl:profile"):
+                new_schema = generate_schema(df)  # A1–A5
             rep.schema_id = new_schema["schema_id"]
             old_schema = load_schema(schema_dir, source_id)
             if old_schema:
                 rep.schema_diff = diff_schemas(old_schema, new_schema)  # drift
             save_schema(schema_dir, source_id, new_schema)  # K2
 
-            rep.n_records = write_csv_single(df, cfg["load"]["destination"])  # K1, A7
+            with _stage(spark, "etl:write"):
+                rep.n_records = write_csv_single(df, cfg["load"]["destination"])  # K1, A7
     except DeadlineExceeded as err:
         rep.cancelled = True
         rep.error = str(err)
@@ -247,9 +259,9 @@ def run_etl_pipeline(
                 df.unpersist()
             except Exception:
                 pass
-        # extraction-layer caches (scan_blocks / records_to_table) are
-        # registered in the session-wide registry — release them so a
-        # long-lived session running many pipelines doesn't accumulate
+        # the extraction checkpoints (documents, records) are registered
+        # in the session-wide registry — release them so a long-lived
+        # session running many pipelines doesn't accumulate
         release_caches()
 
     rep.duration_sec = time.perf_counter() - t0
@@ -258,6 +270,20 @@ def run_etl_pipeline(
         with open(summary_file, "w", encoding="utf-8") as f:
             f.write(rep.render())  # D7
     return rep
+
+
+@contextmanager
+def _stage(spark: SparkSession, name: str) -> Iterator[None]:
+    """Label the jobs of one pipeline stage with ``name`` (their
+    ``spark.job.description``); the previous description comes back on
+    exit. The job group, and so a deadline's cancellation, is untouched."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 class _null_ctx:

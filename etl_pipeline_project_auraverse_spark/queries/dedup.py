@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.cache import memo_table
-from etl_pipeline_project_auraverse_spark.functions.text import h28, h60, norm_text, shingles, words
-from etl_pipeline_project_auraverse_spark.functions.vectors import cosine, sql_cosine
+from etl_pipeline_project_auraverse_spark.functions.text import h28, h60, norm_text, words
+from etl_pipeline_project_auraverse_spark.functions.vectors import sql_cosine
 from etl_pipeline_project_auraverse_spark.queries import register
 from etl_pipeline_project_auraverse_spark.queries._util import parallelize, persist_tracked
 from etl_pipeline_project_auraverse_spark.session import load_table

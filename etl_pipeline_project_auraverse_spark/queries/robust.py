@@ -251,7 +251,6 @@ def q_mad_outlier_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType,
         LongType,
-        StringType,
         StructField,
         StructType,
     )

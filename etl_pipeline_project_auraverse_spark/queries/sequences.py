@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from etl_pipeline_project_auraverse_spark.functions.text import h28
 from etl_pipeline_project_auraverse_spark.functions.vectors import cosine, sql_cosine
 from etl_pipeline_project_auraverse_spark.queries import register
 from etl_pipeline_project_auraverse_spark.queries._util import (

@@ -22,7 +22,6 @@ from pyspark.sql.window import Window as W
 
 from etl_pipeline_project_auraverse_spark.functions.vectors import (
     cosine,
-    lsh_signature,
     norm2,
     sql_cosine,
     sql_lsh_signature,

@@ -11,12 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.queries import register
-from etl_pipeline_project_auraverse_spark.queries._util import (
-    dec_avg,
-    dec_sum,
-    sql_dec_avg,
-    sql_dec_sum,
-)
+from etl_pipeline_project_auraverse_spark.queries._util import dec_sum, sql_dec_sum
 from etl_pipeline_project_auraverse_spark.session import load_table
 
 REV = "l_extendedprice * (1 - l_discount)"

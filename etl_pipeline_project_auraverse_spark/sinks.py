@@ -4,9 +4,8 @@
 K1 preserves the reference's single-CSV-file contract: Spark writes a
 parquet-style directory, so the part file is renamed to the declared
 destination path. ``coalesce(1)`` is the price of that contract — a
-deliberate single-file bottleneck, flagged here; the scale path is
-:func:`write_csv_dir` (partitioned write, no coalesce), which the
-pipeline uses whenever the config doesn't demand one file.
+deliberate single-file bottleneck, flagged here: every pipeline run
+writes its output through :func:`write_csv_single`.
 """
 
 from __future__ import annotations
@@ -39,12 +38,6 @@ def write_csv_single(df: DataFrame, destination: str) -> int:
     with open(destination, newline="", encoding="utf-8") as f:
         n_rows = sum(1 for _ in csv.reader(f)) - 1
     return max(n_rows, 0)
-
-
-def write_csv_dir(df: DataFrame, destination: str) -> None:
-    """K1 at scale: partitioned CSV directory write — no coalesce, every
-    executor writes its own part."""
-    df.write.mode("overwrite").option("header", True).csv(destination)
 
 
 # One HTTP response is never allowed to pull an unbounded table onto the

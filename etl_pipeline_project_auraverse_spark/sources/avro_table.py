@@ -23,7 +23,6 @@ losslessly.
 
 from __future__ import annotations
 
-import io
 import json
 import struct
 import zlib

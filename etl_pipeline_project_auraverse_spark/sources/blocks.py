@@ -5,23 +5,26 @@ Re-expresses the reference's extract layer (S1–S14, reference
 ``backend/etl_pipeline.py:84-165``) Spark-first:
 
 - The reference runs 6+ independent full-text regex passes
-  (etl_pipeline.py:98,112,123,132,141,149,152). Here all regex block
-  scanners run in ONE projection over the text column
-  (:func:`scan_blocks`): each pattern contributes an
-  ``array<struct<source_type,block>>`` via ``regexp_extract_all`` and a
-  single ``explode(flatten(array(...)))`` emits every block — one scan,
-  whole-stage codegen, no Python in the row path.
+  (etl_pipeline.py:98,112,123,132,141,149,152). Here each block
+  pattern's regex runs once per document, natively
+  (:func:`scan_blocks`: ``regexp_extract_all`` per pattern, one
+  ``inline``), inside the extractor that parses those blocks; the
+  extractors are branches of one materializing job over the stored
+  documents (:func:`extract_records`), so the scans run in parallel
+  tasks — whole-stage codegen, no Python in the row path.
 - Block → record parsing stays native for JSON (validity via
   ``try_parse_json``) and code/log/error rows (``to_json(struct(...))``);
   CSV and YAML blocks (which need stateful per-block parsers) go through
   one Arrow-batched ``mapInPandas`` (S7/S8), HTML likewise (bs4 if
   available, else a regex fallback — the lib isn't in this container).
-- Table assembly: per source type, :func:`json_table` infers the
-  schema with the JVM JSON reader and parses with ``from_json``, so the
-  table stays a native plan over the cached records; the typed parts
-  are then combined with ``unionByName(allowMissingColumns=True)`` —
-  the reference's ``pd.json_normalize`` union-of-heterogeneous-keys
-  semantics (etl_pipeline.py:158) without a single-node materialize.
+- Table assembly (:func:`records_to_table`): the records, materialized
+  once, are typed per source type as the JVM JSON reader would type
+  each type alone, with ONE inference job for all types, and parsed
+  with ``from_json``, so the table stays a native plan over the stored
+  records; the typed parts are then combined with
+  ``unionByName(allowMissingColumns=True)`` — the reference's
+  ``pd.json_normalize`` union-of-heterogeneous-keys semantics
+  (etl_pipeline.py:158) without a single-node materialize.
 
 Faithfully kept reference quirks (they are semantics, not bugs): a
 strict-JSON document is *also* re-scanned by the embedded-block
@@ -36,11 +39,14 @@ import json
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_pipeline_project_auraverse_spark.cache import persist_tracked
+from etl_pipeline_project_auraverse_spark.cache import (
+    local_checkpoint_tracked,
+    register_checkpoint_ids,
+)
 
 # (source_type, pattern, regex group index) — reference etl_pipeline.py:98-154
 BLOCK_PATTERNS: list[tuple[str, str, int]] = [
@@ -125,8 +131,9 @@ def read_pdf_documents(spark: SparkSession, paths: str | list[str]) -> DataFrame
     )
 
 
-def scan_blocks(docs: DataFrame) -> DataFrame:
-    """S5–S11 in one pass: (path, source_type, block) per extracted block."""
+def scan_blocks(docs: DataFrame, *types: str) -> DataFrame:
+    """S5–S11: (path, source_type, block) for every block of the given
+    source types, in ``BLOCK_PATTERNS`` order within each document."""
     def _tagger(typ: str):
         # closure factory: a 2-arg lambda would be called as (element, index)
         return lambda x: F.struct(F.lit(typ).alias("source_type"), x.alias("block"))
@@ -134,10 +141,9 @@ def scan_blocks(docs: DataFrame) -> DataFrame:
     arrays = [
         F.transform(F.regexp_extract_all(F.col("text"), F.lit(pat), grp), _tagger(typ))
         for typ, pat, grp in BLOCK_PATTERNS
+        if typ in types
     ]
-    return docs.select(
-        "path", F.explode(F.flatten(F.array(*arrays))).alias("b")
-    ).select("path", F.col("b.source_type").alias("source_type"), F.col("b.block").alias("block"))
+    return docs.select("path", F.inline(F.flatten(F.array(*arrays))))
 
 
 # ---------------------------------------------------------------------------
@@ -146,19 +152,19 @@ def scan_blocks(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _json_object_records(blocks: DataFrame) -> DataFrame:
+def _json_object_records(docs: DataFrame) -> DataFrame:
     """S5: validate `{...}` blocks; invalid JSON silently dropped."""
     return (
-        blocks.filter(F.col("source_type") == "json")
+        scan_blocks(docs, "json")
         .filter(F.try_parse_json(F.col("block")).isNotNull())
         .filter(F.col("block").startswith("{"))
         .select("path", F.lit("json").alias("source_type"), F.col("block").alias("record_json"))
     )
 
 
-def _json_array_records(blocks: DataFrame) -> DataFrame:
+def _json_array_records(docs: DataFrame) -> DataFrame:
     """S6: explode `[...]` blocks that parse as arrays of objects."""
-    arr = blocks.filter(F.col("source_type") == "json_arr").filter(
+    arr = scan_blocks(docs, "json_arr").filter(
         F.try_parse_json(F.col("block")).isNotNull()
     )
     exploded = arr.select(
@@ -172,7 +178,7 @@ def _json_array_records(blocks: DataFrame) -> DataFrame:
     )
 
 
-def _csv_yaml_records(blocks: DataFrame) -> DataFrame:
+def _csv_yaml_records(docs: DataFrame) -> DataFrame:
     """S7/S8: per-block CSV/YAML parsing via one Arrow-batched UDF."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -198,7 +204,7 @@ def _csv_yaml_records(blocks: DataFrame) -> DataFrame:
                     continue  # reference swallows per-block parse errors
             yield pd.DataFrame(out, columns=["path", "source_type", "record_json"])
 
-    return blocks.filter(F.col("source_type").isin("csv", "yaml")).mapInPandas(
+    return scan_blocks(docs, "csv", "yaml").mapInPandas(
         parse, schema="path string, source_type string, record_json string"
     )
 
@@ -245,16 +251,16 @@ def html_records(docs: DataFrame) -> DataFrame:
     )
 
 
-def _simple_records(blocks: DataFrame) -> DataFrame:
+def _simple_records(docs: DataFrame) -> DataFrame:
     """S10/S11: code/log blocks are single-field records, built natively."""
-    code = blocks.filter(F.col("source_type") == "code").select(
+    code = scan_blocks(docs, "code").select(
         "path",
         F.lit("code").alias("source_type"),
         F.to_json(
             F.struct(F.regexp_replace(F.col("block"), "\n", " ").alias("_code_block"))
         ).alias("record_json"),
     )
-    log = blocks.filter(F.col("source_type") == "log").select(
+    log = scan_blocks(docs, "log").select(
         "path",
         F.lit("log").alias("source_type"),
         F.to_json(F.struct(F.col("block").alias("_log_entry"))).alias("record_json"),
@@ -283,74 +289,129 @@ def strict_json_records(docs: DataFrame) -> DataFrame:
 
 def extract_records(docs: DataFrame, include_html: bool = True) -> DataFrame:
     """S4–S12: every extraction mode over (path, text) documents →
-    (path, source_type, record_json). The error fallback (S12) emits a
-    sentinel row for documents that produced no blocks at all."""
-    blocks = persist_tracked(scan_blocks(docs))
+    (path, source_type, record_json), materialized.
+
+    Two local checkpoints, one job each. The documents come first, so a
+    document is read (for a PDF, its text extracted) once. The records
+    follow: every extractor is a branch of that one job, and each block
+    pattern's regex runs once, in the branch that parses its blocks, so
+    the scans run as parallel tasks. The type listing, the schema
+    inference and each type's parse in :func:`records_to_table` then
+    read stored records instead of re-running the extractors. The error
+    fallback (S12) emits a sentinel row for documents that produced no
+    record at all; which documents those are is observed during the two
+    checkpoint jobs, so it costs no job."""
+    spark = docs.sparkSession
+    seen = Observation()
+    texts, text_ids = local_checkpoint_tracked(
+        docs.observe(seen, F.collect_set("path").alias("paths"))
+    )
+    register_checkpoint_ids(spark, text_ids)
     parts = [
-        strict_json_records(docs),
-        _json_object_records(blocks),
-        _json_array_records(blocks),
-        _csv_yaml_records(blocks),
-        _simple_records(blocks),
+        strict_json_records(texts),
+        _json_object_records(texts),
+        _json_array_records(texts),
+        _csv_yaml_records(texts),
+        _simple_records(texts),
     ]
     if include_html:
-        parts.append(html_records(docs))
-    records = parts[0]
+        parts.append(html_records(texts))
+    union = parts[0]
     for p in parts[1:]:
-        records = records.unionByName(p)
-    # S12: documents with zero extracted records → error sentinel row
-    empty = docs.join(records.select("path").distinct(), "path", "left_anti").select(
-        "path",
-        F.lit("error").alias("source_type"),
-        F.to_json(
-            F.struct(F.lit("No extractable block found").alias("_error"))
-        ).alias("record_json"),
+        union = union.unionByName(p)
+    produced = Observation()
+    records, record_ids = local_checkpoint_tracked(
+        union.observe(produced, F.collect_set("path").alias("paths"))
     )
-    return records.unionByName(empty)
+    register_checkpoint_ids(spark, record_ids)
+    made = set(produced.get["paths"])
+    if set(seen.get["paths"]) - made:
+        # S12: documents with zero extracted records → error sentinel row
+        records = records.unionByName(
+            texts.filter(~F.col("path").isin(list(made))).select(
+                "path",
+                F.lit("error").alias("source_type"),
+                F.to_json(
+                    F.struct(F.lit("No extractable block found").alias("_error"))
+                ).alias("record_json"),
+            )
+        )
+    return records
+
+
+def _inferred_schema(spark: SparkSession, lines: DataFrame) -> T.StructType:
+    """The schema the JVM JSON reader infers for the one string column
+    of ``lines`` (one job).
+
+    PySpark's ``DataFrameReader.json`` takes only paths or RDDs, and the
+    RDD form returns a frame backed by a Python RDD that pickles every
+    row through a Python worker on each later action. So inference goes
+    through the reader's ``Dataset[String]`` overload (the one the RDD
+    form delegates to) and callers parse with ``from_json`` in the plan.
+    """
+    jlines = getattr(lines._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    inferred = spark._jsparkSession.read().json(jlines).schema()
+    return T.StructType.fromJson(json.loads(inferred.json()))
 
 
 def json_table(spark: SparkSession, records: DataFrame) -> DataFrame:
     """The typed table the JSON reader gives for the ``record_json``
     strings of ``records``: its inferred schema, column order and
-    ``_corrupt_record`` column, without leaving the JVM.
-
-    PySpark's ``DataFrameReader.json`` takes only paths or RDDs, and the
-    RDD form returns a frame backed by a Python RDD that pickles every
-    row through a Python worker on each later action. So the schema is
-    inferred by the JVM reader's ``Dataset[String]`` overload (the one
-    the RDD form delegates to; one job) and the rows are parsed by
-    ``from_json`` in the plan.
-    """
-    lines = getattr(records.select("record_json")._jdf, "as")(
-        spark._jvm.org.apache.spark.sql.Encoders.STRING()
-    )
-    inferred = spark._jsparkSession.read().json(lines).schema()
-    schema = T.StructType.fromJson(json.loads(inferred.json()))
+    ``_corrupt_record`` column, without leaving the JVM."""
+    schema = _inferred_schema(spark, records.select("record_json"))
     return records.select(F.from_json("record_json", schema).alias("r")).select("r.*")
+
+
+def _of_type(typ: str | None) -> Column:
+    return F.col("source_type").isNull() if typ is None else F.col("source_type") == typ
+
+
+def _wrapped_schema(spark: SparkSession, records: DataFrame, types: list) -> T.StructType:
+    """The inferred schema of the lines ``{"t<i>": record_json}``, where
+    ``i`` is the position of the record's source type in ``types``."""
+    key = F.coalesce(*(F.when(_of_type(t), F.lit(f"t{i}")) for i, t in enumerate(types)))
+    return _inferred_schema(
+        spark,
+        records.select(F.concat(F.lit('{"'), key, F.lit('":'), F.col("record_json"), F.lit("}"))),
+    )
 
 
 def records_to_table(spark: SparkSession, records: DataFrame) -> DataFrame:
     """S13: union-of-keys table from heterogeneous JSON records.
 
-    The records are cached once; each source type is then typed by
-    :func:`json_table` (one schema-inference job, parsing in the plan)
-    and the parts are combined with
+    Each source type is typed as :func:`json_table` would type its
+    records alone, and the parts are combined in the order the records'
+    ``distinct()`` lists their types, with
     ``unionByName(allowMissingColumns=True)`` — missing keys become
-    nulls, matching ``pd.json_normalize`` (etl_pipeline.py:158). A type
-    whose records all fail to parse (schema ``_corrupt_record`` only)
-    is skipped, and the corrupt-record column is dropped from the rest.
-    Nested objects stay native StructType here; ``operators.flatten``
-    turns them into flat columns.
+    nulls, matching ``pd.json_normalize`` (etl_pipeline.py:158).
+
+    All types share ONE schema-inference job: record ``r`` of the i-th
+    type becomes the line ``{"t<i>": r}``, so field ``t<i>`` of the
+    inferred schema is that type's schema (a corrupt record makes its
+    whole line corrupt, as it would alone). Each type is then parsed by
+    ``from_json`` against its field. A type without a field had no
+    record that parsed to a non-empty object: all ``{}`` (a zero-column
+    part, kept), all corrupt (skipped) or a mix (skipped, as its own
+    schema is ``_corrupt_record`` only); only that type's own inference
+    tells these apart, so it gets one. The corrupt-record column is
+    dropped from the rest. Nested objects stay native StructType here;
+    ``operators.flatten`` turns them into flat columns.
+
+    ``records`` is read by the type listing, the inference and every
+    type's parse: pass a materialized frame (:func:`extract_records`
+    returns one).
     """
-    cached = persist_tracked(records)
-    types = [r[0] for r in cached.select("source_type").distinct().collect()]
+    types = [r[0] for r in records.select("source_type").distinct().collect()]
+    schema = _wrapped_schema(spark, records, types) if types else T.StructType()
     out: DataFrame | None = None
-    for typ in types:
-        cond = (
-            F.col("source_type").isNull() if typ is None else F.col("source_type") == typ
-        )
-        # each type comes from the records' own distinct(), so no part is empty
-        js = json_table(spark, cached.filter(cond))
+    for i, typ in enumerate(types):
+        part = records.filter(_of_type(typ))
+        if f"t{i}" in schema.fieldNames():
+            js = part.select(
+                F.from_json("record_json", schema[f"t{i}"].dataType).alias("r")
+            ).select("r.*")
+        else:
+            js = json_table(spark, part)
         if js.columns == ["_corrupt_record"]:
             continue
         js = js.drop("_corrupt_record")

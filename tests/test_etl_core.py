@@ -14,7 +14,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.operators import config_ops
-from etl_pipeline_project_auraverse_spark.operators.flatten import flatten_table
+from etl_pipeline_project_auraverse_spark.operators.flatten import (
+    add_empty_record_sentinel,
+    flatten_columns,
+)
 from etl_pipeline_project_auraverse_spark.operators.normalize import (
     normalize_expr,
     normalize_table,
@@ -78,6 +81,19 @@ def test_empty_document_error_sentinel(spark, tmp_path):
     assert rows[0]["_source_type"] == "error"
 
 
+def test_error_sentinel_only_for_the_empty_document(spark, tmp_path):
+    """S12 is per document: of two documents read together, only the
+    one without any record gets the sentinel row."""
+    (tmp_path / "empty.txt").write_text("just prose with no structure at all\n")
+    (tmp_path / "log.txt").write_text("[2026-03-01 10:00:01] service started\n")
+    tbl = _table_for(spark, str(tmp_path))
+    rows = tbl.select("_source_type", "_error", "_log_entry").collect()
+    assert sorted((r["_source_type"], r["_error"] is None) for r in rows) == [
+        ("error", False),
+        ("log", True),
+    ]
+
+
 # ---------------------------------------------------------------------------
 # Flatten
 # ---------------------------------------------------------------------------
@@ -97,7 +113,7 @@ def test_flatten_nested_structs_and_arrays(spark):
         "langs array<string>, orders array<struct<day:string,amount:double>>, "
         "flags array<boolean>",
     )
-    flat = flatten_table(df)
+    flat = flatten_columns(df)
     row = flat.collect()[0]
     assert flat.columns == ["prefs_theme", "prefs_social_handle", "langs", "orders", "flags"]
     assert row["prefs_theme"] == "dark"
@@ -109,10 +125,16 @@ def test_flatten_nested_structs_and_arrays(spark):
 
 def test_flatten_empty_record_sentinel(spark):
     df = spark.createDataFrame([("a", 1), (None, None)], "x string, y long")
-    flat = flatten_table(df)
+    flat = add_empty_record_sentinel(df)
     rows = {r["x"]: r["warning"] for r in flat.collect()}
     assert rows[None] == "empty_record"
     assert rows["a"] is None
+    # the column joins a table only when some row is all-null, which
+    # normalize's stats pass counts; it is then rendered by 'lower'
+    assert normalize_table(df.dropna(how="all")).columns == ["x", "y"]
+    out = normalize_table(df)
+    assert out.columns == ["x", "y", "warning"]
+    assert sorted(r["warning"] for r in out.collect()) == ["", "empty_record"]
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,7 @@ import struct
 import numpy as np
 import pytest
 
+from etl_pipeline_project_auraverse_spark.operators import gif_codec
 from etl_pipeline_project_auraverse_spark.operators import multimodal as mm
 from etl_pipeline_project_auraverse_spark.operators.gif_codec import (
     _decode_frames,
@@ -137,6 +138,31 @@ def test_animated_round_trip_with_delays():
     # only its first frame
     with pytest.raises(NotImplementedError, match="animated"):
         decode_gif(buf)
+
+
+def test_animated_gif_is_rejected_before_any_frame_decodes(monkeypatch):
+    """The image-descriptor count is read from the block structure, so
+    an animation is refused without LZW-decoding a frame; a still runs
+    one decode and gives the frame ``_decode_frames`` gives."""
+    calls = []
+    real = gif_codec._lzw_decode
+
+    def counting(*args):
+        calls.append(1)
+        return real(*args)
+
+    monkeypatch.setattr(gif_codec, "_lzw_decode", counting)
+    frames = [_rand_idx((4, 5), 4, 20 + i) for i in range(5)]
+    with pytest.raises(NotImplementedError, match="animated"):
+        decode_gif(encode_gif_frames(frames, PAL4, delay_cs=3))
+    assert calls == []
+
+    still = encode_gif(frames[0], PAL4)
+    w, h, c, rows = decode_gif(still)
+    assert len(calls) == 1
+    _delay, fw, fh, frame = _decode_frames(still)[0]
+    assert (w, h, c) == (fw, fh, 3)
+    assert rows.tobytes() == frame.tobytes() == PAL4[frames[0]].tobytes()
 
 
 def test_patch_frame_compositing_and_transparency():

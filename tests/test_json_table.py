@@ -66,7 +66,10 @@ def test_extracted_json_document_scans_no_python_rdd(spark, tmp_path):
     try:
         tbl = extract(spark, {"type": "json", "source": str(doc)})
         assert tbl.count() > 0
-        plan = tbl._jdf.queryExecution().executedPlan().toString()
-        assert "Scan ExistingRDD" not in plan
+        # the extracted records are a local checkpoint (a JVM RDD scan),
+        # so look for a Python RDD in the lineage rather than for any
+        # RDD scan in the plan
+        lineage = tbl._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage
     finally:
         release_caches()
