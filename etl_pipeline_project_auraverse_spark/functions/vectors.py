@@ -39,31 +39,9 @@ def cosine(a: Column, b: Column, scale: int = 6) -> Column:
     return F.round(dot(a, b) / (norm2(a) * norm2(b)), scale).cast("double")
 
 
-def hyperplane_dot(emb: Column, j: int) -> Column:
-    """Dot of the embedding with deterministic hyperplane ``j``."""
-    contrib = F.transform(
-        emb,
-        lambda x, d: x.cast("double")
-        * ((F.lit(j * HP_MULT_J) + d * F.lit(HP_MULT_D)) % HP_MOD - HP_SHIFT).cast("double"),
-    )
-    return F.aggregate(contrib, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def lsh_signature(emb: Column, n_planes: int = 8) -> Column:
-    """Sign-LSH bucket id: bit j = (round(dot(emb, plane_j), 6) >= 0).
-
-    Rounding before the sign test keeps the bucket assignment identical
-    across engines even when double accumulation differs in the last bit.
-    """
-    sig = F.lit(0).cast("long")
-    for j in range(n_planes):
-        bit = F.when(F.round(hyperplane_dot(emb, j), 6) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        sig = sig + bit
-    return sig
-
-
 def sql_hyperplane_dot(emb_expr: str, j: int, dims: int = 64) -> str:
-    """DuckDB twin of :func:`hyperplane_dot` (1-based list indexing)."""
+    """Dot of the embedding with deterministic hyperplane ``j``, in
+    DuckDB SQL (1-based list indexing)."""
     return (
         f"list_sum(list_transform(range(0, {dims}), d -> "
         f"CAST({emb_expr}[d+1] AS DOUBLE) * "
@@ -72,7 +50,10 @@ def sql_hyperplane_dot(emb_expr: str, j: int, dims: int = 64) -> str:
 
 
 def sql_lsh_signature(emb_expr: str, n_planes: int = 8, dims: int = 64) -> str:
-    """DuckDB twin of :func:`lsh_signature`."""
+    """Sign-LSH bucket id in DuckDB SQL: bit j = (round(dot(emb,
+    plane_j), 6) >= 0). Rounding before the sign test keeps the bucket
+    assignment identical across engines even when double accumulation
+    differs in the last bit."""
     bits = [
         f"CASE WHEN ROUND({sql_hyperplane_dot(emb_expr, j, dims)}, 6) >= 0 "
         f"THEN {1 << j} ELSE 0 END"

@@ -386,6 +386,7 @@ def train_bpe(
                 "freq",
                 F.explode(F.concat(_grams(2), _grams(3), _grams(4))).alias("g"),
             )
+            # cache pays at sf0.1 (20 merges, distributed path): 17.2 s, 17.5 s without
             counts = (
                 grams.groupBy("g.n", "g.g1", "g.g2", "g.g3", "g.g4")
                 .agg(F.sum("freq").alias("cnt"))

@@ -126,20 +126,3 @@ def apply_upsert_batch(
     # subsequent batches; dropping it here would resurrect the key.
     _swap_in(state_dir, merged, {**meta, "last_batch_id": batch_id}, _SNAP)
     return True
-
-
-def read_upsert_snapshot(
-    spark, state_dir: str, op_col: str | None = None, delete_op: str = "D"
-) -> DataFrame:
-    """Current state: the stored snapshot minus delete tombstones."""
-    import os
-
-    from etl_pipeline_project_auraverse_spark.operators.incremental import (
-        _recover,
-    )
-
-    _recover(state_dir, _SNAP)
-    df = spark.read.parquet(os.path.join(state_dir, _SNAP))
-    if op_col is not None:
-        df = df.filter(F.col(op_col) != delete_op)
-    return df

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.cache import (
     local_checkpoint_tracked,
-    persist_tracked,
     register_checkpoint_ids,
     unpersist_rdd_ids,
 )
@@ -43,7 +42,7 @@ def bfs_min_hops(
     ``node`` column. Returns (node, min_hops) with seeds at hop 0 —
     frontier discovery hop == minimum hop by construction."""
     spark = edges.sparkSession
-    edges = persist_tracked(edges.select("u", "v"))
+    edges = edges.select("u", "v")
     frontier = (
         seeds.select("node").distinct().withColumn("min_hops", F.lit(0))
     )

@@ -51,7 +51,7 @@ def lpa_labels(
     to skip the per-round carry-forward join — same answer, ~rounds
     fewer joins."""
     spark = edges.sparkSession
-    edges = persist_tracked(edges.select("u", "v", "w"))
+    edges = edges.select("u", "v", "w")
     labels = (
         edges.select("u")
         .unionByName(edges.select(F.col("v").alias("u")))
@@ -61,6 +61,7 @@ def lpa_labels(
     held: frozenset = frozenset()
     for i in range(1, rounds + 1):
         # persisted: feeds both the per-node max and the argmax filter
+        # cache pays at sf0.1: q_lpa_communities 1.46 s, 3.96 s without
         scores = persist_tracked(
             edges.join(labels, "u")
             .groupBy("v", "lab")

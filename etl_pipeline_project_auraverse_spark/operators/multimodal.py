@@ -28,7 +28,7 @@ Scale notes:
 
 Fake payload format (deterministic test stand-in for a codec):
 ``b"FAKEIMG!" + width:uint16 + height:uint16 + channels:uint8 + pixels``
-where pixels are row-major uint8. ``synth_image_bytes`` builds one.
+where pixels are row-major uint8.
 """
 
 from __future__ import annotations
@@ -43,13 +43,6 @@ from pyspark.sql import DataFrame
 FAKE_MAGIC = b"FAKEIMG!"
 
 DECODED_DDL = "doc_id long, width int, height int, channels int, mean_pixel double"
-
-
-def synth_image_bytes(doc_id: int, width: int = 8, height: int = 6, channels: int = 1) -> bytes:
-    """Deterministic fake image payload for tests/stub decoding."""
-    n = width * height * channels
-    pixels = bytes(((doc_id * 31 + i * 7) % 256) for i in range(n))
-    return FAKE_MAGIC + struct.pack("<HHB", width, height, channels) + pixels
 
 
 def synth_bmp_bytes(doc_id: int, width: int = 8, height: int = 6) -> bytes:
@@ -94,7 +87,7 @@ def _decode_bmp(buf: bytes) -> tuple[int, int, int, np.ndarray]:
 
 def _decode_image_bytes(buf: bytes) -> tuple[int, int, int, np.ndarray]:
     """DECODER SEAM. Stdlib-decodable formats decode for real (BMP
-    here, WAV in :func:`decode_audio`); the deterministic FAKEIMG test
+    here, WAV in :func:`_decode_audio_bytes`); the deterministic FAKEIMG test
     format decodes fully; codec-requiring formats raise — callers
     treat those rows as corrupt/quarantined."""
     if buf is not None and buf.startswith(b"BM"):
@@ -549,12 +542,6 @@ def synth_tiff_packbits_bytes(
     return bytes(out)
 
 
-AUDIO_DDL = (
-    "doc_id long, sample_rate int, n_channels int, n_samples long, "
-    "duration_sec double, rms double, peak int"
-)
-
-
 # ---------------------------------------------------------------------------
 # WAV audio codec seam: from-scratch RIFF container parse + sample
 # decode for PCM16 (tag 1), G.711 mu-law (tag 7) and IMA-ADPCM
@@ -787,53 +774,5 @@ def synth_ima_adpcm_wav_bytes(doc_id: int, sample_rate: int = 8000) -> bytes:
         fact_samples=total,
         extra=struct.pack("<H", IMA_GATE_SAMPLES_PER_BLOCK),
     )
-
-
-def decode_audio(df: DataFrame) -> DataFrame:
-    """REAL audio decode through the from-scratch WAV codec seam
-    (:func:`_decode_audio_bytes` — PCM16, G.711 mu-law, IMA-ADPCM):
-    per-clip sample rate, channel count, duration, RMS and peak
-    amplitude — the features an audio-quality filter keys on.
-    Undecodable payloads (mp3/flac/...) are skipped as corrupt (codec
-    seam, same policy as decode_images)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                buf = bytes(content)
-                try:
-                    sr, nch, raw = _decode_audio_bytes(buf)
-                except NotImplementedError:
-                    continue
-                nframes = len(raw) // nch
-                samples = raw.astype(np.float64)
-                rms = float(np.sqrt((samples**2).mean())) if len(samples) else 0.0
-                peak = int(np.abs(samples).max()) if len(samples) else 0
-                rows.append(
-                    (
-                        int(doc_id),
-                        sr,
-                        nch,
-                        nframes,
-                        round(nframes / sr, 6),
-                        round(rms, 6),
-                        peak,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate",
-                    "n_channels",
-                    "n_samples",
-                    "duration_sec",
-                    "rms",
-                    "peak",
-                ],
-            )
-
-    return df.mapInPandas(run, schema=AUDIO_DDL)
 
 

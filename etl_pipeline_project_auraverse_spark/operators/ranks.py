@@ -34,7 +34,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_pipeline_project_auraverse_spark.cache import persist_tracked
+from etl_pipeline_project_auraverse_spark.cache import (
+    local_checkpoint_tracked,
+    register_checkpoint_ids,
+)
 
 
 def ordered_prefix_sums(
@@ -51,11 +54,17 @@ def ordered_prefix_sums(
     Returns ``df``'s columns plus one ``<prefix><col>`` per sum column.
     """
     spark = df.sparkSession
-    ranged = persist_tracked(
+    # The per-partition totals are keyed by spark_partition_id() and
+    # joined back onto the same frame, so its rows must be range-split
+    # exactly once: a second execution re-samples the range bounds and
+    # moves rows between partitions. An eager checkpoint computes the
+    # split once; a lost block fails the query instead of recomputing.
+    ranged, ids = local_checkpoint_tracked(
         df.repartitionByRange(F.col(order_col)).withColumn(
             "__pid", F.spark_partition_id()
         )
     )
+    register_checkpoint_ids(spark, ids)
     # tiny: ≤ shuffle.partitions rows — collected, prefix-summed on the
     # driver (a constant-partition window here would constant-fold into
     # the exact single-task global window this module exists to avoid),
@@ -129,15 +138,12 @@ def average_rank2(
     counts. Returns ``[value_col, rank_name]``.
     """
     spark = df.sparkSession
-    d = persist_tracked(
+    d = (
         df.select(value_col)
         .where(F.col(value_col).isNotNull())
         .groupBy(value_col)
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    # plain count (not limit+count): it fully materializes the cached
-    # aggregate in one pass — a LocalLimit probe is slower AND leaves
-    # the cache partial, forcing the next action to re-aggregate
     if d.count() <= _DRIVER_RANK_LIMIT:
         rows = sorted(d.collect(), key=lambda r: r[value_col])
         out, cum = [], 0

@@ -1,12 +1,11 @@
-"""Skew-mitigation operators: salted aggregation and salted join.
+"""Skew mitigation for aggregation: salted two-phase aggregation.
 
 A groupBy on a low-cardinality or power-law key sends whole key
 populations to single reducers; at 100 TB one hot key stalls the
 stage. Salting splits each key into ``n_salts`` subkeys for the first
 (parallel) partial aggregation, then re-aggregates the tiny salted
 result — same answer, bounded per-task input. AQE's skew-join handling
-covers the join case at runtime; ``salted_join`` is the explicit
-variant for when the skew is known ahead of time.
+covers the join case at runtime.
 
 Correctness: every rewritten aggregate must be decomposable
 (sum/count/min/max — avg as sum+count). The helpers only accept those.
@@ -47,21 +46,3 @@ def salted_agg(
         merge_fn = "sum" if fn in ("sum", "count") else fn
         merge.append(getattr(F, merge_fn)(out).alias(out))
     return phase1.groupBy(*keys).agg(*merge)
-
-
-def salted_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Skew-safe equi-join: the fact side gets a random salt, the dim
-    side is exploded to all salts (replicated n_salts times), and the
-    join key becomes (key, salt) — a hot key's rows now spread over
-    n_salts tasks. Only worth it when the dim replication is cheap
-    relative to the hot-key stall it removes."""
-    salted_facts = facts.withColumn("_salt", (F.rand(seed=42) * n_salts).cast("int"))
-    exploded_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return salted_facts.join(exploded_dim, [key, "_salt"]).drop("_salt")

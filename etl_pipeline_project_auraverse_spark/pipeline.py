@@ -107,6 +107,7 @@ class JobDeadline:
         self.fired = threading.Event()
         self._done = threading.Event()
         self._timer: threading.Timer | None = None
+        self._saved: dict[str, str | None] = {}
 
     def _cancel(self) -> None:
         # cancelJobGroup only hits ACTIVE jobs — if the deadline fires
@@ -123,9 +124,13 @@ class JobDeadline:
             self._done.wait(0.25)
 
     def __enter__(self) -> JobDeadline:
+        sc = self.spark.sparkContext
+        # the thread-local properties setJobGroup overwrites
+        props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+        self._saved = {p: sc.getLocalProperty(p) for p in props}
         # interruptOnCancel=True so long-running tasks (e.g. a stuck
         # UDF) are interrupted, not just deschedule-on-completion
-        self.spark.sparkContext.setJobGroup(self.group, "deadline-scoped job", True)
+        sc.setJobGroup(self.group, "deadline-scoped job", True)
         self._timer = threading.Timer(self.seconds, self._cancel)
         self._timer.daemon = True
         self._timer.start()
@@ -135,7 +140,9 @@ class JobDeadline:
         self._done.set()
         if self._timer is not None:
             self._timer.cancel()
-        self.spark.sparkContext.setJobGroup("", "", False)
+        # the caller's job group and description come back, unset ones unset
+        for prop, value in self._saved.items():
+            self.spark.sparkContext.setLocalProperty(prop, value)
         # only convert an exception: if the body finished before the
         # cancel landed, the work is done — don't fail a completed run
         if self.fired.is_set() and exc is not None:

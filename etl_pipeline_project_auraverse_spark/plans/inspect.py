@@ -5,12 +5,11 @@ The reference has no planner at all (SURVEY §4); on Spark the plan IS
 the performance contract, so this module makes plan properties
 assertable in tests and reviewable in CI:
 
-- :func:`physical_plan` / :func:`formatted_plan` — plan text accessors.
-- predicates (:func:`has_broadcast_join`, :func:`pushed_filters`,
-  :func:`read_schema`, :func:`has_cartesian`) — the properties the
-  100 TB checklist cares about: did the small side broadcast, did the
-  filter reach the scan, did projection pruning happen, did anything
-  degenerate into a cartesian/broadcast-nested-loop product.
+- :func:`physical_plan` — the plan text accessor.
+- predicates (:func:`pushed_filters`, :func:`read_schemas`,
+  :func:`scan_columns`, :func:`unpartitioned_windows`) — the properties
+  the 100 TB checklist cares about: did the filter reach the scan, did
+  projection pruning happen, did a window funnel into one task.
 - :func:`lint_plan` — one-call report used by tests to fail any query
   whose plan regresses (e.g. a join silently becoming cartesian).
 """
@@ -26,22 +25,6 @@ from pyspark.sql import DataFrame
 def physical_plan(df: DataFrame) -> str:
     """Executed (pre-AQE-final) physical plan as text."""
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def formatted_plan(df: DataFrame) -> str:
-    """`EXPLAIN FORMATTED` text (scan details, codegen ids)."""
-    return df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in physical_plan(df)
-
-
-def has_cartesian(df: DataFrame) -> bool:
-    plan = physical_plan(df)
-    return "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

@@ -76,7 +76,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             # no longer needed once the next query starts (its result
             # has been collected by then) — release them so a session
             # running many queries holds at most one query's caches.
-            from etl_pipeline_project_auraverse_spark.queries._util import release_caches
+            from etl_pipeline_project_auraverse_spark.cache import release_caches
 
             release_caches()
             return fn(spark, sf_dir)

@@ -14,11 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_pipeline_project_auraverse_spark.cache import (  # noqa: F401
-    persist_tracked,
-    release_caches,
-)
-
 DEC = "decimal(25,6)"
 
 

@@ -294,9 +294,7 @@ def q_bigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.concat_ws(" ", F.get(F.col("w"), i), F.get(F.col("w"), i + 1)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    bg = persist_tracked(
-        toks.select("doc_id", F.explode(grams).alias("bigram"))
-    )  # feeds both the corpus count and the scoring join
+    bg = toks.select("doc_id", F.explode(grams).alias("bigram"))
     corpus = bg.groupBy("bigram").agg(F.count("*").alias("cnt"))
     scored = (
         bg.join(corpus, "bigram")
@@ -860,9 +858,7 @@ def q_curation_pipeline_decisions(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = load_table(spark, sf_dir, "documents")
     is_eval = (F.col("doc_id") % EVAL_MOD) == EVAL_RESIDUE
-    train = persist_tracked(  # feeds quality/dup/sample AND the shingle scan
-        docs.where(~is_eval).select("doc_id", "lang", "text")
-    )
+    train = docs.where(~is_eval).select("doc_id", "lang", "text")
 
     eval_sh = (
         _shingle_hashes(docs.where(is_eval))
@@ -1108,10 +1104,8 @@ def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<struct<ctx:string,bigram:string>>"))
-    bg = persist_tracked(  # feeds the c2 count AND the scoring joins
-        toks.select("doc_id", F.explode(grams).alias("g")).select(
-            "doc_id", F.col("g.ctx").alias("ctx"), F.col("g.bigram").alias("bigram")
-        )
+    bg = toks.select("doc_id", F.explode(grams).alias("g")).select(
+        "doc_id", F.col("g.ctx").alias("ctx"), F.col("g.bigram").alias("bigram")
     )
     c2 = bg.groupBy("bigram").agg(F.count("*").alias("c2"))
     term = F.round(
@@ -1319,6 +1313,7 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical to counting the raw rows), so the big hashed table is
     # neither persisted nor scanned twice; only the doc×bucket partial
     # counts are cached for the stats pass + the scoring join.
+    # cache pays at sf0.1: q_dsir_importance_weights 1.64 s, 3.08 s without
     doc_buckets = persist_tracked(
         hashed.groupBy("doc_id", "bucket").agg(
             F.count("*").alias("n"), F.max("lang").alias("lang")
@@ -1578,7 +1573,7 @@ def q_negative_sampling_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     nparts = load_table(spark, sf_dir, "part").agg(
         F.count(F.lit(1)).alias("np"), F.min("p_partkey").alias("base")
     )
-    pos = persist_tracked(  # rejection side + the customer universe
+    pos = (
         orders.filter(F.col("o_custkey") < 300)
         .select("o_custkey", "o_orderkey")
         .join(li.select("l_orderkey", "l_partkey"),
@@ -1703,6 +1698,7 @@ def q_quantile_normalize_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("raw_mean"),
         )
     )
+    # cache pays at sf0.1: q_quantile_normalize_sources 0.36 s, 0.42 s without
     by_bucket = persist_tracked(by_bucket)
     target = by_bucket.groupBy("bucket").agg(
         F.round(
@@ -2043,6 +2039,7 @@ def q_doc_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
+    # cache pays at sf0.1: q_doc_length_band_filter 1.08 s, 1.37 s without
     d = persist_tracked(
         docs.select("lang", n_words(F.col("text")).alias("nw"))
     )
@@ -2153,7 +2150,7 @@ def q_decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_project_auraverse_spark.queries.dedup import shingle_index
 
     docs = load_table(spark, sf_dir, "documents")
-    tagged = persist_tracked(
+    tagged = (
         shingle_index(spark, sf_dir)
         .join(docs.select("doc_id", "source"), "doc_id")
         .withColumn(
@@ -2260,6 +2257,7 @@ def q_domain_reweight_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_project_auraverse_spark.functions.text import words
 
     docs = parallelize(load_table(spark, sf_dir, "documents"))
+    # cache pays at sf0.1: q_domain_reweight_step 1.10 s, 1.30 s without
     toks = persist_tracked(
         docs.select("source", F.explode(words(F.col("text"))).alias("w")).filter(
             F.col("w") != ""
@@ -2293,6 +2291,7 @@ def q_domain_reweight_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ce_nats"),
         )
     )
+    # cache pays at sf0.1: q_domain_reweight_step 1.21 s, 1.35 s without
     ce = persist_tracked(ce)  # |sources| rows: feeds min() AND the step
     min_ce = ce.agg(F.min("ce_nats").alias("min_ce"))
     base = ce.crossJoin(F.broadcast(min_ce)).select(
@@ -2313,6 +2312,7 @@ def q_domain_reweight_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).cast("double"),
     )
+    # cache pays at sf0.1: q_domain_reweight_step 1.17 s, 1.28 s without
     unnorm = persist_tracked(unnorm)
     z = unnorm.agg(F.sum(F.col("u").cast(DEC)).cast("double").alias("z"))
     return (
@@ -2414,6 +2414,7 @@ def q_filter_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
         )
     )
+    # cache pays at sf0.1: q_filter_attribution 0.41 s, 0.51 s without
     cells = persist_tracked(cells)  # ≤16 rows: feeds total AND output
     total = cells.agg(F.sum("n_docs").alias("total"))
     return (
@@ -2482,6 +2483,7 @@ def q_global_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         h28(F.concat(F.lit("shuffle|"), F.col("doc_id").cast("string"))).alias("k"),
     ).withColumn("bucket", F.col("k") % SHUFFLE_BUCKETS)
+    # cache pays at sf0.1: q_global_shuffle_order 0.36 s, 0.40 s without
     keyed = persist_tracked(keyed)  # feeds bucket counts AND the rank pass
     w_local = W.partitionBy("bucket").orderBy("k", "doc_id")
     ranked = keyed.withColumn("within", F.row_number().over(w_local))
@@ -2576,6 +2578,7 @@ def q_kneser_ney_crossentropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<struct<ctx:string,nxt:string>>"))
+    # cache pays at sf0.1: q_kneser_ney_crossentropy 1.29 s, 1.64 s without
     bg = persist_tracked(  # feeds the c2 count table AND the scoring joins
         toks.select("source", F.explode(grams).alias("g")).select(
             "source", F.col("g.ctx").alias("ctx"), F.col("g.nxt").alias("nxt")
@@ -2592,6 +2595,7 @@ def q_kneser_ney_crossentropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1: 2.08 → 2.55 s solo min-of-5; the extra exchange +
     # materialized cache cost more than the joins it shrank. Reverted;
     # decision recorded in OPTIMIZATION_r15.md.)
+    # cache pays at sf0.1: q_kneser_ney_crossentropy 1.36 s, 2.36 s without
     c2 = persist_tracked(  # feeds s1, s2, tt AND the scoring joins
         bg.groupBy("ctx", "nxt").agg(F.count(F.lit(1)).alias("c2"))
     )
@@ -2688,6 +2692,7 @@ def q_doc_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram LM — integer micro-nat scores, integer-division banding,
     rounded-term decimal average (see the section rationale)."""
     docs = parallelize(load_table(spark, sf_dir, "documents"))
+    # cache pays at sf0.1: q_doc_perplexity_filter 0.83 s, 0.93 s without
     toks = persist_tracked(
         docs.select(
             "doc_id", "source", F.explode(words(F.col("text"))).alias("w")

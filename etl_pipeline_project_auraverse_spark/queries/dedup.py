@@ -25,11 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 from etl_pipeline_project_auraverse_spark.cache import memo_table
 from etl_pipeline_project_auraverse_spark.functions.text import h28, h60, norm_text, words
 from etl_pipeline_project_auraverse_spark.functions.vectors import sql_cosine
 from etl_pipeline_project_auraverse_spark.queries import register
-from etl_pipeline_project_auraverse_spark.queries._util import parallelize, persist_tracked
+from etl_pipeline_project_auraverse_spark.queries._util import parallelize
 from etl_pipeline_project_auraverse_spark.session import load_table
 
 # ---------------------------------------------------------------------------
@@ -430,6 +431,7 @@ def minhash_sketch_bands(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         .withColumn("n", F.size("hs"))
     )
+    # cache pays at sf0.1: q_dedup_incremental_minhash 1.35 s, 1.70 s without
     sketch = persist_tracked(sketch)
     band_structs = F.array(
         *[
@@ -661,6 +663,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(unpacked)
     # sig feeds both sides of the block self-join — persist, and
     # explode blocks in one pass
+    # cache pays at sf0.1: q_dedup_simhash 1.62 s, 2.71 s without
     sig = persist_tracked(bitsums.select("doc_id", simhash.alias("simhash")))
     mask = (1 << SH_BLOCK_BITS) - 1
     block_structs = F.array(
@@ -1220,6 +1223,7 @@ def q_dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
     # tower (df count over h, rank + size over doc_id) executed twice,
     # once per join side (plan before: the tower appears duplicated
     # under the join; after: one tower + two InMemoryTableScans)
+    # cache pays at sf0.1: q_dedup_prefix_filter_jaccard 1.81 s, 2.22 s without
     prefix = persist_tracked(
         ranked.filter(
             F.col("__rk") <= F.col("__n") - F.ceil(F.lit(PF_J) * F.col("__n")) + 1
@@ -1426,6 +1430,7 @@ def q_dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
     )
     tf = toks.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
+    # cache pays at sf0.1: q_dedup_tfidf_cosine 0.82 s, 0.85 s without
     tf = persist_tracked(tf)  # feeds dfreq AND the weight projection
     dfreq = (
         tf.groupBy("w")
@@ -1434,6 +1439,7 @@ def q_dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = docs.agg(F.count(F.lit(1)).alias("n"))
     idf = F.round(F.log(F.col("n") * 1.0 / F.col("df")), 6)
+    # cache pays at sf0.1: q_dedup_tfidf_cosine 0.73 s, 0.96 s without
     wt = persist_tracked(  # feeds norms AND both sides of the pair join
         tf.join(F.broadcast(dfreq), "w")
         .crossJoin(F.broadcast(n))
@@ -1917,17 +1923,17 @@ def q_cross_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builds the per-shingle source set (collect_set dedups, its state
     # bounded by |sources|), then pairs explode map-side from the
     # sorted set (the copurchase-basket pattern) and sizes explode the
-    # same cached rows. The old plan shuffled the distinct (source, h)
+    # same rows. The old plan shuffled the distinct (source, h)
     # table three more times (the distinct itself + both sides of the
     # h self-join); results are identical — n_common(a,b) counts the
     # shingles whose source set contains both, n(a) the sets containing
     # a.
-    hs = persist_tracked(
+    hs = (
         shingle_index(spark, sf_dir)
         .join(docs.select("doc_id", "source"), "doc_id")
         .groupBy("h")
         .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
-    )  # feeds sizes + the pair explode
+    )
     sz = (
         hs.select(F.explode("srcs").alias("source"))
         .groupBy("source")
@@ -2058,6 +2064,7 @@ def q_source_similarity_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs explode map-side from the sorted set, and the (source, h)
     # rows the signature needs explode back out of the same cached
     # table.
+    # cache pays at sf0.1: q_source_similarity_minhash 1.16 s, 1.83 s without
     hs = persist_tracked(
         shingle_index(spark, sf_dir)
         .join(src, "doc_id")
@@ -2070,6 +2077,7 @@ def q_source_similarity_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fused |sources|-row result is persisted because it feeds both
     # sides of the broadcast cross-pairing AND the two size lookups
     # below.
+    # cache pays at sf0.1: q_source_similarity_minhash 1.12 s, 1.55 s without
     stats = persist_tracked(
         shs.groupBy("source").agg(
             F.count(F.lit(1)).alias("n"),
@@ -2232,12 +2240,12 @@ def q_dedup_band_geometry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH band geometries against exact-Jaccard truth at one threshold."""
     shc = capped_shingle_index(spark, sf_dir)
     jac = F.col("n_common") * 1.0 / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    tr = persist_tracked(  # joined against each geometry's candidates
+    tr = (
         capped_pair_stats(spark, sf_dir)
         .filter(jac >= BAND_SWEEP_TAU)
         .select("doc_a", "doc_b")
     )
-    mhc = persist_tracked(  # scanned once per geometry
+    mhc = (
         shc.groupBy("doc_id").agg(
             *[
                 F.min(
@@ -2441,9 +2449,7 @@ def q_dedup_keep_policy_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars", quality.alias("quality")
     )
-    m = persist_tracked(  # one window pass per policy + the totals
-        comp.join(docs, "doc_id")
-    )
+    m = comp.join(docs, "doc_id")
     tot = m.agg(
         F.countDistinct("cluster_id").alias("n_clusters"),
         F.count(F.lit(1)).alias("n_cluster_docs"),

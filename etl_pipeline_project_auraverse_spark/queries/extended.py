@@ -17,12 +17,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 from etl_pipeline_project_auraverse_spark.functions.text import words
 from etl_pipeline_project_auraverse_spark.queries import register
 from etl_pipeline_project_auraverse_spark.queries._util import (
     dec_sum,
     parallelize,
-    persist_tracked,
     sql_dec_avg,
     sql_dec_sum,
 )
@@ -131,9 +131,7 @@ def q_range_join_purchase_context(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tok = persist_tracked(
-        parallelize(docs).select("doc_id", F.explode(words(F.col("text"))).alias("term"))
-    )
+    tok = parallelize(docs).select("doc_id", F.explode(words(F.col("text"))).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_ = tok.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     # corpus size stays a lazy 1-row aggregate broadcast into the plan —
@@ -821,6 +819,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "monetary",
         )
     )
+    # cache pays at sf0.1: q_rfm_segmentation 1.97 s, 2.45 s without
     cust = persist_tracked(cust)  # feeds the bounds pass AND scoring
     melted = cust.select(
         "o_custkey",

@@ -32,16 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 from etl_pipeline_project_auraverse_spark.functions.vectors import (
     dot,
     sql_cosine,
     sql_dot,
 )
 from etl_pipeline_project_auraverse_spark.queries import register
-from etl_pipeline_project_auraverse_spark.queries._util import (
-    parallelize as _par,
-    persist_tracked,
-)
+from etl_pipeline_project_auraverse_spark.queries._util import parallelize as _par
 from etl_pipeline_project_auraverse_spark.queries.similarity import (
     gemm_partial_topk,
     sql_centroid_cte,
@@ -922,6 +920,7 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("score")
             )
         )
+        # cache pays at sf0.1: q_pca_power_iteration 2.44 s, 3.33 s without
         u = persist_tracked(
             comps.join(F.broadcast(scores), "vec_id")
             .groupBy("dim")
@@ -1077,14 +1076,12 @@ def _seed_table(emb: DataFrame) -> DataFrame:
 
 def _residuals(emb: DataFrame) -> DataFrame:
     """(vec_id, centroid_id, residual): each vector minus its home
-    centroid, rounded to 6dp per component. Persisted: the codebook
-    build AND the per-vector encoding both consume it (cache-manager
-    plan matching dedupes the repeated calls)."""
+    centroid, rounded to 6dp per component."""
     from etl_pipeline_project_auraverse_spark.queries.similarity import (
         centroid_assignments,
     )
 
-    return persist_tracked(
+    return (
         centroid_assignments(emb)
         .join(emb, "vec_id")
         .join(F.broadcast(_seed_table(emb)), "centroid_id")
@@ -1566,23 +1563,14 @@ def _logreg_fit(spark: SparkSession, sf_dir: str):
     pipeline would score with an already-fitted model."""
     from etl_pipeline_project_auraverse_spark.queries._util import parallelize
 
-    from etl_pipeline_project_auraverse_spark.queries._util import (
-        persist_tracked,
-    )
-
     li = load_table(spark, sf_dir, "lineitem")
     # parallelize: the per-row sigmoid + decimal accumulation is the
     # expensive part, and a small single-file scan would otherwise run
     # it on ONE core (measured 2.7 s -> 0.4 s per step at sf0.1).
-    # persist: every GD step and every downstream metric/AUC consumer
-    # re-aggregates this frame — without the cache each action re-runs
-    # the scan + repartition + feature projection.
-    feat = persist_tracked(
-        parallelize(
-            li.selectExpr(
-                f"{_LOGREG_Y} AS y",
-                *[f"{expr} AS {n}" for n, expr in _LOGREG_FEATS],
-            )
+    feat = parallelize(
+        li.selectExpr(
+            f"{_LOGREG_Y} AS y",
+            *[f"{expr} AS {n}" for n, expr in _LOGREG_FEATS],
         )
     )
 

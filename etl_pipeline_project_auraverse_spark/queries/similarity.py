@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 from etl_pipeline_project_auraverse_spark.functions.vectors import (
     cosine,
     norm2,
@@ -29,7 +30,6 @@ from etl_pipeline_project_auraverse_spark.functions.vectors import (
 from etl_pipeline_project_auraverse_spark.queries import register
 from etl_pipeline_project_auraverse_spark.queries._util import (
     dec_avg,
-    persist_tracked,
     sql_dec_avg,
     two_level_rank,
 )
@@ -93,7 +93,7 @@ def _lsh_buckets(emb: DataFrame) -> DataFrame:
     """Sign-LSH signatures via posexplode + groupBy: the hyperplane
     dot products run as codegen'd sums over (vec_id, dim, value) rows
     instead of interpreted per-element array folds (~10x). Bit j uses
-    the same round-then-sign rule as ``functions.vectors.lsh_signature``
+    the same round-then-sign rule as ``functions.vectors.sql_lsh_signature``
     so bucket ids agree with the DuckDB oracle."""
     from etl_pipeline_project_auraverse_spark.functions.vectors import (
         HP_MOD,
@@ -146,6 +146,7 @@ def _lsh_buckets(emb: DataFrame) -> DataFrame:
 )
 def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
+    # cache pays at sf0.1: q_ann_lsh_cosine 0.60 s, 0.67 s without
     sig = persist_tracked(  # both sides of the bucket self-join
         emb.join(_lsh_buckets(emb), "vec_id").select("vec_id", "embedding", "bucket")
     )
@@ -272,17 +273,10 @@ def _centroid_scored(emb: DataFrame) -> DataFrame:
             )
             yield out[cols]
 
-    scored = emb.select("vec_id", "embedding").mapInPandas(
+    return emb.select("vec_id", "embedding").mapInPandas(
         score_topp,
         schema="vec_id long, centroid_id long, cos_to_centroid double, rn int",
     )
-    # persisted: assignments, probes, residual codes, LUTs, and block
-    # dots ALL hang off this one scoring pass — Spark's cache manager
-    # matches the canonicalized plan, so the repeated
-    # centroid_probes()/centroid_assignments() calls inside one query
-    # share a single cached copy instead of re-running the scorer per
-    # consumer
-    return persist_tracked(scored)
 
 
 def centroid_assignments(emb: DataFrame) -> DataFrame:
@@ -395,11 +389,11 @@ IVF_NPROBE = 3
 def _ivf_sides(spark: SparkSession, sf_dir: str):
     """Shared multi-probe plumbing: (qprobe, blocked) — the query side
     expanded to its top-P blocks, and the corpus blocked by home
-    centroid. ONE scoring pass feeds both (probes persisted; home
-    blocks are its probe_rank=1 slice)."""
+    centroid. One scoring plan feeds both (home blocks are its
+    probe_rank=1 slice)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    probes = persist_tracked(centroid_probes(emb, IVF_NPROBE))
-    blocked = persist_tracked(
+    probes = centroid_probes(emb, IVF_NPROBE)
+    blocked = (
         emb.join(
             probes.filter(F.col("probe_rank") == 1).select("vec_id", "centroid_id"),
             "vec_id",
@@ -765,6 +759,7 @@ LSH_RECALL_QUERY_MAX = 20
 )
 def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
+    # cache pays at sf0.1: q_ann_lsh_recall 1.18 s, 1.30 s without
     sig = persist_tracked(
         emb.join(_lsh_buckets(emb), "vec_id").select("vec_id", "embedding", "bucket")
     )
@@ -894,6 +889,7 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
+    # cache pays at sf0.1: q_ann_lsh_multiprobe 0.62 s, 0.77 s without
     sig = persist_tracked(
         emb.join(_lsh_buckets(emb), "vec_id").select("vec_id", "embedding", "bucket")
     )
@@ -1020,6 +1016,7 @@ def q_embedding_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 255
         ),
     )
+    # cache pays at sf0.1: q_embedding_sq8_recall 1.23 s, 1.33 s without both
     corpus = persist_tracked(
         emb.crossJoin(F.broadcast(stats)).select(
             "vec_id", "embedding", dequant.alias("qe")
@@ -1048,6 +1045,7 @@ def q_embedding_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine(F.col("q_emb"), F.col("embedding")).alias("cos_exact"),
         cosine(F.col("q_emb"), F.col("qe")).alias("cos_quant"),
     )
+    # cache pays at sf0.1: q_embedding_sq8_recall 1.23 s, 1.33 s without both
     pairs = persist_tracked(pairs)
     exact_r = _topk("cos_exact", pairs)
     quant_r = _topk("cos_quant", pairs)
@@ -1300,6 +1298,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.broadcast(emb.filter(F.col("vec_id") < N_QUERY).alias("q"))
     c = emb.alias("c")
     w_pool = W.partitionBy("query_id").orderBy(F.col("rel").desc(), "cand_id")
+    # cache pays at sf0.1: q_mmr_rerank 1.65 s, 1.94 s without
     pool = persist_tracked(
         q.join(c, F.col("q.vec_id") != F.col("c.vec_id"))
         .select(
@@ -1317,7 +1316,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     eb = emb.select(
         F.col("vec_id").alias("b"), F.col("embedding").alias("eb")
     )
-    psim = persist_tracked(
+    psim = (
         pool.select("query_id", F.col("cand_id").alias("a"))
         .join(
             pool.select(
@@ -1616,7 +1615,7 @@ def q_ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelize the corpus side: the broadcast join streams it, and a
     # single-file scan would score every (query, candidate, level)
     # cosine on ONE core
-    pairs = persist_tracked(
+    pairs = (
         qset.alias("q")
         .join(parallelize(emb).alias("c"), F.col("q.vec_id") != F.col("c.vec_id"))
         .select(
@@ -1859,7 +1858,6 @@ def q_embedding_outlier_maha(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("d", "vf")
     ).select("vec_id", "label", "d", F.col("vf").cast("double").alias("v"))
-    vals = persist_tracked(vals)  # feeds the stats build AND the scoring join
     stats = vals.groupBy("label", "d").agg(
         F.round(F.sum(F.col("v").cast("decimal(25,6)")).cast("double") / F.count(F.lit(1)), 9)
         .cast("double")
@@ -1967,6 +1965,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = W.partitionBy("query_id", "is_pos").orderBy(F.col("sim").desc(), "cand_id")
+    # cache pays at sf0.1: q_hard_negative_mining 0.77 s, 0.84 s without
     best = persist_tracked(
         scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
     )
@@ -2015,7 +2014,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded-collect idiom of the iterative-ML family); each round is ONE
 # aggregate over the corpus with the K distances fused into a single
 # projection (constant-folded literals, whole-stage codegen), so the
-# full selection is K linear scans of a persisted frame — the textbook
+# full selection is K linear scans of the corpus — the textbook
 # distributed farthest-first shape.
 # ---------------------------------------------------------------------------
 KCENTER_K = 8
@@ -2086,10 +2085,8 @@ def q_kcenter_seed_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_pipeline_project_auraverse_spark.queries._util import parallelize
 
-    emb = persist_tracked(
-        parallelize(
-            load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        )
+    emb = parallelize(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
 
     # per-round argmax via the blocked-GEMM partial idiom (r12 ask #6

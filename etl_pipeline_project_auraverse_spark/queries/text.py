@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 from etl_pipeline_project_auraverse_spark.functions.text import (
     PUNCT_RE,
     STOPWORD_RE,
@@ -28,7 +29,6 @@ from etl_pipeline_project_auraverse_spark.queries._util import (
     DEC,
     dec_avg,
     parallelize,
-    persist_tracked,
     sql_dec_avg,
 )
 from etl_pipeline_project_auraverse_spark.session import load_table
@@ -310,9 +310,8 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigram distincts), joined per document — the only shuffles are the
     per-document groupBys, keyed by doc_id (well distributed at any
     scale)."""
-    from etl_pipeline_project_auraverse_spark.queries._util import persist_tracked
-
     docs = load_table(spark, sf_dir, "documents")
+    # cache pays at sf0.1: q_repetition_stats 1.49 s, 1.57 s without
     base = persist_tracked(  # feeds the bigram AND trigram branches
         parallelize(docs)
         .select("doc_id", "lang", words(F.col("text")).alias("w"))
@@ -1080,9 +1079,6 @@ def q_source_lang_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     source's language distribution and the corpus-wide one."""
     d = load_table(spark, sf_dir, "documents")
     csl = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c_sl"))
-    from etl_pipeline_project_auraverse_spark.cache import persist_tracked
-
-    csl = persist_tracked(csl)
     ns = csl.groupBy("source").agg(F.sum("c_sl").alias("n_s"))
     cl = csl.groupBy("lang").agg(F.sum("c_sl").alias("c_l"))
     t = csl.agg(F.sum("c_sl").alias("n"))
@@ -1257,6 +1253,7 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrases = phrases.withColumn(
         "plen", F.size(F.split(F.col("phrase"), r"\s+")).cast("long")
     )
+    # cache pays at sf0.1: q_rake_keywords 0.47 s, 0.53 s without
     phrases = persist_tracked(phrases)
     word_occ = phrases.select(
         "phrase",
@@ -1495,6 +1492,7 @@ def q_unigram_crossentropy_by_source(
     word key where AQE spreads stopword skew. Log-probs ride as exact
     micro-nat BIGINTs, so only the final division touches floats."""
     docs = parallelize(load_table(spark, sf_dir, "documents"))
+    # cache pays at sf0.1: q_unigram_crossentropy_by_source 0.78 s, 0.88 s without
     toks = persist_tracked(
         docs.select(
             "source", F.explode(words(F.col("text"))).alias("w")
@@ -1575,12 +1573,8 @@ def q_vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = persist_tracked(
-        docs.select(F.explode(words(F.col("text"))).alias("w")).filter(
-            F.col("w") != ""
-        )
-    )
-    corpus = persist_tracked(toks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
+    toks = docs.select(F.explode(words(F.col("text"))).alias("w")).filter(F.col("w") != "")
+    corpus = toks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
     totals = corpus.agg(
         F.count(F.lit(1)).alias("v"), F.sum("cnt").alias("n")
     ).collect()[0]
@@ -1710,6 +1704,7 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sel_arr = F.flatten(F.transform(F.array(hs), _winnow))
     sel = toks.select("doc_id", F.explode(sel_arr).alias("fp"))
+    # cache pays at sf0.1: q_winnowing_fingerprints 0.91 s, 1.17 s without
     sel = persist_tracked(sel)  # feeds the shared census AND the per-doc join
     shared = (
         sel.groupBy("fp")
@@ -1784,10 +1779,8 @@ def q_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = parallelize(load_table(spark, sf_dir, "documents"))
-    toks = persist_tracked(  # total count + sketch pass + exact recount
-        docs.select(F.explode(words(F.col("text"))).alias("token")).filter(
-            F.col("token") != ""
-        )
+    toks = docs.select(F.explode(words(F.col("text"))).alias("token")).filter(
+        F.col("token") != ""
     )
     total = toks.agg(F.count(F.lit(1)).alias("total"))
     threshold = total.select((F.col("total") * F.lit(HH_TOK_PHI)).alias("threshold"))
@@ -1844,10 +1837,8 @@ def q_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token OOV rate per source against the top-``OOV_VOCAB_K``
     corpus vocabulary."""
     docs = parallelize(load_table(spark, sf_dir, "documents"))
-    toks = persist_tracked(  # vocabulary build + scoring join
-        docs.select("source", F.explode(words(F.col("text"))).alias("w")).filter(
-            F.col("w") != ""
-        )
+    toks = docs.select("source", F.explode(words(F.col("text"))).alias("w")).filter(
+        F.col("w") != ""
     )
     vocab = (
         toks.groupBy("w")

@@ -1192,7 +1192,7 @@ def q_kaplan_meier_customer_lifetime(spark: SparkSession, sf_dir: str) -> DataFr
     in DECIMAL(25,6) so both engines sum identically (the established
     determinism idiom for ln/exp-derived terms).
     """
-    from etl_pipeline_project_auraverse_spark.queries._util import DEC, persist_tracked
+    from etl_pipeline_project_auraverse_spark.queries._util import DEC
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("od")
@@ -1209,7 +1209,6 @@ def q_kaplan_meier_customer_lifetime(spark: SparkSession, sf_dir: str) -> DataFr
             .alias("is_event"),
         )
     )
-    per_c = persist_tracked(per_c)
     n_total = per_c.groupBy().agg(F.count("*").alias("n_total"))
     by_t = per_c.groupBy("dur").agg(
         F.sum("is_event").cast("long").alias("d"),

@@ -34,11 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 from etl_pipeline_project_auraverse_spark.queries import register
 from etl_pipeline_project_auraverse_spark.queries._util import (
     DEC,
     dec_sum,
-    persist_tracked,
     sql_dec_sum,
 )
 from etl_pipeline_project_auraverse_spark.session import load_table
@@ -556,6 +556,7 @@ def q_customer_quartile_migration(spark: SparkSession, sf_dir: str) -> DataFrame
     # ONE customer aggregate computes BOTH halves (the old plan scanned
     # orders twice and union-distinct'ed the customer sets; every
     # customer with an order lands here by construction)
+    # cache pays at sf0.1: q_customer_quartile_migration 1.50 s, 2.02 s without
     halves = persist_tracked(
         with_mid.groupBy("o_custkey").agg(
             half_sum(F.col("o_orderdate") <= F.col("m")).alias("rev1"),

@@ -9,11 +9,8 @@ Reader design (100 TB posture): files are listed by Spark's
 Python boundary zero-copy on both sides). The schema is inferred
 driver-side from ONE file's footer (a metadata read, not a data scan)
 and declared to Spark up front — no inference pass over the data.
-
-Writer: ``write_arrow_ipc_single`` is the single-file contract twin of
-``sinks.write_csv_single`` (driver-side ``df.toArrow()``, result-sized
-frames only); the scale path for Arrow-speaking consumers remains
-parquet via ``write_partitioned``.
+The write path for Arrow-speaking consumers is parquet via
+``write_partitioned``.
 """
 
 from __future__ import annotations
@@ -99,16 +96,3 @@ def read_arrow_ipc(spark: SparkSession, path: str, schema: str | None = None) ->
                 yield tbl.to_pandas()
 
     return files.select("content").mapInPandas(decode, schema=ddl)
-
-
-def write_arrow_ipc_single(df: DataFrame, path: str) -> int:
-    """Single-file Feather-v2 writer (driver-side, result-sized frames
-    only — same contract as the CSV single-file sink); returns the row
-    count."""
-    import pyarrow.ipc as ipc
-
-    tbl = df.toArrow()
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with ipc.new_file(path, tbl.schema) as w:
-        w.write_table(tbl)
-    return tbl.num_rows

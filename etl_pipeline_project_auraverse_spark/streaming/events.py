@@ -361,8 +361,8 @@ def upsert_stream(
     MERGE-INTO sink for a change feed. Exactly-once across restarts by
     the same swapped-in batch-id contract as ``rollup_stream``; delete
     tombstones persist in the stored snapshot (so late-arriving older
-    upserts stay dead) and are filtered by
-    ``operators/cdc.read_upsert_snapshot``."""
+    upserts stay dead), so a reader of ``state_dir/snapshot`` drops the
+    rows whose op column holds the delete op."""
     from etl_pipeline_project_auraverse_spark.operators.cdc import (
         apply_upsert_batch,
     )

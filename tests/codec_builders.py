@@ -1,9 +1,10 @@
 """Test-fixture writers for the from-scratch decoders: PNG, GIF, Avro,
-XLSX and PCM WAV payloads built from the format specifications with
-the standard library and numpy (the parsers under test are
-``operators/png_codec.py``, ``operators/gif_codec.py``,
-``sources/avro_table.py``, ``sources/xlsx_table.py`` and the WAV seam
-in ``operators/multimodal.py``).
+XLSX, PCM WAV and FAKEIMG payloads built from the format specifications
+with the standard library and numpy, plus a single-file Arrow IPC
+writer (the parsers under test are ``operators/png_codec.py``,
+``operators/gif_codec.py``, ``sources/avro_table.py``,
+``sources/xlsx_table.py``, the WAV and image seams in
+``operators/multimodal.py`` and ``sources/arrow_ipc.py``).
 
 Every writer is deterministic (the same arguments give the same
 bytes), except that the XLSX zip members carry the time of writing.
@@ -24,6 +25,7 @@ import zlib
 import numpy as np
 
 from etl_pipeline_project_auraverse_spark.operators.gif_codec import _interlace_order
+from etl_pipeline_project_auraverse_spark.operators.multimodal import FAKE_MAGIC
 from etl_pipeline_project_auraverse_spark.operators.png_codec import _ADAM7, _SIG
 from etl_pipeline_project_auraverse_spark.sources.avro_table import _MAGIC
 from etl_pipeline_project_auraverse_spark.sources.xlsx_table import _NS
@@ -420,3 +422,24 @@ def synth_wav_bytes(
         w.writeframes(samples.tobytes())
     return bio.getvalue()
 
+
+def synth_image_bytes(doc_id: int, width: int = 8, height: int = 6, channels: int = 1) -> bytes:
+    """FAKEIMG payload: magic, width/height (uint16), channels (uint8),
+    then row-major uint8 pixels (doc_id * 31 + i * 7) % 256."""
+    n = width * height * channels
+    pixels = bytes(((doc_id * 31 + i * 7) % 256) for i in range(n))
+    return FAKE_MAGIC + struct.pack("<HHB", width, height, channels) + pixels
+
+
+def write_arrow_ipc_single(df, path: str) -> int:
+    """Write ``df`` to one Feather-v2 file through the driver
+    (``df.toArrow()``); returns the row count."""
+    import os
+
+    import pyarrow.ipc as ipc
+
+    tbl = df.toArrow()
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    with ipc.new_file(path, tbl.schema) as w:
+        w.write_table(tbl)
+    return tbl.num_rows

@@ -13,10 +13,10 @@ import pytest
 from etl_pipeline_project_auraverse_spark.sources.arrow_ipc import (
     arrow_ipc_ddl,
     read_arrow_ipc,
-    write_arrow_ipc_single,
 )
 from etl_pipeline_project_auraverse_spark.sources.tabular import read_table
 from etl_pipeline_project_auraverse_spark.session import load_table
+from tests.codec_builders import write_arrow_ipc_single
 
 
 def test_round_trip_single_file(spark, sf_dir, tmp_path):

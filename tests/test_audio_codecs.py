@@ -267,22 +267,3 @@ def test_pcm_path_matches_stdlib_wave():
         assert (sr, nch) == (w.getframerate(), w.getnchannels())
         want = np.frombuffer(w.readframes(w.getnframes()), dtype="<i2")
     assert np.array_equal(s, want)
-
-
-def test_decode_audio_mixed_payloads(spark):
-    from etl_pipeline_project_auraverse_spark.operators.multimodal import (
-        decode_audio,
-    )
-
-    rows = [
-        (1, bytearray(synth_wav_bytes(1))),
-        (2, bytearray(synth_mulaw_wav_bytes(2, 100))),
-        (3, bytearray(synth_ima_adpcm_wav_bytes(3))),
-        (4, bytearray(b"ID3\x03mp3-junk")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, content binary")
-    got = {r["doc_id"]: r for r in decode_audio(df).collect()}
-    assert set(got) == {1, 2, 3}  # the mp3 quarantines
-    assert got[2]["n_samples"] == 100
-    assert got[3]["n_samples"] == IMA_GATE_BLOCKS * IMA_GATE_SAMPLES_PER_BLOCK
-    assert all(got[k]["sample_rate"] == 8000 for k in got)

@@ -141,9 +141,7 @@ def test_read_save_roundtrip(engine, tmp_path):
     assert back.count() == src.filter("n_regionkey = 0").count()
 
     arrow = str(tmp_path / "nation.arrow")
-    from etl_pipeline_project_auraverse_spark.sources.arrow_ipc import (
-        write_arrow_ipc_single,
-    )
+    from tests.codec_builders import write_arrow_ipc_single
 
     write_arrow_ipc_single(src, arrow)
     assert engine.read(arrow).count() == src.count()

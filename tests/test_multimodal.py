@@ -9,13 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.operators import multimodal as mm
-from tests.codec_builders import synth_wav_bytes
+from tests.codec_builders import synth_image_bytes, synth_wav_bytes
 
 
 @pytest.fixture(scope="module")
 def media_df(spark):
     rows = [
-        (i, bytearray(mm.synth_image_bytes(i, width=8, height=6, channels=1)), "image/fake")
+        (i, bytearray(synth_image_bytes(i, width=8, height=6, channels=1)), "image/fake")
         for i in range(20)
     ] + [(99, bytearray(b"\x00\x01\x02notanimage"), "application/octet-stream")]
     return spark.createDataFrame(
@@ -63,25 +63,16 @@ def test_bmp_decodes_for_real(spark):
         assert abs(r["mean_pixel"] - float(np.mean(vals))) < 1e-6
 
 
-def test_wav_decodes_for_real(spark):
-    rows = [(i, bytearray(synth_wav_bytes(i, n_samples=800, sample_rate=8000)),
-             "audio/wav") for i in range(2)]
-    df = spark.createDataFrame(rows, "doc_id long, content binary, media_type string")
-    got = {r["doc_id"]: r for r in mm.decode_audio(df).collect()}
-    assert set(got) == {0, 1}
-    for r in got.values():
-        assert r["sample_rate"] == 8000
-        assert r["n_channels"] == 1
-        assert r["n_samples"] == 800
-        assert abs(r["duration_sec"] - 0.1) < 1e-9
-        # a sine at 12000 amplitude has RMS ~ 12000/sqrt(2) ~ 8485
-        assert 7500 < r["rms"] < 9500
-        assert 11000 <= r["peak"] <= 12000
+def test_wav_decodes_for_real():
+    buf = synth_wav_bytes(0, n_samples=800, sample_rate=8000)
+    sr, nch, s = mm._decode_audio_bytes(buf)
+    assert (sr, nch, len(s)) == (8000, 1, 800)
+    # a sine at 12000 amplitude has RMS ~ 12000/sqrt(2) ~ 8485
+    assert 7500 < float(np.sqrt((s.astype(np.float64) ** 2).mean())) < 9500
+    assert 11000 <= int(np.abs(s).max()) <= 12000
 
 
-def test_audio_skips_non_wav(spark):
-    rows = [(0, bytearray(b"ID3\x03not-an-mp3-really"), "audio/mp3"),
-            (1, bytearray(synth_wav_bytes(1)), "audio/wav")]
-    df = spark.createDataFrame(rows, "doc_id long, content binary, media_type string")
-    got = [r["doc_id"] for r in mm.decode_audio(df).collect()]
-    assert got == [1]
+def test_audio_skips_non_wav():
+    with pytest.raises(NotImplementedError):
+        mm._decode_audio_bytes(b"ID3\x03not-an-mp3-really")
+    assert mm._decode_audio_bytes(synth_wav_bytes(1))[0] == 8000

@@ -4,8 +4,8 @@ A pure-Python AST scan (no Spark). An import in a package module is used
 when the module references the name it binds (a name, or a string in
 ``__all__``), or when another package or test module imports that name
 from the module (``from <module> import <name>``, absolute or
-relative): such a name is a re-export, as ``queries/_util.py`` re-exports
-``cache.persist_tracked``.
+relative): such a name is a re-export (``from .a import f`` in ``b``,
+then ``from .b import f`` elsewhere).
 """
 
 from __future__ import annotations

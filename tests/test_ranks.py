@@ -4,12 +4,16 @@ plan."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.operators.ranks import (
     average_rank2,
     ordered_prefix_sums,
 )
+from tests.conftest import assert_matches_oracle
 
 
 def test_prefix_sums_match_window_definition(spark, sf_dir):
@@ -191,3 +195,20 @@ def test_spearman_partial_null_listwise_semantics(spark):
     assert three[("x", "z")] == ref_rho(
         [r[0] for r in kept], [r[2] for r in kept]
     )
+
+
+@pytest.mark.parametrize("name", ["q_ks_price_by_returnflag", "q_spearman_corr_lineitem"])
+def test_partition_keyed_totals_need_no_cache(spark, monkeypatch, name):
+    """The per-partition totals are joined back onto the range-split
+    frame they were counted on; the answer must not depend on a cache
+    keeping that split fixed. With every persist a no-op, both queries
+    still match their oracles at sf0.1, where a recomputed range split
+    moves rows between partitions."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from etl_pipeline_project_auraverse_spark.queries import ORACLE, QUERIES, load_all
+
+    load_all()
+    monkeypatch.setattr(DataFrame, "persist", lambda self, *a, **k: self)
+    sf = str(Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.1")
+    assert_matches_oracle(spark, name, QUERIES[name], ORACLE[name], sf)

@@ -1,4 +1,4 @@
-"""Tests for skew-safe aggregation/join (exact equivalence to the
+"""Tests for skew-safe aggregation (exact equivalence to the
 naive plan) and approximate sketches (bounded error vs exact)."""
 
 from __future__ import annotations
@@ -41,21 +41,6 @@ def test_salted_agg_rejects_non_decomposable(spark, sf_dir):
 
     with pytest.raises(ValueError, match="not decomposable"):
         skew.salted_agg(ev, ["event_type"], {"a": ("avg", "value")})
-
-
-def test_salted_join_matches_naive(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
-    )
-    salted = skew.salted_join(li, orders, "l_orderkey", n_salts=4)
-    naive = li.join(orders, "l_orderkey")
-    assert salted.count() == naive.count()
-    s = salted.groupBy("o_orderpriority").agg(F.sum("l_quantity").alias("q"))
-    n = naive.groupBy("o_orderpriority").agg(F.sum("l_quantity").alias("q"))
-    assert {(r["o_orderpriority"], round(r["q"], 2)) for r in s.collect()} == {
-        (r["o_orderpriority"], round(r["q"], 2)) for r in n.collect()
-    }
 
 
 def test_approx_count_distinct_error_bound(spark, sf_dir):

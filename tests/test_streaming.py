@@ -19,6 +19,16 @@ from etl_pipeline_project_auraverse_spark.session import load_table
 from etl_pipeline_project_auraverse_spark.streaming import events as se
 
 
+def read_upsert_snapshot(spark, state_dir: str, op_col=None, delete_op: str = "D"):
+    """The upsert state as a reader sees it: the stored snapshot (a
+    crashed swap recovered first) minus delete tombstones."""
+    from etl_pipeline_project_auraverse_spark.operators.incremental import _recover
+
+    _recover(state_dir, "snapshot")
+    df = spark.read.parquet(os.path.join(state_dir, "snapshot"))
+    return df if op_col is None else df.filter(F.col(op_col) != delete_op)
+
+
 def _write_event_file(path: str, rows: list[tuple], mtime: float) -> None:
     """One parquet file = one micro-batch (maxFilesPerTrigger=1); the
     file stream orders batches by modification time, which we pin so
@@ -425,7 +435,6 @@ def test_streaming_upsert_is_exactly_once(spark, events_path, tmp_path):
     from etl_pipeline_project_auraverse_spark.operators.cdc import (
         apply_changes,
         apply_upsert_batch,
-        read_upsert_snapshot,
     )
 
     state = str(tmp_path / "upsert_state")
@@ -474,7 +483,6 @@ def test_upsert_snapshot_survives_crashed_swap(spark, tmp_path):
 
     from etl_pipeline_project_auraverse_spark.operators.cdc import (
         apply_upsert_batch,
-        read_upsert_snapshot,
     )
 
     state = str(tmp_path / "crash_state")

@@ -103,8 +103,16 @@ def test_pipeline_jobs_carry_stage_labels(spark, tmp_path):
         )
         assert set(jobs) == STAGES, jobs
         assert sc.getLocalProperty("spark.job.description") == "caller"
+
+        # a deadline-scoped run hands back the caller's group as well
+        sc.setJobGroup("caller-group", "caller", False)
+        run_etl_pipeline(spark, cfg, schema_dir=str(tmp_path / "s"), timeout_sec=60)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert sc.getLocalProperty("spark.job.interruptOnCancel") == "false"
     finally:
-        sc.setLocalProperty("spark.job.description", None)
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
 
     real_transform = pl.transform
 
