@@ -47,22 +47,36 @@ def _array_to_str(col: Column, dtype: T.ArrayType) -> Column:
 
 
 def flatten_columns(df: DataFrame, sep: str = "_") -> DataFrame:
-    """T10–T12: one flat projection from a nested schema."""
+    """T10–T12: one flat projection from a nested schema.
+
+    Raises ``ValueError`` naming them when two flat names are equal
+    ignoring case (keys ``A`` and ``a``): the session resolves column
+    names case-insensitively for every query it runs, so no later stage
+    could tell those columns apart."""
     out: list[Column] = []
+    names: dict[str, list[str]] = {}
 
     def walk(col: Column, dtype: T.DataType, name: str) -> None:
         if isinstance(dtype, T.StructType):
             for f in dtype.fields:
                 walk(col.getField(f.name), f.dataType, f"{name}{sep}{f.name}")
-        elif isinstance(dtype, T.ArrayType):
+            return
+        if isinstance(dtype, T.ArrayType):
             out.append(_array_to_str(col, dtype).alias(name))
         elif isinstance(dtype, T.MapType):
             out.append(F.to_json(col).alias(name))
         else:
             out.append(col.alias(name))
+        names.setdefault(name.lower(), []).append(name)
 
     for f in df.schema.fields:
         walk(F.col(f"`{f.name}`"), f.dataType, f.name)
+    clashes = [same for same in names.values() if len(same) > 1]
+    if clashes:
+        raise ValueError(
+            f"record keys collide when case is ignored: {clashes}; column "
+            "names resolve case-insensitively, so the table cannot keep them apart"
+        )
     return df.select(*out)
 
 

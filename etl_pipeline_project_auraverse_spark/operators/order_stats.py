@@ -9,14 +9,20 @@ for each target rank, the smallest value whose cumulative weight
 reaches that rank (weight 1 for percentiles):
 
 1. First pass: one ``groupBy(group)`` aggregate (rows, weight, min,
-   max). Given approximate global ``bounds`` it is instead one
-   ``groupBy(group, bucket)`` histogram, which also narrows every rank.
+   max). Given approximate global ``bounds`` (the percentile and the
+   weighted-median entry points take them, callers read them from the
+   parquet footer) it is instead one ``groupBy(group, bucket)``
+   histogram, which also narrows every rank. When no bucket that
+   crosses a rank holds more than ``HIST_FETCH_CAP`` rows, the next
+   step is the fetch (3).
 2. Up to 8 refinement passes. Each broadcasts a probe table (one row
-   per open (group, interval)) and runs one map-side-combinable
-   ``groupBy(probe, bucket)`` aggregate over ``HIST_BUCKETS``
-   equal-width buckets; the driver walks the collected buckets and
-   keeps, per rank, the one bucket that crosses it. A single-valued
-   interval resolves at once, so ties cannot stall the loop.
+   per open (group, interval); a local relation built on the driver,
+   so the broadcast starts no Python worker) and runs one
+   map-side-combinable ``groupBy(probe, bucket)`` aggregate over
+   ``HIST_BUCKETS`` equal-width buckets; the driver walks the collected
+   buckets and keeps, per rank, the one bucket that crosses it. A
+   single-valued interval resolves at once, so ties cannot stall the
+   loop.
 3. One filtered fetch of the remaining intervals (each at most
    ``HIST_FETCH_CAP`` rows) and an exact walk on the driver. An
    interval still holding more rows after the last pass raises
@@ -31,6 +37,9 @@ rows counted in that bucket. Integers above 2^53 and decimals stay
 exact; for ``decimal(38, s)`` Spark takes the offset at scale s-1, so
 two values 10^-s apart share a bucket and only the fetch (or the raise)
 separates them.
+
+The output is driver-assembled too: one row per group, returned as a
+local relation (``session.local_frame``).
 
 Precondition: LOW-CARDINALITY groups. The probe table is broadcast and
 the driver keeps per-group state, so thousands of groups are fine and
@@ -57,6 +66,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from etl_pipeline_project_auraverse_spark.session import local_frame
 
 HIST_BUCKETS = 8192  # histogram resolution per refinement pass
 HIST_FETCH_CAP = 65_536  # interval size below which rows are fetched exactly
@@ -161,6 +172,7 @@ def weighted_median_hist(
     weight_col: str,
     count_name: str = "total_weight",
     out_name: str = "weighted_median",
+    bounds: tuple[float, float] | None = None,
 ) -> DataFrame:
     """Exact lower weighted median per group: the smallest value whose
     cumulative BIGINT-cast weight, in value order, reaches half the
@@ -172,6 +184,10 @@ def weighted_median_hist(
     Weights must be non-negative; a group whose total is zero has no
     weighted median and produces no row. Rows with a null value or a
     null weight are ignored (the module's null contract).
+
+    ``bounds`` has the contract of :func:`hist_group_percentiles`:
+    approximate global value bounds that make the first pass a
+    histogram; values outside them clamp into the edge buckets.
     """
     g, v = group_col, value_col
     totals, picked = _select(
@@ -180,6 +196,7 @@ def weighted_median_hist(
         v,
         "__w",
         lambda tot: [(tot + 1) // 2] if tot > 0 else [],
+        bounds,
     )
     return _frame(
         df,
@@ -273,7 +290,8 @@ def _select(
         return probes
 
     def probe_rows(probes: dict) -> DataFrame:
-        table = spark.createDataFrame(
+        table = local_frame(
+            spark,
             [
                 (i, gv, lo, hi, _width(lo, hi))
                 for i, (gv, lo, hi, _, _) in enumerate(probes)
@@ -416,4 +434,4 @@ def _percentile_frame(
 def _frame(df: DataFrame, g: str, fields: list, rows: list) -> DataFrame:
     """The one output-schema builder: the group column keeps its type."""
     schema = StructType([StructField(g, df.schema[g].dataType)] + fields)
-    return df.sparkSession.createDataFrame(rows, schema)
+    return local_frame(df.sparkSession, rows, schema)

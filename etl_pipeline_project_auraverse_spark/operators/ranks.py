@@ -38,6 +38,7 @@ from etl_pipeline_project_auraverse_spark.cache import (
     local_checkpoint_tracked,
     register_checkpoint_ids,
 )
+from etl_pipeline_project_auraverse_spark.session import local_frame
 
 
 def ordered_prefix_sums(
@@ -103,7 +104,7 @@ def ordered_prefix_sums(
             for c in sum_cols
         ]
     )
-    offsets = spark.createDataFrame(data, off_schema)
+    offsets = local_frame(spark, data, off_schema)
     w_run = (
         Window.partitionBy("__pid")
         .orderBy(order_col)
@@ -155,7 +156,8 @@ def average_rank2(
         from pyspark.sql.types import LongType, StructField, StructType
 
         return F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 out,
                 StructType([vf, StructField(rank_name, LongType())]),
             )

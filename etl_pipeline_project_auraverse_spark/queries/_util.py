@@ -89,7 +89,14 @@ def parquet_column_bounds(
     min/max (multi-file dirs, stats disabled), in which case callers
     fall back to an aggregate pass. At 100 TB this is the same trick
     the scan planner itself uses for row-group pruning: the metadata
-    is O(row-groups), never the data."""
+    is O(row-groups), never the data.
+
+    Users: the ``bounds=`` of ``order_stats.hist_group_percentiles``
+    (q_percentiles_by_returnflag, q_winsorized_price_stats,
+    q_equidepth_histogram_price, q_mad_outlier_prices) and of
+    ``order_stats.weighted_median_hist``
+    (q_weighted_median_price_by_flag), where they make the first pass
+    the histogram."""
     try:
         import pyarrow.parquet as pq
 

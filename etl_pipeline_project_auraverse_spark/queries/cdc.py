@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_project_auraverse_spark.operators.cdc import apply_changes
 from etl_pipeline_project_auraverse_spark.queries import register
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 
 @register(
@@ -304,7 +304,8 @@ def q_incremental_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("mismatch_rows", LongType(), False),
         ]
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 applied,

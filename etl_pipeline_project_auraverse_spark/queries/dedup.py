@@ -31,7 +31,7 @@ from etl_pipeline_project_auraverse_spark.functions.text import h28, h60, norm_t
 from etl_pipeline_project_auraverse_spark.functions.vectors import sql_cosine
 from etl_pipeline_project_auraverse_spark.queries import register
 from etl_pipeline_project_auraverse_spark.queries._util import parallelize
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # Shared shingle-set builders (Spark + DuckDB twins)
@@ -1001,7 +1001,7 @@ def q_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
     cand = band_candidate_pairs(bands).withColumn("caught", F.lit(1))
-    th = spark.createDataFrame([(t,) for t in MH_RECALL_TAUS], "tau double")
+    th = local_frame(spark, [(t,) for t in MH_RECALL_TAUS], "tau double")
     return (
         truth.join(F.broadcast(th), F.col("jac") >= F.col("tau"))
         .join(cand, ["doc_a", "doc_b"], "left")
@@ -2328,7 +2328,7 @@ def q_dedup_band_geometry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("precision", DoubleType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,7 @@ from etl_pipeline_project_auraverse_spark.queries._util import (
     sql_dec_avg,
     sql_dec_sum,
 )
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # Banded range join: for each purchase, same-user events in the
@@ -616,7 +616,7 @@ def q_null_semantics_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("c_acctbal"))
         .alias("nb"),
     )
-    probe = spark.createDataFrame([(None, "null_probe"), (0.0, "zero_probe")], "pv double, tag string")
+    probe = local_frame(spark, [(None, "null_probe"), (0.0, "zero_probe")], "pv double, tag string")
     null_matches = (
         cust.join(F.broadcast(probe), F.expr("nb <=> pv"))
         .filter(F.col("tag") == "null_probe")

@@ -33,7 +33,7 @@ from etl_pipeline_project_auraverse_spark.queries.extended import (
     BASKET_CAP,
     MIN_PAIR_SUPPORT,
 )
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 TRI_TOP = 30
 
@@ -1124,6 +1124,7 @@ def q_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         pairs = nxt
         rows.append((i, census["n"], census["e"]))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "round long, nodes_remaining long, edges_remaining long"
     ).orderBy("round")

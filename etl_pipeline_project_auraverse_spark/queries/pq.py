@@ -45,7 +45,7 @@ from etl_pipeline_project_auraverse_spark.queries.similarity import (
     sql_centroid_cte,
     sql_probes_cte,
 )
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 
 # Driver-memoized trained coarse quantizers: k x 64 plain floats per
@@ -101,8 +101,8 @@ def trained_centroids_local(
         start = 0
     else:
         if start == iters:
-            return spark.createDataFrame(_TRAINED_CENT_MEMO[key(iters)], ddl)
-        cent = spark.createDataFrame(_TRAINED_CENT_MEMO[key(start)], ddl)
+            return local_frame(spark, _TRAINED_CENT_MEMO[key(iters)], ddl)
+        cent = local_frame(spark, _TRAINED_CENT_MEMO[key(start)], ddl)
     for _ in range(iters - start):
         cent = _update(_assign(emb, cent))
     rows = [
@@ -110,7 +110,7 @@ def trained_centroids_local(
         for r in cent.collect()
     ]
     _TRAINED_CENT_MEMO[key(iters)] = rows
-    return spark.createDataFrame(rows, ddl)
+    return local_frame(spark, rows, ddl)
 
 
 def _exact_ip_topk(emb: DataFrame) -> DataFrame:
@@ -945,7 +945,8 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     nrm_last = u.agg(
         F.round(F.sqrt(F.sum(F.col("u") * F.col("u"))), 6).alias("nrm")
     )
-    final_v = spark.createDataFrame(
+    final_v = local_frame(
+        spark,
         [(d, v[d]) for d in range(PQ_DIMS)], "dim int, v double"
     )
     return (
@@ -1646,7 +1647,8 @@ def q_logreg_train_two_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("accuracy"),
     )
-    weights = spark.createDataFrame(
+    weights = local_frame(
+        spark,
         [(n, w1[n], w2[n]) for n, _ in _LOGREG_FEATS],
         "feature string, w_iter1 double, w_iter2 double",
     )
@@ -1818,4 +1820,4 @@ def q_logreg_auc_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("auc", DoubleType(), True),  # null when single-class
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)

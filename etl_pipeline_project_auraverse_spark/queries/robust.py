@@ -30,7 +30,7 @@ from etl_pipeline_project_auraverse_spark.queries._util import (
     sql_dec_avg,
     sql_dec_sum,
 )
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 WINSOR_LO, WINSOR_HI = 0.05, 0.95
 N_BUCKETS = 8
@@ -442,7 +442,7 @@ def q_mad_outlier_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("n_outliers", LongType(), False),
         ]
     )
-    return spark.createDataFrame(out_rows, schema)
+    return local_frame(spark, out_rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1119,7 +1119,7 @@ def q_jackknife_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     if not per:
-        return spark.createDataFrame([(None, None, None)], schema)
+        return local_frame(spark, [(None, None, None)], schema)
     n = sum(r["n_b"] for r in per)
     s = float(sum(dec6(r["s_b"]) for r in per))
     reps = [
@@ -1135,7 +1135,7 @@ def q_jackknife_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_half_up(s / n, 6),
         round_half_up(math.sqrt((nb - 1.0) / nb * ss), 6),
     )
-    return spark.createDataFrame([row], schema)
+    return local_frame(spark, [row], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1980,9 +1980,13 @@ def q_weighted_median_price_by_flag(
     smallest price at which half the shipped units are covered).
     Delegates to ``operators/order_stats.weighted_median_hist``: the
     histogram-refinement selection at rank ``(total+1)//2``, with no
-    shuffle of the row stream."""
+    shuffle of the row stream. The parquet footer's price bounds make
+    its first pass the histogram."""
     from etl_pipeline_project_auraverse_spark.operators.order_stats import (
         weighted_median_hist,
+    )
+    from etl_pipeline_project_auraverse_spark.queries._util import (
+        parquet_column_bounds,
     )
 
     return weighted_median_hist(
@@ -1990,6 +1994,7 @@ def q_weighted_median_price_by_flag(
         "l_returnflag",
         "l_extendedprice",
         "l_quantity",
+        bounds=parquet_column_bounds(sf_dir, "lineitem", "l_extendedprice"),
     ).orderBy("l_returnflag")
 
 # ---------------------------------------------------------------------------

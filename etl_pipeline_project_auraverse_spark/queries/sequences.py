@@ -26,7 +26,7 @@ from etl_pipeline_project_auraverse_spark.queries._util import (
     parallelize,
     sql_dec_sum,
 )
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # C4-style span dedup: disjoint SPAN_W-word windows, exact-match counts
@@ -953,7 +953,8 @@ def q_retention_day_n(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.max(F.datediff(F.to_date("ts"), F.col("d0"))).alias("max_gap"))
     )
-    days = spark.createDataFrame(
+    days = local_frame(
+        spark,
         [(d,) for d in RETENTION_DAYS], "day_n long"
     )
     return (

@@ -33,7 +33,7 @@ from etl_pipeline_project_auraverse_spark.queries._util import (
     sql_dec_avg,
     two_level_rank,
 )
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 N_QUERY = 5  # brute-force query set: vec_id < 5
 TOP_K = 10
@@ -430,7 +430,8 @@ def gemm_partial_topk(
         # empty query set: Q would build as a 1-D empty ndarray and the
         # (n, 1, d) broadcast inside np_block_* would IndexError — the
         # exact result is simply no rows
-        return emb.sparkSession.createDataFrame(
+        return local_frame(
+            emb.sparkSession,
             [], schema=f"query_id long, cand_id long, {col_name} double"
         )
     qid = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
@@ -1399,7 +1400,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("mmr_score", DoubleType(), False),
         ]
     )
-    return spark.createDataFrame(out_rows, schema).orderBy(
+    return local_frame(spark, out_rows, schema).orderBy(
         "query_id", "mmr_rank"
     )
 
@@ -1774,7 +1775,8 @@ def q_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rk") == 1
     )
     ql = F.broadcast(
-        emb.sparkSession.createDataFrame(
+        local_frame(
+            emb.sparkSession,
             q_labels, "query_id long, q_label int"
         )
     )
@@ -2141,4 +2143,4 @@ def q_kcenter_seed_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("dist_sq", DoubleType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

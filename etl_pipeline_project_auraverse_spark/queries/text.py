@@ -31,7 +31,7 @@ from etl_pipeline_project_auraverse_spark.queries._util import (
     parallelize,
     sql_dec_avg,
 )
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 # DuckDB twins of the functions.text building blocks
 SQL_N_WORDS = r"CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)"
@@ -1433,7 +1433,8 @@ def q_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when no token lands under it (n_tokens = vocab = 0); mirror that
     # by left-joining the checkpoint list so empty prefixes (tiny SF,
     # sparse doc_ids) still produce their zero row.
-    cp_df = spark.createDataFrame(
+    cp_df = local_frame(
+        spark,
         [(c,) for c in _HEAPS_CHECKPOINTS], "max_doc int"
     )
     return (
@@ -1601,7 +1602,7 @@ def q_vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("covered_frac", DoubleType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------

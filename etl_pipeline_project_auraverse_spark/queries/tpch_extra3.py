@@ -41,7 +41,7 @@ from etl_pipeline_project_auraverse_spark.queries._util import (
     dec_sum,
     sql_dec_sum,
 )
-from etl_pipeline_project_auraverse_spark.session import load_table
+from etl_pipeline_project_auraverse_spark.session import load_table, local_frame
 
 REV = "l_extendedprice * (1 - l_discount)"
 
@@ -468,7 +468,7 @@ def q_repeat_purchase_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
         pctl(0.5),
         pctl(0.9),
     )
-    return spark.createDataFrame([row], schema)
+    return local_frame(spark, [row], schema)
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,8 @@ chosen so the same code degrades gracefully to a 1000-executor
 cluster: AQE on (runtime partition coalescing, skew-join splitting,
 dynamic broadcast selection), UTC session time zone (so results are
 comparable against UTC-naive engines like DuckDB), Arrow enabled for
-every pandas-UDF crossing.
+every pandas-UDF crossing. :func:`local_frame` is the one way the
+package turns driver-side rows into a DataFrame.
 """
 
 from __future__ import annotations
@@ -13,7 +14,8 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _create_converter, _make_type_verifier
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -117,6 +119,41 @@ def get_spark(
         )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over driver-side ``rows``, planned as a JVM local
+    relation (``LocalTableScan``).
+
+    ``spark.createDataFrame(<list>, schema)`` ships its rows through a
+    Python RDD, so every action that reads the frame starts Python
+    workers on each of its partitions, even for 3 rows. Here each row
+    is checked and converted as that path does it: the same type
+    verifier (a null in a non-nullable field or a value of the wrong
+    type raises) and the same ``toInternal`` conversion (dates, naive
+    and aware timestamps, decimals mean the same). The converted rows
+    go to Spark as a ``pyarrow.Table``, which the JVM reads into a
+    local relation with no Python worker. ``schema`` is a
+    ``StructType`` or a DDL string.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(convert(row)))
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*internal)) if internal else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

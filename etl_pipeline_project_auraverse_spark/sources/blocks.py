@@ -22,7 +22,8 @@ Re-expresses the reference's extract layer (S1–S14, reference
   each type alone, with ONE inference job for all types, and parsed
   with ``from_json``, so the table stays a native plan over the stored
   records; the typed parts are then combined with
-  ``unionByName(allowMissingColumns=True)`` — the reference's
+  ``unionByName(allowMissingColumns=True)`` on exact (case-sensitive)
+  names — the reference's
   ``pd.json_normalize`` union-of-heterogeneous-keys semantics
   (etl_pipeline.py:158) without a single-node materialize.
 
@@ -47,6 +48,7 @@ from etl_pipeline_project_auraverse_spark.cache import (
     local_checkpoint_tracked,
     register_checkpoint_ids,
 )
+from etl_pipeline_project_auraverse_spark.session import local_frame
 
 # (source_type, pattern, regex group index) — reference etl_pipeline.py:98-154
 BLOCK_PATTERNS: list[tuple[str, str, int]] = [
@@ -382,8 +384,9 @@ def records_to_table(spark: SparkSession, records: DataFrame) -> DataFrame:
     Each source type is typed as :func:`json_table` would type its
     records alone, and the parts are combined in the order the records'
     ``distinct()`` lists their types, with
-    ``unionByName(allowMissingColumns=True)`` — missing keys become
-    nulls, matching ``pd.json_normalize`` (etl_pipeline.py:158).
+    ``unionByName(allowMissingColumns=True)`` on exact names — missing
+    keys become nulls and keys that differ only by case stay apart,
+    matching ``pd.json_normalize`` (etl_pipeline.py:158).
 
     All types share ONE schema-inference job: record ``r`` of the i-th
     type becomes the line ``{"t<i>": r}``, so field ``t<i>`` of the
@@ -403,7 +406,7 @@ def records_to_table(spark: SparkSession, records: DataFrame) -> DataFrame:
     """
     types = [r[0] for r in records.select("source_type").distinct().collect()]
     schema = _wrapped_schema(spark, records, types) if types else T.StructType()
-    out: DataFrame | None = None
+    parts: list[DataFrame] = []
     for i, typ in enumerate(types):
         part = records.filter(_of_type(typ))
         if f"t{i}" in schema.fieldNames():
@@ -417,9 +420,26 @@ def records_to_table(spark: SparkSession, records: DataFrame) -> DataFrame:
         js = js.drop("_corrupt_record")
         if typ is not None:
             js = js.withColumn("_source_type", F.lit(typ))
-        out = js if out is None else out.unionByName(js, allowMissingColumns=True)
-    if out is None:
-        out = spark.createDataFrame(
-            [("No extractable block found", "error")], "_error string, _source_type string"
+        parts.append(js)
+    if not parts:
+        return local_frame(
+            spark,
+            [("No extractable block found", "error")],
+            "_error string, _source_type string",
         )
-    return out
+    return _union_by_exact_name(parts)
+
+
+def _union_by_exact_name(parts: list[DataFrame]) -> DataFrame:
+    """``unionByName(allowMissingColumns=True)`` over ``parts``, left to
+    right, matching column names exactly. Spark matches them ignoring
+    case, which merges the keys ``A`` and ``a`` (or fails on a part
+    that has both); ``pd.json_normalize`` keeps them apart. Every part
+    is renamed by position to one placeholder per exact name, unioned,
+    and renamed back."""
+    names = list(dict.fromkeys(c for p in parts for c in p.columns))
+    slot = {c: f"_c{k}" for k, c in enumerate(names)}
+    out = parts[0].toDF(*[slot[c] for c in parts[0].columns])
+    for p in parts[1:]:
+        out = out.unionByName(p.toDF(*[slot[c] for c in p.columns]), allowMissingColumns=True)
+    return out.toDF(*[names[int(c[2:])] for c in out.columns])

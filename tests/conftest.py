@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import uuid
 from pathlib import Path
 
 import duckdb
@@ -47,6 +48,38 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def _probe_job_id(spark) -> int:
+    """Id of a one-job probe: every job submitted after it has a larger id."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    (job_id,) = sc.statusTracker().getJobIdsForGroup(group)
+    return job_id
+
+
+def run_jobs(spark, run) -> list[str | None]:
+    """Call ``run()``; the descriptions of the jobs it ran, in id order.
+
+    Jobs are counted by id range, as ``perfbench/tracing.JobReader``
+    does: a one-job probe before and after the run brackets its job ids.
+    """
+    first = _probe_job_id(spark)
+    run()
+    last = _probe_job_id(spark)
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    out = []
+    for job_id in range(first + 1, last):
+        desc = jsc.statusStore().job(job_id).description()
+        out.append(desc.get() if desc.isDefined() else None)
+    return out
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:

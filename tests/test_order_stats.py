@@ -13,6 +13,7 @@ from __future__ import annotations
 import math
 import random
 from decimal import Decimal, localcontext
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +23,7 @@ from etl_pipeline_project_auraverse_spark.operators.order_stats import (
     hist_group_percentiles,
     weighted_median_hist,
 )
+from tests.conftest import assert_matches_oracle, run_jobs
 
 PS = [0.0, 0.25, 0.5, 0.9, 0.99, 1.0]
 NAMES = [f"q{i}" for i in range(len(PS))]
@@ -248,6 +250,36 @@ def test_weighted_median_hist_matches_reference(
     rows = _wmed_rows(case)
     df = spark.createDataFrame(rows, "g string, v double, w long")
     assert _wmed(df) == _wmed_reference(rows)
+
+
+@pytest.mark.parametrize("fetch_cap", [None, 8])
+def test_weighted_median_hist_bounds_that_miss_the_data(spark, fetch_cap, monkeypatch):
+    """Bounds make the first pass a histogram; wrong ones (too narrow,
+    or off the data entirely) clamp values into the edge buckets and
+    change nothing in the answer."""
+    if fetch_cap is not None:
+        monkeypatch.setattr(order_stats, "HIST_FETCH_CAP", fetch_cap)
+    df = spark.createDataFrame(_wmed_rows("uniform"), "g string, v double, w long")
+    want = _wmed(df)
+    for bounds in [(0.0, 1.0), (200.0, 300.0), (0.0, 100.0)]:
+        got = weighted_median_hist(df, "g", "v", "w", bounds=bounds).collect()
+        assert {r["g"]: (r[1], r[2]) for r in got} == want, bounds
+
+
+def test_weighted_median_query_runs_in_few_jobs(spark):
+    """q_weighted_median_price_by_flag on the sf0.1 tables: the footer
+    bounds replace the first aggregate with the histogram and the probe
+    table and the output are local relations, so the whole call, output
+    sort included, takes at most 8 jobs (11 with a min/max pass and
+    Python-RDD frames) and still matches its oracle."""
+    from etl_pipeline_project_auraverse_spark.queries import ORACLE, QUERIES, load_all
+
+    load_all()
+    name = "q_weighted_median_price_by_flag"
+    sf = str(Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.1")
+    jobs = run_jobs(spark, lambda: QUERIES[name](spark, sf).collect())
+    assert len(jobs) <= 8, jobs
+    assert_matches_oracle(spark, name, QUERIES[name], ORACLE[name], sf)
 
 
 def test_weighted_median_hist_empty_and_schema(spark):

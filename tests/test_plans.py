@@ -446,7 +446,7 @@ def test_mad_result_is_driver_assembled(q):
     a local table with NO joins or exchanges (the heavy work already
     happened in the map-side histogram/fetch passes)."""
     plan = PI.physical_plan(q("q_mad_outlier_prices"))
-    assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan
+    assert "LocalTableScan" in plan
     assert "Join" not in plan
     assert "Exchange" not in plan
 
@@ -549,7 +549,7 @@ def test_mmr_loop_stays_on_pool_sized_tables(q):
     plan = PI.physical_plan(df)
     assert "CartesianProduct" not in plan
     # driver-assembled result: a bounded local relation, not a join DAG
-    assert "ExistingRDD" in plan or "LocalTableScan" in plan
+    assert "LocalTableScan" in plan
     assert df.count() == N_QUERY * MMR_K
 
 
@@ -629,7 +629,7 @@ def test_kcenter_rounds_are_driver_assembled(q):
     """The k-center result is a bounded driver-assembled trajectory
     (the band-sweep/MMR idiom) — a local relation, not a join DAG."""
     plan = PI.physical_plan(q("q_kcenter_seed_selection"))
-    assert "ExistingRDD" in plan or "LocalTableScan" in plan
+    assert "LocalTableScan" in plan
 
 
 def test_q18_preaggregates_lineitem_below_the_join(q):
@@ -652,7 +652,7 @@ def test_q18_preaggregates_lineitem_below_the_join(q):
 def test_fulfillment_preaggregates_min_ship_below_the_join():
     """Same contract for the fulfillment-latency per-order min — but
     its returned frame is driver-assembled by the exact-percentile
-    operator (ExistingRDD), so the join DAG isn't in the result plan;
+    operator (LocalTableScan), so the join DAG isn't in the result plan;
     lint the wiring instead: lineitem must be grouped to its per-order
     min BEFORE the orders join appears in the source."""
     import inspect as _inspect

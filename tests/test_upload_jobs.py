@@ -2,15 +2,13 @@
 the stage label on each of them, and one-pass typing of the extracted
 records against the per-type JSON-reader inference it replaces.
 
-Jobs are counted by id range, as ``perfbench/tracing.JobReader`` does: a
-one-job probe before and after the run brackets the run's job ids.
+Jobs are counted by id range (``conftest.run_jobs``).
 """
 
 from __future__ import annotations
 
 import json
 import time
-import uuid
 from pathlib import Path
 
 import pytest
@@ -19,37 +17,10 @@ from pyspark.sql import functions as F
 from etl_pipeline_project_auraverse_spark import pipeline as pl
 from etl_pipeline_project_auraverse_spark.pipeline import run_etl_pipeline
 from etl_pipeline_project_auraverse_spark.sources.blocks import json_table, records_to_table
+from tests.conftest import run_jobs
 
 FIXTURES = Path(__file__).parent / "fixtures"
 STAGES = {"etl:extract", "etl:transform", "etl:profile", "etl:write"}
-
-
-def _probe_job_id(spark) -> int:
-    """Id of a one-job probe: every job submitted after it has a larger id."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    (job_id,) = sc.statusTracker().getJobIdsForGroup(group)
-    return job_id
-
-
-def _run_jobs(spark, run) -> list[str | None]:
-    """Call ``run()``; the descriptions of the jobs it ran, in id order."""
-    first = _probe_job_id(spark)
-    run()
-    last = _probe_job_id(spark)
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    out = []
-    for job_id in range(first + 1, last):
-        desc = jsc.statusStore().job(job_id).description()
-        out.append(desc.get() if desc.isDefined() else None)
-    return out
 
 
 def _upload_cfg(tmp_path: Path, source: Path, ftype: str) -> dict:
@@ -80,7 +51,7 @@ def test_upload_runs_in_few_jobs(spark, tmp_path, kind):
     else:
         cfg = _upload_cfg(tmp_path, _json_array_doc(tmp_path), "json")
     reports = []
-    jobs = _run_jobs(
+    jobs = run_jobs(
         spark,
         lambda: reports.append(
             run_etl_pipeline(spark, cfg, schema_dir=str(tmp_path / "s"), timeout_sec=60)
@@ -98,7 +69,7 @@ def test_pipeline_jobs_carry_stage_labels(spark, tmp_path):
     sc.setJobDescription("caller")
     try:
         cfg = _upload_cfg(tmp_path, _json_array_doc(tmp_path, 50), "json")
-        jobs = _run_jobs(
+        jobs = run_jobs(
             spark, lambda: run_etl_pipeline(spark, cfg, schema_dir=str(tmp_path / "s"))
         )
         assert set(jobs) == STAGES, jobs
@@ -137,7 +108,9 @@ def test_pipeline_jobs_carry_stage_labels(spark, tmp_path):
 
 # One-pass typing: records_to_table infers every source type in one job.
 # The reference is the per-type loop it replaced: json_table on each
-# type's records, in the order the records' distinct() lists the types.
+# type's records, in the order the records' distinct() lists the types,
+# unioned with names matched case-sensitively, as pd.json_normalize
+# matches keys.
 TYPING_CASES = {
     "all_empty_objects_type": [("json", '{"a": 1}'), ("yaml", "{}"), ("yaml", "{ }")],
     "all_corrupt_type": [("json", '{"a": 1}'), ("csv", '{"a": 1'), ("csv", "not json")],
@@ -149,6 +122,8 @@ TYPING_CASES = {
     ],
     "empty_and_corrupt_type": [("json", '{"a": 1}'), ("yaml", "{}"), ("yaml", '{"b": ]}')],
     "case_distinct_keys": [(None, '{"A": 1, "a": "x"}'), (None, '{"a": "y"}'), (None, '{"A": 2}')],
+    "case_distinct_keys_in_one_tagged_type": [("json", '{"A": 1, "a": "x"}'), ("yaml", '{"b": 2}')],
+    "case_distinct_keys_across_types": [("json", '{"A": 1}'), ("yaml", '{"a": "x"}')],
     "long_then_struct_one_key": [
         ("json", '{"k": 1, "z": true}'),
         ("json", '{"k": {"x": [1, 2]}}'),
@@ -189,7 +164,23 @@ def test_one_pass_typing_matches_per_type_inference(spark, case):
         [(f"doc{i % 2}", t, j) for i, (t, j) in enumerate(TYPING_CASES[case])],
         "path string, source_type string, record_json string",
     )
-    want = _per_type_reference(spark, records)
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        want = _per_type_reference(spark, records)
+        want_schema, want_rows = want.schema, want.collect()
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
     got = records_to_table(spark, records)
-    assert got.schema == want.schema  # names, types and column order
-    assert got.collect() == want.collect()  # values and row order
+    assert got.schema == want_schema  # names, types and column order
+    assert got.collect() == want_rows  # values and row order
+
+
+def test_upload_with_keys_differing_by_case_names_them(spark, tmp_path):
+    """The table keeps ``A`` and ``a`` apart, but the session resolves
+    column names ignoring case, so the transform refuses them by name
+    instead of failing on an ambiguous reference or a bad cast."""
+    doc = tmp_path / "records.json"
+    doc.write_text(json.dumps([{"A": 1, "a": "x"}, {"A": 2, "a": "y"}]))
+    cfg = _upload_cfg(tmp_path, doc, "json")
+    with pytest.raises(ValueError, match=r"\['A', 'a'\]"):
+        run_etl_pipeline(spark, cfg, schema_dir=str(tmp_path / "s"))
