@@ -43,6 +43,14 @@ INT_RE = r"^[+-]?\d+$"
 FLOAT_RE = r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$"
 DATE_SAMPLE_RE = r"^\d{4}-\d{2}-\d{2}"  # T9 date heuristic, etl_pipeline.py:216
 NUMERIC_LIKE_RE = r"^(\$|₹)?\d+(\.\d+)?%?$"  # T9 numeric heuristic, etl_pipeline.py:218
+# The characters Python's ``str.strip()`` removes (``str.isspace``):
+# Spark's ``trim`` removes only U+0020 by default, so a value like
+# "A\u00a0" would keep its no-break space where the reference drops it.
+_PY_SPACE = "".join(
+    ["\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"]
+    + [chr(c) for c in range(0x2000, 0x200B)]
+    + ["\u2028\u2029\u202f\u205f\u3000"]
+)
 
 # Ordered fuzzy-date battery standing in for dateutil.parse (T7,
 # etl_pipeline.py:203-205). Inputs reach this branch only when they
@@ -102,6 +110,14 @@ DATE_FORMATS = [
 ]
 
 
+def _py_strip(col: Column) -> Column:
+    """``str.strip()`` with no arguments: leading and trailing whitespace
+    by Python's definition, not only the spaces ``F.trim`` removes. A
+    trim character set, not a regex, so a cascade with two ``full``-rule
+    columns stays within the 64 KB generated-method limit."""
+    return F.trim(col, F.lit(_PY_SPACE))
+
+
 def _try_date(s: Column) -> Column:
     """First successful parse from the format battery (tz markers are
     stripped for parsing — the offset is re-attached in rendering —
@@ -135,9 +151,9 @@ def normalize_expr(col: Column) -> Column:
     columns exceeds the JVM's 64 KB method limit, and Spark logs the
     compile error and runs that stage interpreted.
     """
-    s = F.trim(col.cast("string"))
+    s = _py_strip(col.cast("string"))
     sl = F.lower(s)
-    no_cur = F.trim(F.regexp_replace(s, r"[,$₹]", ""))
+    no_cur = _py_strip(F.regexp_replace(s, r"[,$₹]", ""))
     return (
         F.when(col.isNull(), F.lit(None).cast("string"))
         .when(sl.isin(NULL_TOKENS), F.lit(None).cast("string"))  # T1
@@ -246,6 +262,6 @@ def normalize_table(df: DataFrame, array_cols: set[str] | None = None) -> DataFr
             out.append(normalize_expr(qc).alias(r.name))
         else:  # 'lower' (and the sentinel): trim + lower, null → '' (etl_pipeline.py:221)
             out.append(
-                F.coalesce(F.lower(F.trim(qc.cast("string"))), F.lit("")).alias(r.name)
+                F.coalesce(F.lower(_py_strip(qc.cast("string"))), F.lit("")).alias(r.name)
             )
     return df.select(*out)

@@ -158,6 +158,11 @@ NORMALIZE_CASES = [
     ("2026-01-05", "20260105"),
     ("2026-01-05 10:30:00", "2026-01-05T10:30:00"),  # T7 date with time
     ("Hello World", "hello world"),  # T8 lower fallback
+    # the reference strips with str.strip(): every Unicode space and
+    # control whitespace at the ends goes, not only U+0020
+    ("A\u00a0", "a"),
+    ("\t\u3000 Yes\n", "True"),
+    ("\u2009$1,234\u00a0", "1234"),
 ]
 
 
